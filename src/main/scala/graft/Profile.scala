@@ -504,75 +504,6 @@ object Profile {
       spark.streams.removeListener(listener)
     }
 
-    // Same-JVM A/B of the two multi-journal sink forms (r12): the host
-    // drifts ±0.5-1 s/query between processes, so the only trustworthy
-    // comparison alternates both forms inside ONE session. Replicates
-    // q197's pipeline (doc triage → keep/quarantine journals) with a
-    // pluggable foreachBatch body.
-    if (want("sinkab")) {
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.sources.Journal
-      val corpus = Tables.documents(spark, sfDir)
-        .select(col("doc_id").cast("long").as("doc_id"))
-        .select(col("doc_id"), udf { docId: Long =>
-          (docId % 3) match {
-            case 0 => graft.operators.PdfFixtures.pdf(docId)
-            case 1 => graft.operators.DocxFixtures.docx(docId)
-            case _ => s"garbage-$docId-not-a-document".getBytes("UTF-8")
-          }
-        }.apply(col("doc_id")).as("blob"))
-      val stageDir = s"/tmp/graft-sinkab-stage-${java.util.UUID.randomUUID}"
-      corpus.repartition(4).write.parquet(stageDir)
-      def run(tag: String, body: (org.apache.spark.sql.DataFrame, Long, String) => Unit): Double = {
-        val root = s"/tmp/graft-sinkab-${java.util.UUID.randomUUID}"
-        val t0 = System.nanoTime()
-        val src = spark.readStream.schema(corpus.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stageDir)
-        val routed = graft.operators.MediaRouter.route(src, blobCol = "blob")
-          .withColumn("pdf", graft.operators.Pdf.pdfText(col("blob")))
-          .withColumn("dx", graft.operators.OfficeDoc.docx(col("blob")))
-          .withColumn("n_chars",
-            when(col("format") === "pdf", length(col("pdf.text")))
-              .when(col("format") === "docx", length(col("dx.text")))
-              .cast("long"))
-          .withColumn("route",
-            when(col("kind") === "document", lit("keep"))
-              .otherwise(lit("quarantine")))
-          .select(col("route"), to_json(struct(col("doc_id"), col("format"),
-            col("n_chars"))).as("payload"))
-        val q = routed.writeStream
-          .foreachBatch((df: org.apache.spark.sql.DataFrame, b: Long) => body(df, b, root))
-          .option("checkpointLocation", s"$root/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        require(q.awaitTermination(600000), s"sinkab $tag timed out")
-        val n = Seq("docs/keep", "docs/quarantine")
-          .map(j => Journal.read(spark, root, j).count()).sum
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"[profile] sinkab $tag: $dt%.3f s rows=$n")
-        dt
-      }
-      val seqBody = (df: org.apache.spark.sql.DataFrame, b: Long, root: String) => {
-        df.persist()
-        try {
-          Journal.batchSink(root, "docs/keep", codec = "gz")(
-            df.filter(col("route") === "keep").select(col("payload")), b)
-          Journal.batchSink(root, "docs/quarantine", codec = "gz")(
-            df.filter(col("route") === "quarantine").select(col("payload")), b)
-        } finally df.unpersist()
-      }
-      val routedBody = (df: org.apache.spark.sql.DataFrame, b: Long, root: String) =>
-        Journal.batchSinkRouted(root, Seq(
-          "docs/keep" -> (col("route") === "keep"),
-          "docs/quarantine" -> (col("route") === "quarantine")), df, b)
-      val seqT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val rtT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      (1 to 4).foreach { i =>
-        seqT += run(s"seq#$i", seqBody)
-        rtT += run(s"routed#$i", routedBody)
-      }
-      println(f"[profile] sinkab SEQUENTIAL min=${seqT.min}%.3f s  " +
-        f"ROUTED min=${rtT.min}%.3f s  (medians ${seqT.sorted.apply(seqT.size / 2)}%.3f vs ${rtT.sorted.apply(rtT.size / 2)}%.3f)")
-    }
     // q67 decomposition (VERDICT r11 #6): time each stage of the
     // AllPairs prefix join so the "left alone" verdict is a measured
     // one. Stages are cumulative pipelines, each timed min-of-2.
@@ -608,325 +539,6 @@ object Profile {
       t2("full prefixJaccardSelfJoin")(
         SetSimilarity.prefixJaccardSelfJoin(
           Dedup.docShingles(docsDf, $"doc_id", $"text", 3), 0.80).count())
-    }
-
-    // BPE cache-churn A/B (VERDICT r11 #8): per-round re-persist of
-    // the merged corpus vs NO per-round cache — one base cache and a
-    // chain of r BpeMergeOne kernels applied inside each round's
-    // single argmax pass. Same merges by construction (the argmax
-    // stream is identical); the question is whether 2 cache
-    // round-trips per round cost more than re-running ≤10 cheap
-    // native kernels over the cached base. Same-JVM alternating reps.
-    if (want("bpeab")) {
-      import org.apache.spark.sql.graft.ColumnBridge
-      def applyMergeC(syms: org.apache.spark.sql.Column, l: String, r: String) =
-        ColumnBridge.column(graft.functions.BpeMergeOne(
-          ColumnBridge.expression(syms), l, r))
-      def pairsOfC(syms: org.apache.spark.sql.Column) =
-        when(size(syms) >= 2,
-          transform(sequence(lit(1), size(syms) - 1),
-            i => struct(element_at(syms, i).as("l"),
-              element_at(syms, i + 1).as("r"))))
-          .otherwise(array().cast("array<struct<l:string,r:string>>"))
-      val docs = Tables.documents(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism)
-      def chained(rounds: Int): Seq[(Int, String, String, Long)] =
-        graft.operators.IterLoop.tinyReduce(spark, 8) {
-          val base = docs
-            .select($"doc_id".cast("long").as("doc_id"),
-              graft.operators.TextAnalysis.wordTokens($"text").as("syms"))
-            .filter(size($"syms") >= 2)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-          var r = 1
-          var done = false
-          while (r <= rounds && !done) {
-            val syms = merges.foldLeft(col("syms")) { case (c, (_, l, rr, _)) =>
-              applyMergeC(c, l, rr) }
-            val best = base
-              .select(explode(pairsOfC(syms)).as("p"))
-              .groupBy($"p.l".as("l"), $"p.r".as("r"))
-              .agg(count(lit(1)).as("cnt"))
-              .filter($"cnt" >= 2)
-              .orderBy($"cnt".desc, $"l".asc, $"r".asc).limit(1)
-              .as[(String, String, Long)].collect()
-            if (best.isEmpty) done = true
-            else {
-              val (l, rr, cnt) = best(0)
-              merges += ((r, l, rr, cnt)); r += 1
-            }
-          }
-          base.unpersist()
-          merges.toSeq
-        }
-      val reT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val chT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var parity = true
-      (1 to 3).foreach { i =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime()
-        val a = graft.operators.Bpe.trainMerges(docs, $"doc_id", $"text", 10)
-          .collect().map(r0 => (r0.getInt(0), r0.getString(1), r0.getString(2), r0.getLong(3))).toSeq
-        reT += (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t0 = System.nanoTime()
-        val b = chained(10)
-        chT += (System.nanoTime() - t0) / 1e9
-        parity = parity && (a == b)
-        println(f"[profile] bpeab rep$i repersist=${reT.last}%.3f s chained=${chT.last}%.3f s identical=${a == b}")
-      }
-      println(f"[profile] bpeab REPERSIST min=${reT.min}%.3f s  CHAINED min=${chT.min}%.3f s  merges-identical=$parity")
-    }
-
-    // q135 token-cache A/B: cache the raw exploded (doc_id, source, t)
-    // rows (current surprisalBuckets shape) vs pre-aggregating to
-    // (doc_id, source, t, k) occurrence counts in ONE map-side-combined
-    // exchange and caching THAT (smaller cache, same math: df per
-    // token = Σk, n_tok = Σk, sum_bits = Σ k·b). Same-JVM alternating.
-    if (want("tokab")) {
-      val docs = Tables.documents(spark, sfDir)
-      def current(): Long = graft.operators.TextAnalysis
-        .surprisalBuckets(docs, $"doc_id", $"text", $"source").count()
-      def pregg(): Long = {
-        import org.apache.spark.sql.expressions.Window
-        val tokc = docs
-          .select($"doc_id".cast("long").as("doc_id"),
-            $"source".cast("string").as("source"),
-            explode(graft.operators.TextAnalysis.wordTokens($"text")).as("t"))
-          .groupBy($"doc_id", $"source", $"t")
-          .agg(count(lit(1)).as("k"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cnt = tokc.groupBy($"t").agg(sum($"k").as("c"))
-        val tot = cnt.agg(sum($"c").as("total"))
-        val bits = cnt.crossJoin(broadcast(tot))
-          .select($"t", (length(bin(expr("total div c"))) - 1)
-            .cast("long").as("b"))
-        val scored = tokc
-          .join(bits, "t")
-          .groupBy($"doc_id", $"source")
-          .agg(sum($"k").as("n_tok"), sum($"k" * $"b").as("sum_bits"))
-          .withColumn("mean_bits", graft.operators.Curation
-            .floorRound4($"sum_bits".cast("double") / $"n_tok"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        scored.count()
-        tokc.unpersist()
-        val hist = scored.groupBy($"source", $"mean_bits")
-          .agg(count(lit(1)).as("k"))
-        val wCum = Window.partitionBy($"source").orderBy($"mean_bits")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wAll = Window.partitionBy($"source")
-        val cum = hist
-          .withColumn("cum", sum($"k").over(wCum))
-          .withColumn("n", sum($"k").over(wAll))
-        val cuts = cum.groupBy($"source").agg(
-          min(when($"cum" * 3 >= $"n", $"mean_bits")).as("c1"),
-          min(when($"cum" * 3 >= $"n" * 2, $"mean_bits")).as("c2"))
-        val out = scored.join(broadcast(cuts), "source")
-          .select($"doc_id", $"source", $"n_tok", $"sum_bits", $"mean_bits",
-            when($"mean_bits" <= $"c1", "head")
-              .when($"mean_bits" <= $"c2", "middle")
-              .otherwise("tail").as("bucket"))
-        val n = out.count()
-        scored.unpersist()
-        n
-      }
-      val aT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val bT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      (1 to 3).foreach { i =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime(); val na = current()
-        aT += (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t0 = System.nanoTime(); val nb = pregg()
-        bT += (System.nanoTime() - t0) / 1e9
-        println(f"[profile] tokab rep$i current=${aT.last}%.3f s pregg=${bT.last}%.3f s rows=$na/$nb")
-      }
-      println(f"[profile] tokab CURRENT min=${aT.min}%.3f s  PREAGG min=${bT.min}%.3f s")
-    }
-
-    // q71 pagerank A/B: the r11 shape (a deg⋈ranks join per iteration
-    // to form the outflow — inlined below, verbatim) vs the r12
-    // operator, which carries deg inside the ranks table so the
-    // outflow is a pure projection — one fewer |V|⋈|V| join (and its
-    // exchange) per iteration. Same-JVM alternating; bit-identical
-    // rank vectors asserted per rep.
-    if (want("prab")) {
-      import org.apache.spark.storage.StorageLevel
-      val pairs = Tables.lineitem(spark, sfDir)
-        .join(Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
-        .select(($"o_custkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-        .distinct()
-      val edges = pairs.union(pairs.select($"dst".as("src"), $"src".as("dst")))
-      // The pre-r12 ranksFixedPoint body, verbatim.
-      def old(): Array[(Long, Long)] = {
-        val e = edges.selectExpr("cast(src as long) as src",
-          "cast(dst as long) as dst").persist(StorageLevel.MEMORY_AND_DISK)
-        val deg = e.groupBy($"src").agg(count(lit(1)).as("deg"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val n = deg.count()
-        val r0 = graft.operators.PageRank.Scale / n
-        val base = 15 * r0 / 100
-        var ranks = deg.select($"src".as("node"), lit(r0).as("r"))
-        for (_ <- 1 to 3) {
-          val outflow = deg.join(ranks, deg("src") === ranks("node"))
-            .selectExpr("src", "r div deg as c")
-          ranks = e.join(outflow, "src")
-            .groupBy($"dst").agg(sum($"c").as("s"))
-            .join(deg.select($"src".as("dst")), Seq("dst"), "right_outer")
-            .selectExpr("dst as node",
-              s"$base + (85 * coalesce(s, 0)) div 100 as r")
-        }
-        val out = ranks.select($"node".cast("long"), $"r".cast("long"))
-          .as[(Long, Long)].collect().sortBy(_._1)
-        e.unpersist(); deg.unpersist()
-        out
-      }
-      def fused(): Array[(Long, Long)] =
-        graft.operators.PageRank.ranksFixedPoint(edges, 3)
-          .select($"node".cast("long"), $"r".cast("long")).as[(Long, Long)]
-          .collect().sortBy(_._1)
-      val aT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val bT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var parity = true
-      (1 to 3).foreach { i =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime(); val ra = old()
-        aT += (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t0 = System.nanoTime(); val rb = fused()
-        bT += (System.nanoTime() - t0) / 1e9
-        parity &&= ra.sameElements(rb)
-        println(f"[profile] prab rep$i old=${aT.last}%.3f s fused=${bT.last}%.3f s identical=${ra.sameElements(rb)}")
-      }
-      println(f"[profile] prab OLD min=${aT.min}%.3f s  FUSED min=${bT.min}%.3f s  parity=$parity")
-    }
-
-    // q105 BFS A/B: the r11 shape (per-hop distinct over the frontier
-    // expansion + anti-join against the lazy union of all prior
-    // frontiers — inlined below, verbatim) vs the r12 fused operator
-    // (one min(dist) aggregate per hop). Same-JVM alternating;
-    // bit-identical (node, dist) vectors asserted per rep. Uses q105's
-    // exact inputs (co-purchase edges, 3 smallest vertices, 3 hops).
-    if (want("bfsab")) {
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.storage.StorageLevel
-      // The pre-r12 Bfs.distances body, verbatim.
-      def oldDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-        val e = edges.selectExpr("cast(src as long) as src", "cast(dst as long) as dst")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val frontier0 = seeds.selectExpr("cast(node as long) as node").distinct()
-          .withColumn("dist", lit(0)).persist(StorageLevel.MEMORY_AND_DISK)
-        val frontiers = scala.collection.mutable.ArrayBuffer(frontier0)
-        def visited = frontiers.reduce(_ union _)
-        var frontier = frontier0
-        var hop = 0
-        var drained = false
-        while (hop < maxHops && !drained) {
-          hop += 1
-          val next = frontier.select(col("node").as("fnode"))
-            .join(e.as("e"), col("fnode") === col("e.src"))
-            .select(col("e.dst").as("node")).distinct()
-            .join(visited.select(col("node").as("vnode")),
-              col("node") === col("vnode"), "left_anti")
-            .withColumn("dist", lit(hop))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          drained = next.count() == 0
-          frontiers += next
-          frontier = next
-        }
-        e.unpersist()
-        visited
-      }
-      def run(body: (DataFrame, DataFrame, Int) => DataFrame): Array[(Long, Int)] = {
-        val edges = graft.queries.ScaleOps.coPurchaseEdges(spark, sfDir)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val seeds = edges.select($"src".as("node")).distinct()
-          .orderBy($"node".asc).limit(3)
-        val out = body(edges, seeds, 3)
-          .select($"node".cast("long"), $"dist".cast("int")).as[(Long, Int)]
-          .collect().sortBy(_._1)
-        edges.unpersist()
-        out
-      }
-      val aT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val bT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var parity = true
-      (1 to 3).foreach { i =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime(); val ra = run(oldDistances)
-        aT += (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t0 = System.nanoTime(); val rb = run(graft.operators.Bfs.distances)
-        bT += (System.nanoTime() - t0) / 1e9
-        parity &&= ra.sameElements(rb)
-        println(f"[profile] bfsab rep$i old=${aT.last}%.3f s fused=${bT.last}%.3f s identical=${ra.sameElements(rb)} n=${ra.length}")
-      }
-      println(f"[profile] bfsab OLD min=${aT.min}%.3f s  FUSED min=${bT.min}%.3f s  parity=$parity")
-    }
-
-    // q102 BM25 A/B: the pre-r12 bm25TopK (TWO tokenize passes — the
-    // stats branch and the postings branch each re-ran wordTokens over
-    // the corpus; inlined below, verbatim) vs the r12 single-pass slim
-    // projection. Same-JVM alternating; row-identical output asserted
-    // per rep (q102's exact arguments).
-    if (want("bm25ab")) {
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.storage.StorageLevel
-      val terms = Seq("stream", "window", "merge")
-      // The pre-r12 bm25 + bm25TopK bodies, verbatim.
-      def oldTopK(docs: DataFrame, k: Int): DataFrame = {
-        val k1 = 1.2; val b = 0.75
-        val toks = docs.select(col("doc_id").cast("long").as("doc_id"),
-          graft.operators.TextAnalysis.wordTokens(col("text")).as("w"))
-        val stats = toks.select(size(col("w")).cast("long").as("dl"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        val tf = toks.select(col("doc_id"), size(col("w")).cast("long").as("dl"),
-            explode(col("w")).as("term"))
-          .filter(col("term").isin(terms.distinct: _*))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val df = tf.groupBy(col("term")).agg(count(lit(1)).as("dfc"))
-        val avgdl = col("sum_dl").cast("double") / col("n_docs")
-        val idf = (col("n_docs") - col("dfc") + lit(0.5)) / (col("dfc") + lit(0.5))
-        val tfn = (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl))
-        val scored = tf.join(broadcast(df), "term")
-          .crossJoin(broadcast(stats))
-          .select(col("doc_id"),
-            graft.operators.Curation.floorRound(idf * tfn, 6).as("contrib"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_terms_hit"),
-            sum(col("contrib").cast("decimal(28,6)")).cast("double").as("score"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val tk = graft.functions.TopKAgg.topK(k)
-        val top = scored.agg(tk(col("score"), col("doc_id")).as("top"))
-          .select(posexplode(col("top")))
-          .select(col("col.id").as("doc_id"), (col("pos") + 1).cast("int").as("rank"))
-        scored.join(broadcast(top), "doc_id")
-          .select(col("doc_id"), col("n_terms_hit"), col("score"), col("rank"))
-      }
-      def rows(df: DataFrame): Array[(Long, Long, Double, Int)] =
-        df.select(col("doc_id").cast("long"), col("n_terms_hit").cast("long"),
-            col("score"), col("rank").cast("int"))
-          .as[(Long, Long, Double, Int)].collect().sortBy(_._1)
-      val docs = Tables.documents(spark, sfDir)
-      val aT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val bT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var parity = true
-      (1 to 3).foreach { i =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime(); val ra = rows(oldTopK(docs, 10))
-        aT += (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t0 = System.nanoTime()
-        val rb = rows(graft.operators.Retrieval.bm25TopK(
-          docs, $"doc_id", $"text", terms, k = 10))
-        bT += (System.nanoTime() - t0) / 1e9
-        parity &&= ra.sameElements(rb)
-        println(f"[profile] bm25ab rep$i old=${aT.last}%.3f s slim=${bT.last}%.3f s identical=${ra.sameElements(rb)} n=${ra.length}")
-      }
-      println(f"[profile] bm25ab OLD min=${aT.min}%.3f s  SLIM min=${bT.min}%.3f s  parity=$parity")
     }
     spark.stop()
   }

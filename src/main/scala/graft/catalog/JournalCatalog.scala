@@ -62,8 +62,8 @@ final case class JournalSpec(
       Left(s"flush interval may not be negative: $flushIntervalMs")
     // Reject at upsert what the append path rejects at write time:
     // a 0 fragment target otherwise passes the catalog only to throw
-    // Journal.stage's require on the first append (or roll a fragment
-    // per record through the DSv2 defaults).
+    // the spool pass's require on the first append (or the DSv2
+    // write's, through the table defaults).
     else if (fragmentTargetLength <= 0L)
       Left(s"fragment target length must be positive: $fragmentTargetLength")
     else if (replication <= 0)

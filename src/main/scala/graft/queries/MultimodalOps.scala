@@ -40,9 +40,9 @@ object MultimodalOps {
     * cluster, h) — clusters of 4 (doc_id div 4) rendered as REAL JPEG
     * variants of a cluster-keyed block pattern, every third cluster's
     * member 3 a far singleton; dHash over actual decoded rasters.
-    * ONE definition shared by the gate query and
-    * [[graft.tools.NeardupProbe]], so the scale probe certifies
-    * exactly the distribution the gate runs.
+    * ONE definition for the gate query and any scale measurement of
+    * it, so a probe at larger scale sees exactly the distribution the
+    * gate runs.
     */
   def neardupHashes(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -864,7 +864,8 @@ object MultimodalOps {
     // certifying decode → dHash → block join end-to-end, uncapped.
     // Scale: the Manku block-combination kernel (blocks=6 → 20 tables
     // of ~32-bit keys) keeps CANDIDATES corpus-linear on this
-    // realistic distribution — measured by NeardupProbe; single-band
+    // realistic distribution — 1.26/1.33/1.94 candidates per doc over
+    // neardupHashes at sf0.1/sf1/sf10 (PERF.md); single-band
     // keys (q181's gate kernel) measured 84× candidate growth at 10×
     // docs here, which is why the scale path keys on combinations.
     "q188_image_neardup_real" -> { (s, d) =>

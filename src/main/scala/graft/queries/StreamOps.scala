@@ -49,7 +49,7 @@ object StreamOps {
       val root = s"/tmp/graft-journals/rc-${d.replace('/', '_')}"
       deleteRecursively(Paths.get(root))
       // Parallel ordered spool: range partitions are index-ordered and
-      // Journal.stage assigns offsets by partition index, so N sorted
+      // the journal commit assigns offsets by partition index, so N sorted
       // range partitions produce N fragments whose concatenated byte
       // order IS the global (ts, event_id) order — same journal order
       // as a single sorted spool, at N× the compression throughput,
@@ -64,7 +64,7 @@ object StreamOps {
         .select(to_json(struct($"event_id", $"uuid_hex".as("uuid"))).as("payload"))
       // Native DSv2 write path (the Append RPC as a sink): executors
       // spool, the commit assigns offsets in partition-index order —
-      // the same ordered-spool contract as Journal.append.
+      // the same spool kernel and commit as Journal.append.
       stamped.write.format("journal")
         .option("root", root).option("journal", "events").option("codec", "gz")
         .mode("append").save()

@@ -5,8 +5,10 @@ import java.security.MessageDigest
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.v2.AppendFlowControl
 
 /** Journal = append-only byte log that is simultaneously a stream and a
   * set of immutable content-addressed files (the reference's core thesis,
@@ -103,8 +105,8 @@ object Journal {
     * would land fragments NO read ever returns AND no head derivation
     * ever sees — invisible dead bytes whose offsets the next append
     * reuses. An absolute or dot-leading segment would escape or hide
-    * under the store root. Both write paths (batch stage and the DSv2
-    * writer) call this on each distinct postfix value.
+    * under the store root. [[SpoolSet]] calls this on each distinct
+    * postfix value.
     */
   private[graft] def validatePostfix(p: String): Unit = {
     if (p.isEmpty) return
@@ -366,36 +368,36 @@ object Journal {
     runs.result().map { run =>
       val begin = run.head._2
       val end = run.last._1.end
-      val tmp = new HPath(new HPath(root),
-        s".compact-${java.util.UUID.randomUUID}.tmp")
-      val digest = MessageDigest.getInstance("SHA-1")
-      val out = new BufferedOutputStream(wrapOutput(codec, fs.create(tmp, true)), 1 << 16)
-      run.foreach { case (f, readFrom) =>
-        val in = new BufferedInputStream(
-          wrapInput(f.codec, fs.open(new HPath(f.path))), 1 << 16)
-        try {
-          var skip = readFrom - f.begin
-          while (skip > 0) {
-            val s = in.skip(skip)
-            require(s > 0, s"cannot seek to $readFrom in ${f.name}")
-            skip -= s
-          }
-          var remaining = f.end - readFrom
-          val buf = new Array[Byte](1 << 16)
-          while (remaining > 0) {
-            val n = in.read(buf, 0, math.min(buf.length, remaining).toInt)
-            require(n > 0, s"truncated fragment ${f.name}")
-            digest.update(buf, 0, n)
-            out.write(buf, 0, n)
-            remaining -= n
-          }
-        } finally in.close()
-      }
-      out.close()
-      val sha = digest.digest().map("%02x".format(_)).mkString
-      val frag = Fragment(journal, begin, end, sha, codec,
-        new HPath(dir, f"$begin%016x-$end%016x-$sha.$codec").toString)
-      commitFragment(frag, tmp.toString, conf)
+      // A failed copy (a truncated or unreadable source) must not leave
+      // the open tmp behind: nothing else ever reclaims `.compact-*`.
+      val sp = new FragmentSpool(fs, new HPath(root,
+        s".compact-${java.util.UUID.randomUUID}.tmp"), codec)
+      val frag = try {
+        run.foreach { case (f, readFrom) =>
+          val in = new BufferedInputStream(
+            wrapInput(f.codec, fs.open(new HPath(f.path))), 1 << 16)
+          try {
+            var skip = readFrom - f.begin
+            while (skip > 0) {
+              val s = in.skip(skip)
+              require(s > 0, s"cannot seek to $readFrom in ${f.name}")
+              skip -= s
+            }
+            var remaining = f.end - readFrom
+            val buf = new Array[Byte](1 << 16)
+            while (remaining > 0) {
+              val n = in.read(buf, 0, math.min(buf.length, remaining).toInt)
+              require(n > 0, s"truncated fragment ${f.name}")
+              sp.writeRaw(buf, 0, n)
+              remaining -= n
+            }
+          } finally in.close()
+        }
+        val sha = sp.finish()
+        commitFragment(Fragment(journal, begin, end, sha, codec,
+          new HPath(dir, f"$begin%016x-$end%016x-$sha.$codec").toString),
+          sp.tmp.toString, conf)
+      } catch { case e: Throwable => sp.abort(); throw e }
       if (deleteSources) run.foreach { case (f, _) =>
         if (f.path != frag.path) fs.delete(new HPath(f.path), false)
       }
@@ -612,6 +614,14 @@ object Journal {
       (a, b) => if (a >= b) a else b)
 
   // ---- write path (S5-S7) --------------------------------------------
+  //
+  // Every journal write is the same two halves: executors frame records
+  // into spools ([[SpoolSet]] over [[FragmentSpool]]), and the driver
+  // assigns offsets from the head and renames the spools into the index
+  // ([[commitSpooled]]), inside the batch-marker exactly-once protocol
+  // when the write is a micro-batch. `append`, `appendFramed`,
+  // `batchSink(Routed)` and the DSv2 `journal` sink differ only in how
+  // rows reach the spools.
 
   /** Append a DataFrame's `payload` string column as framed fragments.
     * One spool per Spark partition (and per path postfix when
@@ -650,153 +660,152 @@ object Journal {
       maxFragmentBytes: Long = Long.MaxValue,
       offsetRoots: Seq[String] = Nil,
       maxAppendRate: Long = 0L,
-      flushIntervalMs: Long = 0L): Seq[Fragment] = {
-    val conf = hadoopConf
-    val staged = stage(df, root, journal, codec, payloadCol, postfixCol,
-      maxFragmentBytes, offsetRoots, maxAppendRate, flushIntervalMs)
-    // A rename that throws mid-sequence leaves a valid committed prefix
-    // (content-addressed, contiguous from the old head) — but the tmp
-    // files of the remaining fragments would be orphaned with no
-    // reclamation path. Delete them by name before rethrowing.
-    var done = 0
-    val out = try staged.map { case (frag, tmp) =>
-      val f = commitFragment(frag, tmp, conf); done += 1; f
-    } catch { case e: Throwable =>
-      val fs = new HPath(root).getFileSystem(conf)
-      staged.drop(done).foreach { case (_, tmp) =>
-        try fs.delete(new HPath(tmp), false) catch { case _: Exception => () }
-      }
-      throw e
-    }
-    raiseHeadFloor(root, journal, out.iterator.map(_.end).foldLeft(0L)(math.max))
-    graft.metrics.GraftMetrics.appendCommitted(journal, out.size,
-      out.iterator.map(f => f.end - f.begin).sum,
-      out.iterator.map(_.end).foldLeft(0L)(math.max))
-    out
-  }
+      flushIntervalMs: Long = 0L): Seq[Fragment] =
+    commitSpooled(root, journal,
+      spoolFrame(df, root, Vector(journal), col(payloadCol), lit(0),
+        postfixCol.fold(lit(""))(col(_).cast("string")), codec,
+        maxFragmentBytes, flushIntervalMs, maxAppendRate),
+      codec, offsetRoots)
 
-  /** Spool-and-plan half of `append`: spools each (partition, postfix)
-    * group executor-side, assigns contiguous offsets from the journal
-    * head, and returns the planned fragments paired with their spool tmp
-    * files — WITHOUT renaming anything into the fragment index. Callers
-    * commit each fragment with `commitFragment`; `batchSink` writes its
-    * manifest between the two so the whole batch is crash-atomic.
+  /** [[append]]'s spool pass and offset plan WITHOUT the rename: the
+    * planned fragments paired with their spool tmp files, nothing in the
+    * index yet. The crash-recovery specs commit from here by hand to
+    * stage the windows [[commitSpooled]]'s manifest protocol recovers.
     */
   private[graft] def stage(df: DataFrame, root: String, journal: String,
-      codec: String = "gz", payloadCol: String = "payload",
-      postfixCol: Option[String] = None,
-      maxFragmentBytes: Long = Long.MaxValue,
-      offsetRoots: Seq[String] = Nil,
-      maxAppendRate: Long = 0L,
-      flushIntervalMs: Long = 0L): Seq[(Fragment, String)] = {
-    require(maxFragmentBytes > 0, s"maxFragmentBytes must be positive")
-    require(flushIntervalMs >= 0, s"flushIntervalMs may not be negative")
+      codec: String = "gz"): Seq[(Fragment, String)] = {
+    val dir = new HPath(root, journal)
+    dir.getFileSystem(hadoopConf).mkdirs(dir)
+    planFragments(root, journal, codec, head(root, journal),
+      spoolFrame(df, root, Vector(journal), col("payload"), lit(0), lit(""), codec))
+  }
+
+  /** Idempotent micro-batch sink for `writeStream.foreachBatch`: a
+    * batch marker prevents duplicate appends on retry (the engine's
+    * analog of ACK-intent fencing, SURVEY §1.1 Register row). The
+    * one-route case of [[batchSinkRouted]]; the crash-atomic two-phase
+    * commit is [[commitSpooled]]'s.
+    */
+  def batchSink(root: String, journal: String, codec: String = "gz")(
+      df: DataFrame, batchId: Long): Unit =
+    batchSinkRouted(root, Seq(journal -> lit(true)), df, batchId, codec)
+
+  /** One-pass multi-journal micro-batch sink (r12, guide §1.2 step 1):
+    * spool EVERY route's fragments in a SINGLE distributed pass over
+    * the batch — each row goes to the first route whose predicate
+    * matches — then commit each journal independently under its own
+    * `.pending` manifest and `.committed` marker ([[commitSpooled]]).
+    *
+    * Why: the foreachBatch fan-out shape (one triaged frame → N
+    * per-kind journals) previously persisted the batch and ran N
+    * sequential sink jobs, each re-filtering the cache — N job
+    * launches and N cache passes to partition one small frame, and at
+    * a 4-batch replay that job-launch floor WAS the queries' cost
+    * (measured: addBatch 0.40-0.54 s/batch, of which the engine's own
+    * checkpoint I/O is only ~0.13 s). Here the batch is read once (the
+    * triage projection runs once per record — no persist needed at
+    * all) and every route's spool is written in that same pass; only
+    * the per-journal driver-side commits remain. One job per batch is
+    * the minimum passes this fan-out can do, at any scale.
+    *
+    * Identical bytes per journal: a route's spools receive exactly the
+    * rows a filter on its predicate keeps, in the same (partition, row)
+    * order, and offsets are assigned per journal from its own head in
+    * partition order. Routes are expected DISJOINT: a row matching
+    * several predicates lands only in the first (no caller routes
+    * overlapping predicates). Rows matching no route are dropped,
+    * exactly as no filter would keep them.
+    *
+    * A retried batch re-runs the spool pass, then per journal either
+    * drops the fresh spools (marker present — content-addressed
+    * duplicates of what the index already holds), reconciles a crashed
+    * `.pending`, or commits.
+    */
+  def batchSinkRouted(root: String,
+      routes: Seq[(String, org.apache.spark.sql.Column)],
+      df: DataFrame, batchId: Long, codec: String = "gz",
+      payloadCol: String = "payload"): Unit = {
+    require(routes.nonEmpty, "batchSinkRouted: no routes")
+    require(routes.map(_._1).distinct.size == routes.size,
+      s"batchSinkRouted: duplicate journal in ${routes.map(_._1).mkString(", ")}")
+    // First matching predicate wins; unmatched rows drop. A NULL
+    // predicate result is no-match, same as a filter.
+    val routeIdx = routes.zipWithIndex
+      .foldRight(lit(null).cast("int")) { case (((_, pred), i), acc) =>
+        when(pred, lit(i)).otherwise(acc)
+      }
+    val journals = routes.map(_._1).toVector
+    // NO Filter on the route: a Filter referencing the route column
+    // gets pushed below the batch's triage projection and re-evaluates
+    // the (expensive) triage expressions once in the Filter and again
+    // in the Project — guide §4.4's duplicated-UDF trap, measured here
+    // as 2-3× the per-batch cost on the guard/extract gates. Unmatched
+    // rows are dropped inside the spool pass instead, so the triage
+    // runs exactly once per row in the single Project below.
+    val spooled = spoolFrame(df, root, journals,
+      col(payloadCol).cast("string"), routeIdx, lit(""), codec)
+    // A failed commit leaves the later journals' spools unrenamed:
+    // reclaim them by name before rethrowing.
+    val conf = hadoopConf
+    try journals.indices.foreach { r =>
+      commitSpooled(root, journals(r), spooled.filter(_.route == r), codec,
+        batch = Some(("", batchId)), conf = conf)
+    } catch { case e: Throwable =>
+      dropSpools(new HPath(root).getFileSystem(conf), spooled)
+      throw e
+    }
+  }
+
+  /** The spool pass of every DataFrame write: ONE job that frames each
+    * row's `payload` (decoded to a String, written as its UTF-8 bytes)
+    * into the spool of journal `journals(route)` under path `postfix`.
+    * A row whose route is NULL is dropped.
+    */
+  private def spoolFrame(df: DataFrame, root: String,
+      journals: IndexedSeq[String], payload: Column, route: Column,
+      postfix: Column, codec: String, maxFragmentBytes: Long = Long.MaxValue,
+      flushIntervalMs: Long = 0L, maxAppendRate: Long = 0L): Seq[Spooled] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val conf = hadoopConf
-    val dir = new HPath(root, journal)
-    dir.getFileSystem(conf).mkdirs(dir)
-    val hc = new HadoopConf(conf)
-
-    // Executor side: spool each (partition, postfix) group to temp
-    // files, rolling at maxFragmentBytes; report
-    // (partitionId, postfix, rollSeq, uncompressedLength, sha1, tmp).
-    val rows = postfixCol match {
-      case Some(pc) => df.select(col(payloadCol), col(pc).cast("string")).as[(String, String)]
-      case None     => df.select(col(payloadCol)).as[String].map(p => (p, ""))
-    }
-    val journalTag = journal.replace('/', '_')
+    val rows = df.select(payload, route, postfix)
+      .as[(String, Option[Int], String)].rdd
+      .collect { case (p, Some(r), pf) =>
+        (if (p == null) null else p.getBytes("UTF-8"), r, pf) }
     // maxAppendRate is the journal's AGGREGATE ceiling; resolve each
     // executor JVM's share on the driver (local[*]: the full rate) —
     // see AppendFlowControl.perJvmShare for the contract.
-    val rateShare =
-      graft.sources.v2.AppendFlowControl.perJvmShare(
-        spark.sparkContext, maxAppendRate)
-    val spooled = rows.rdd
-      .mapPartitionsWithIndex { (idx, it) =>
-        val fs = new HPath(root).getFileSystem(hc.value)
-        def fresh(seq: Int) =
-          new FragmentSpool(fs, root, s"$journalTag-$idx", codec, seq, journal)
-        def finished(postfix: String, sp: FragmentSpool) = {
-          val len = sp.len // read before finish() closes the stream
-          (idx, postfix, sp.seq, len, sp.finish(), sp.tmp.toString)
-        }
-        val spools = scala.collection.mutable.LinkedHashMap.empty[String, FragmentSpool]
-        val doneV = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, Int, Long, String, String)]
-        // Per-journal JVM token bucket (max_append_rate,
-        // protocol.proto:293-298); see AppendFlowControl for the
-        // cluster-aggregate semantics.
-        val flow = if (rateShare > 0)
-          graft.sources.v2.AppendFlowControl.bucket(root, journal, rateShare)
-        else null
-        try {
-          it.foreach { case (line, postfix) =>
-            // Same validation as the DSv2 writer: a null payload would
-            // string-concat into a literal "null" record (silent
-            // corruption), a null postfix would NPE the driver's spool
-            // sort — both deserve a clear error at the source.
-            require(line != null, "journal append: null payload")
-            require(postfix != null, "journal append: null postfix value")
-            if (!spools.contains(postfix)) validatePostfix(postfix)
-            var sp = spools.getOrElseUpdate(postfix, fresh(0))
-            if (sp.shouldRoll(maxFragmentBytes, flushIntervalMs)) {
-              doneV += finished(postfix, sp)
-              sp = fresh(sp.seq + 1)
-              spools(postfix) = sp
-            }
-            val bytes = line.getBytes("UTF-8")
-            if (flow != null) flow.acquire(bytes.length + 1L)
-            sp.write(bytes)
-          }
-          spools.iterator.foreach { case (postfix, sp) =>
-            doneV += finished(postfix, sp) }
-        } catch { case e: Throwable =>
-          // A mid-partition failure (null-payload require, IO error)
-          // must not strand open streams or orphan .spool-*.tmp files:
-          // Spark retries the task with FRESH UUID-named spools, so
-          // nothing reclaims this attempt's — the DSv2 writer's
-          // abort() discipline, applied to the batch path. Cleanup is
-          // best-effort; the original error is the one that matters.
-          spools.valuesIterator.foreach { sp =>
-            try sp.abortClose() catch { case _: Exception => () }
-            try fs.delete(sp.tmp, false) catch { case _: Exception => () }
-          }
-          doneV.foreach { case (_, _, _, _, _, tmp) =>
-            try fs.delete(new HPath(tmp), false)
-            catch { case _: Exception => () }
-          }
-          throw e
-        }
-        doneV.iterator
-      }
-    val spooledArr =
-      try spooled.collect()
-      catch { case e: Throwable => sweepSpools(root, journalTag); throw e }
-    val spooledSorted = spooledArr.sortBy(s => (s._1, s._2, s._3))
+    spoolPass(rows, root, journals, codec, fixedFraming = false,
+      maxFragmentBytes, flushIntervalMs,
+      AppendFlowControl.perJvmShare(spark.sparkContext, maxAppendRate))
+  }
 
-    // Driver side: prefix-sum offsets from the journal head in
-    // (partition, postfix, rollSeq) order; the caller commits via
-    // rename (content-addressed names make retries idempotent).
-    // The head spans offsetRoots too: a multi-store journal (spec with
-    // several stores, mid-migration) must not restart offsets at the
-    // active store's local head — spans held in sibling stores would
-    // collide and the cover set would silently drop one of them.
-    // Past the collect the spool tmp names are known on the driver: a
-    // failure in the head listing (or anything else before the caller
-    // commits) deletes them directly instead of orphaning them.
-    try planFragments(root, journal, codec,
-      head((offsetRoots :+ root).distinct, journal),
-      spooledSorted.map { case (_, postfix, _, len, sha, tmp) =>
-        (postfix, len, sha, tmp) }.toSeq)
+  /** Run one [[SpoolSet]] per partition of `rows` — (payload, route,
+    * postfix) — and collect every closed spool to the driver.
+    */
+  private def spoolPass(rows: RDD[(Array[Byte], Int, String)], root: String,
+      journals: IndexedSeq[String], codec: String, fixedFraming: Boolean,
+      maxFragmentBytes: Long = Long.MaxValue, flushIntervalMs: Long = 0L,
+      rateShare: Long = 0L): Seq[Spooled] = {
+    require(maxFragmentBytes > 0, s"maxFragmentBytes must be positive")
+    require(flushIntervalMs >= 0, s"flushIntervalMs may not be negative")
+    val hc = new HadoopConf(hadoopConf)
+    val job = rows.mapPartitionsWithIndex { (idx, it) =>
+      val spools = new SpoolSet(new HPath(root).getFileSystem(hc.value), root,
+        journals, idx, idx.toString, codec, fixedFraming, maxFragmentBytes,
+        flushIntervalMs, rateShare)
+      try {
+        it.foreach { case (payload, r, postfix) => spools.write(r, postfix, payload) }
+        spools.finish().iterator
+      } catch { case e: Throwable => spools.abort(); throw e }
+    }
+    try job.collect().toSeq
     catch { case e: Throwable =>
-      val fs = new HPath(root).getFileSystem(conf)
-      spooledArr.foreach { case (_, _, _, _, _, tmp) =>
-        try fs.delete(new HPath(tmp), false) catch { case _: Exception => () }
-      }
+      journals.foreach(j => sweepSpools(root, spoolTag(j)))
       throw e
     }
   }
+
+  private def spoolTag(journal: String): String = journal.replace('/', '_')
 
   /** Best-effort reclamation of every spool tmp of one journal under
     * `root`, after a failed distributed spool JOB: succeeded tasks'
@@ -806,7 +815,8 @@ object Journal {
     * has one appender at a time (the flow-control model): the match
     * is exactly the failed append's files. The regex (not the glob
     * alone) keeps a sibling journal whose tag extends this one with a
-    * '-' (journal "a/b-c" vs "a/b") out of the sweep.
+    * '-' (journal "a/b-c" vs "a/b") out of the sweep, and never matches
+    * a DSv2 task's `<part>-<task>` spool names.
     */
   private def sweepSpools(root: String, journalTag: String): Unit =
     try {
@@ -820,15 +830,87 @@ object Journal {
         .foreach(st => fs.delete(st.getPath, false))
     } catch { case _: Exception => () }
 
-  /** Executor-side spool shared by the batch append ([[stage]]) and the
-    * DSv2 writer — ONE definition of the record framing
-    * ('\n'-terminated), SHA-1 accounting, codec wrapping, and the
-    * size/time roll policy, so the two write paths cannot drift.
+  /** One closed spool as its task reports it to the driver: the
+    * (partition, route, postfix, roll) position that orders offsets, the
+    * framed length, the content SHA-1 and the tmp path.
     */
-  private[graft] final class FragmentSpool(fs: FileSystem, root: String,
-      tag: String, codec: String, val seq: Int, journal: String = "") {
-    val tmp = new HPath(new HPath(root),
-      s".spool-$tag-${java.util.UUID.randomUUID}.tmp")
+  private[graft] final case class Spooled(part: Int, route: Int,
+      postfix: String, seq: Int, len: Long, sha1: String, tmp: String)
+
+  /** One task's spools, keyed by (route, postfix): the executor half of
+    * every journal write, in the RDD spool pass and the DSv2 DataWriter
+    * alike. It validates each new postfix, rolls a spool at
+    * `maxFragmentBytes` or `flushIntervalMs`, throttles each journal
+    * through its per-JVM token bucket (max_append_rate,
+    * protocol.proto:293-298; see AppendFlowControl), and names spools
+    * `.spool-<journal tag>-<nameTag>-<uuid>.tmp` under `root`.
+    */
+  private[graft] final class SpoolSet(fs: FileSystem, root: String,
+      journals: IndexedSeq[String], part: Int, nameTag: String,
+      codec: String, fixedFraming: Boolean = false,
+      maxFragmentBytes: Long = Long.MaxValue, flushIntervalMs: Long = 0L,
+      rateShare: Long = 0L) {
+    private val open =
+      scala.collection.mutable.LinkedHashMap.empty[(Int, String), FragmentSpool]
+    private val closed = scala.collection.mutable.ArrayBuffer.empty[Spooled]
+    private val flows = journals.map(j =>
+      if (rateShare > 0) AppendFlowControl.bucket(root, j, rateShare) else null)
+
+    private def spool(route: Int, seq: Int) = new FragmentSpool(fs,
+      new HPath(root, s".spool-${spoolTag(journals(route))}-$nameTag-" +
+        s"${java.util.UUID.randomUUID}.tmp"),
+      codec, seq, journals(route), fixedFraming)
+
+    private def close(key: (Int, String), sp: FragmentSpool): Unit =
+      closed += Spooled(part, key._1, key._2, sp.seq, sp.len, sp.finish(),
+        sp.tmp.toString)
+
+    def write(route: Int, postfix: String, payload: Array[Byte]): Unit = {
+      // A null payload would frame as a literal "null" record (silent
+      // corruption), a null postfix would NPE the driver's offset sort —
+      // both deserve a clear error at the source.
+      require(payload != null, "journal append: null payload")
+      require(postfix != null, "journal append: null postfix value")
+      val key = (route, postfix)
+      var sp = open.getOrElse(key, null)
+      if (sp == null) {
+        validatePostfix(postfix)
+        sp = spool(route, 0)
+        open(key) = sp
+      } else if (sp.shouldRoll(maxFragmentBytes, flushIntervalMs)) {
+        close(key, sp)
+        sp = spool(route, sp.seq + 1)
+        open(key) = sp
+      }
+      if (flows(route) != null) flows(route).acquire(sp.framedLength(payload.length))
+      sp.write(payload)
+    }
+
+    /** Close every open spool; returns all of this task's spools. */
+    def finish(): Seq[Spooled] = {
+      open.foreach { case (key, sp) => close(key, sp) }
+      open.clear()
+      closed.toSeq
+    }
+
+    /** Close and delete every open or closed spool of a failed task —
+      * best-effort and PER SPOOL: abort typically runs on an already
+      * failing executor, where one close may throw, and a retry spools
+      * to FRESH UUID names, so a tmp skipped here is orphaned forever.
+      */
+    def abort(): Unit = {
+      open.valuesIterator.foreach(_.abort())
+      dropSpools(fs, closed.toSeq)
+    }
+  }
+
+  /** One spool file: ONE definition of the record framing ('\n'-terminated,
+    * or the 8-byte header of [[FixedFramingMagic]] framing), SHA-1
+    * accounting, codec wrapping, and the size/time roll test.
+    */
+  private[graft] final class FragmentSpool(fs: FileSystem, val tmp: HPath,
+      codec: String, val seq: Int = 0, journal: String = "",
+      fixedFraming: Boolean = false) {
     private val digest = MessageDigest.getInstance("SHA-1")
     // Spool-time per-JVM record counter (task retries recount — the
     // per-process Prometheus semantics; commit-accurate totals are the
@@ -841,44 +923,62 @@ object Journal {
     private val bornNanos = System.nanoTime()
     private val out = new BufferedOutputStream(
       wrapOutput(codec, fs.create(tmp, true)), 1 << 16)
+    private val header =
+      if (fixedFraming) FixedFramingMagic ++ new Array[Byte](4) else null
     /** Roll BEFORE the next write: size bound reached, or open past the
       * flush interval (fragment.flush_interval, protocol.proto:229-246). */
     def shouldRoll(maxFragmentBytes: Long, flushIntervalMs: Long): Boolean =
       len >= maxFragmentBytes || (flushIntervalMs > 0 && len > 0 &&
         System.nanoTime() - bornNanos >= flushIntervalMs * 1000000L)
-    /** Append one framed record: payload bytes + '\n'. */
+    /** Framed size of an `n`-byte payload. */
+    def framedLength(n: Int): Long = if (fixedFraming) 8L + n else n + 1L
+    /** Append one framed record: payload + '\n', or the fixed header
+      * (magic + little-endian length) + payload. */
     def write(payload: Array[Byte]): Unit = {
-      digest.update(payload); digest.update('\n'.toByte)
-      out.write(payload); out.write('\n')
-      len += payload.length + 1
+      val n = payload.length
+      if (fixedFraming) {
+        header(4) = n.toByte; header(5) = (n >>> 8).toByte
+        header(6) = (n >>> 16).toByte; header(7) = (n >>> 24).toByte
+        writeRaw(header, 0, 8); writeRaw(payload, 0, n)
+      } else {
+        writeRaw(payload, 0, n); writeRaw(Newline, 0, 1)
+      }
       if (recordsCtr != null) recordsCtr.inc()
+    }
+    /** Append already-framed bytes verbatim. */
+    def writeRaw(b: Array[Byte], off: Int, n: Int): Unit = {
+      digest.update(b, off, n); out.write(b, off, n); len += n
     }
     /** Close the stream and return the content SHA-1 hex. */
     def finish(): String = {
       out.close()
       digest.digest().map("%02x".format(_)).mkString
     }
-    def abortClose(): Unit = out.close()
+    /** Best-effort close and delete of an abandoned spool. */
+    def abort(): Unit = {
+      try out.close() catch { case _: Exception => () }
+      try fs.delete(tmp, false) catch { case _: Exception => () }
+    }
   }
 
+  private val Newline = Array('\n'.toByte)
+
   /** ONE definition of head-derived offset assignment + content-addressed
-    * fragment naming, shared by [[stage]], [[commitSpooledEpoch]], and the
-    * DSv2 batch commit — the naming/offset contract is the journal's core
-    * invariant, and divergent copies would mint fragments the other
-    * paths' listings misparse. `spooled` carries
-    * (pathPostfix, uncompressedLength, sha1, spoolPath) in commit order.
+    * fragment naming: offsets run contiguously from `begin0` over the
+    * spools in (partition, postfix, roll) order — the naming/offset
+    * contract is the journal's core invariant. Returns each planned
+    * fragment paired with its spool path.
     */
   private[graft] def planFragments(root: String, journal: String,
-      codec: String, begin0: Long,
-      spooled: Seq[(String, Long, String, String)]): Seq[(Fragment, String)] = {
+      codec: String, begin0: Long, spooled: Seq[Spooled]): Seq[(Fragment, String)] = {
     val dir = new HPath(root, journal)
     var begin = begin0
-    spooled.map { case (postfix, len, sha, tmpPath) =>
-      val sub = if (postfix.isEmpty) dir else new HPath(dir, postfix)
-      val frag = Fragment(journal, begin, begin + len, sha, codec,
-        new HPath(sub, f"$begin%016x-${begin + len}%016x-$sha.$codec").toString)
+    spooled.sortBy(s => (s.part, s.postfix, s.seq)).map { s =>
+      val sub = if (s.postfix.isEmpty) dir else new HPath(dir, s.postfix)
+      val frag = Fragment(journal, begin, begin + s.len, s.sha1, codec,
+        new HPath(sub, f"$begin%016x-${begin + s.len}%016x-${s.sha1}.$codec").toString)
       begin = frag.end
-      (frag, tmpPath)
+      (frag, s.tmp)
     }
   }
 
@@ -901,212 +1001,74 @@ object Journal {
     frag
   }
 
-  /** Idempotent micro-batch sink for `writeStream.foreachBatch`: a
-    * batch manifest prevents duplicate appends on retry (the engine's
-    * analog of ACK-intent fencing, SURVEY §1.1 Register row).
+  /** Best-effort delete of spools that will never be renamed. */
+  private[graft] def dropSpools(fs: FileSystem, spooled: Seq[Spooled]): Unit =
+    spooled.foreach(s =>
+      try fs.delete(new HPath(s.tmp), false) catch { case _: Exception => () })
+
+  /** The driver half of every journal write — ONE commit protocol:
+    *  1. plan offsets ([[planFragments]]) from the head over
+    *     `offsetRoots` and `root`: a multi-store journal (mid-migration)
+    *     must not restart offsets at the active store's own head, or
+    *     spans held in sibling stores would collide;
+    *  2. rename each spool into the index at `root` ([[commitFragment]]);
+    *  3. raise this JVM's head floor;
+    *  4. record the `appendCommitted` metrics.
     *
-    * Crash-atomic two-phase commit: stage spools first, then write a
-    * `.pending` manifest naming every planned fragment AND its spool
-    * file, then rename fragments into the index, then finalize by
-    * atomically renaming `.pending` → `.committed`. A retry after a
-    * crash in ANY window reconciles from the pending manifest — it
-    * completes outstanding renames when the spools survive, or rolls
-    * back the batch's partial fragments and re-appends — so the batch's
-    * records land exactly once. (Assumes the foreachBatch contract:
-    * one writer per (journal, query), serial batch retries.)
+    * With a batch marker `(prefix, id)` the same steps run inside the
+    * exactly-once protocol of streaming sinks (one writer per (journal,
+    * query), serial retries). A `.batch-<prefix><id>.committed` marker
+    * means a replay: its fresh spools are content-addressed duplicates
+    * and are dropped. An id below the swept horizon is refused
+    * ([[assertNotSwept]]). A crashed attempt's `.pending` manifest is
+    * reconciled first. Otherwise a `.pending` manifest naming every
+    * planned fragment and its spool is written BEFORE the first rename,
+    * and renamed to `.committed` after the last, so a retry after a
+    * crash in any window lands the batch exactly once.
+    *
+    * Any failure deletes every spool not yet renamed before rethrowing
+    * (renamed ones are gone, and deleting a missing path is a no-op): no
+    * retry could reclaim them by name. Returns the committed fragments,
+    * none for a replay.
     */
-  def batchSink(root: String, journal: String, codec: String = "gz")(
-      df: DataFrame, batchId: Long): Unit = {
-    val conf = hadoopConf
+  private[graft] def commitSpooled(root: String, journal: String,
+      spooled: Seq[Spooled], codec: String, offsetRoots: Seq[String] = Nil,
+      batch: Option[(String, Long)] = None,
+      conf: Configuration = hadoopConf): Seq[Fragment] = {
     val dir = new HPath(root, journal)
     val fs = dir.getFileSystem(conf)
-    val committed = new HPath(dir, s".batch-$batchId.committed")
-    if (fs.exists(committed)) return
-    assertNotSwept(fs, dir, "", batchId)
-    fs.mkdirs(dir)
-
-    val pending = new HPath(dir, s".batch-$batchId.pending")
-    if (fs.exists(pending) && reconcilePending(fs, pending, committed, journal, codec, conf))
-      return
-
-    val staged = stage(df, root, journal, codec)
-    commitManifested(fs, pending, committed, staged, conf)
-    raiseHeadFloor(root, journal,
-      staged.iterator.map(_._1.end).foldLeft(0L)(math.max))
-    sweepMarkers(fs, dir, "", batchId)
-  }
-
-  /** One-pass multi-journal micro-batch sink (r12, guide §1.2 step 1):
-    * spool EVERY route's fragments in a SINGLE distributed pass over
-    * the batch — each row goes to the first route whose predicate
-    * matches — then commit each journal independently with
-    * [[batchSink]]'s exact two-phase manifest + `.committed`
-    * idempotence-marker protocol.
-    *
-    * Why: the foreachBatch fan-out shape (one triaged frame → N
-    * per-kind journals) previously persisted the batch and ran N
-    * sequential batchSink jobs, each re-filtering the cache — N job
-    * launches and N cache passes to partition one small frame, and at
-    * a 4-batch replay that job-launch floor WAS the queries' cost
-    * (measured: addBatch 0.40-0.54 s/batch, of which the engine's own
-    * checkpoint I/O is only ~0.13 s). Here the batch is read once (the
-    * triage projection runs once per record — no persist needed at
-    * all) and every route's spool is written in that same pass; only
-    * the per-journal driver-side commits remain. One job per batch is
-    * the minimum passes this fan-out can do, at any scale.
-    *
-    * Identical bytes per journal: a route's spool receives exactly the
-    * rows its filter form kept, in the same (partition, row) order,
-    * and offsets are assigned per journal from its own head in
-    * partition order — fragment names, content, and SHAs match the
-    * sequential batchSink calls bit-for-bit (JournalRoutedSpec pins
-    * this). Routes are expected DISJOINT: a row matching several
-    * predicates lands only in the first (sequential filters would
-    * duplicate it into both journals; no caller routes overlapping
-    * predicates). Rows matching no route are dropped, exactly as no
-    * filter would keep them.
-    *
-    * Exactly-once per (journal, batch) is unchanged: each journal
-    * keeps its own `.pending` manifest and `.committed` marker. A
-    * retried batch re-runs the spool pass, then per journal either
-    * drops the fresh spools (marker present — content-addressed
-    * duplicates of what the index already holds), reconciles a
-    * crashed `.pending`, or commits — exactly the serial calls'
-    * recovery matrix.
-    */
-  def batchSinkRouted(root: String,
-      routes: Seq[(String, org.apache.spark.sql.Column)],
-      df: DataFrame, batchId: Long, codec: String = "gz",
-      payloadCol: String = "payload"): Unit = {
-    require(routes.nonEmpty, "batchSinkRouted: no routes")
-    require(routes.map(_._1).distinct.size == routes.size,
-      s"batchSinkRouted: duplicate journal in ${routes.map(_._1).mkString(", ")}")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val conf = hadoopConf
-    new HPath(root).getFileSystem(conf).mkdirs(new HPath(root))
-    val hc = new HadoopConf(conf)
-    // First matching predicate wins; unmatched rows drop. A NULL
-    // predicate result is no-match, same as a filter.
-    val routeIdx = routes.zipWithIndex
-      .foldRight(lit(null).cast("int")) { case (((_, pred), i), acc) =>
-        when(pred, lit(i)).otherwise(acc)
-      }
-    val journals = routes.map(_._1).toArray
-    val tagOf = journals.map(_.replace('/', '_'))
-    // NO Filter on the route: a Filter referencing the route column
-    // gets pushed below the batch's triage projection and re-evaluates
-    // the (expensive) triage expressions once in the Filter and again
-    // in the Project — guide §4.4's duplicated-UDF trap, measured here
-    // as 2-3× the per-batch cost on the guard/extract gates. Unmatched
-    // rows are dropped inside the spool closure instead, so the triage
-    // runs exactly once per row in the single Project below.
-    val rows = df.select(col(payloadCol).cast("string"), routeIdx.as("__route"))
-      .as[(String, Option[Int])]
-    // Executor side: one FragmentSpool per route per partition — the
-    // same framing/SHA/roll kernel and the same `.spool-<tag>-<part>-
-    // <uuid>.tmp` naming as [[stage]] (sweepSpools reclaims either),
-    // with stage's abort discipline on mid-partition failure.
-    val spooled = rows.rdd.mapPartitionsWithIndex { (idx, it) =>
-      val fs = new HPath(root).getFileSystem(hc.value)
-      val spools = new Array[FragmentSpool](journals.length)
-      val done = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, Int, Int, Long, String, String)]
-      try {
-        it.foreach {
-          case (line, Some(r)) =>
-            // Same validation as stage(): only ROUTED rows need a
-            // payload (a dropped row was never written before either).
-            require(line != null, "journal append: null payload")
-            var sp = spools(r)
-            if (sp == null) {
-              sp = new FragmentSpool(fs, root, s"${tagOf(r)}-$idx", codec,
-                seq = 0, journal = journals(r))
-              spools(r) = sp
-            }
-            sp.write(line.getBytes("UTF-8"))
-          case (_, None) => () // no route matched: drop, as no filter kept it
-        }
-        var r = 0
-        while (r < spools.length) {
-          val sp = spools(r)
-          if (sp != null) {
-            val len = sp.len // read before finish() closes the stream
-            done += ((idx, r, sp.seq, len, sp.finish(), sp.tmp.toString))
-          }
-          r += 1
-        }
-      } catch { case e: Throwable =>
-        spools.foreach { sp =>
-          if (sp != null) {
-            try sp.abortClose() catch { case _: Exception => () }
-            try fs.delete(sp.tmp, false) catch { case _: Exception => () }
-          }
-        }
-        done.foreach { case (_, _, _, _, _, tmp) =>
-          try fs.delete(new HPath(tmp), false) catch { case _: Exception => () }
-        }
-        throw e
-      }
-      done.iterator
-    }
-    val spooledArr =
-      try spooled.collect()
-      catch { case e: Throwable =>
-        tagOf.foreach(t => sweepSpools(root, t))
-        throw e
-      }
+    def marker(state: String) =
+      batch.map { case (prefix, id) => new HPath(dir, s".batch-$prefix$id.$state") }
+    val committed = marker("committed")
+    val pending = marker("pending")
     try {
-      val byRoute = spooledArr.groupBy(_._2)
-      journals.zipWithIndex.foreach { case (journal, r) =>
-        val mine = byRoute.getOrElse(r, Array.empty[(Int, Int, Int, Long, String, String)])
-          .sortBy(s => (s._1, s._3))
-          .map { case (_, _, _, len, sha, tmp) => ("", len, sha, tmp) }
-          .toSeq
-        commitBatchSpooled(root, journal, batchId, mine, codec, conf)
+      if (committed.exists(fs.exists)) { dropSpools(fs, spooled); Nil }
+      else {
+        batch.foreach { case (prefix, id) => assertNotSwept(fs, dir, prefix, id) }
+        fs.mkdirs(dir)
+        val staged =
+          if (pending.exists(p => fs.exists(p) &&
+              reconcilePending(fs, p, journal, codec, conf))) {
+            dropSpools(fs, spooled) // the crashed attempt landed in full
+            Nil
+          } else {
+            val planned = planFragments(root, journal, codec,
+              head((offsetRoots :+ root).distinct, journal), spooled)
+            pending.foreach(writeStringAtomic(fs, _,
+              planned.map { case (f, tmp) => s"${f.path}\t$tmp" }.mkString("\n")))
+            planned.foreach { case (f, tmp) => commitFragment(f, tmp, conf) }
+            planned
+          }
+        for (p <- pending; c <- committed)
+          if (!fs.rename(p, c)) throw new java.io.IOException(s"rename $p -> $c failed")
+        val end = staged.iterator.map(_._1.end).foldLeft(0L)(math.max)
+        raiseHeadFloor(root, journal, end)
+        graft.metrics.GraftMetrics.appendCommitted(journal, staged.size,
+          staged.iterator.map { case (f, _) => f.end - f.begin }.sum, end)
+        batch.foreach { case (prefix, id) => sweepMarkers(fs, dir, prefix, id) }
+        staged.map(_._1)
       }
-    } catch { case e: Throwable =>
-      // Spools not yet renamed into an index are orphans — reclaim by
-      // name before rethrowing (consumed ones are already gone; a
-      // delete of a missing path is a no-op).
-      val fs = new HPath(root).getFileSystem(conf)
-      spooledArr.foreach { case (_, _, _, _, _, tmp) =>
-        try fs.delete(new HPath(tmp), false) catch { case _: Exception => () }
-      }
-      throw e
-    }
-  }
-
-  /** [[batchSink]]'s commit protocol over an ALREADY-SPOOLED batch
-    * (the one-pass routed sink): same `.committed` early-return, same
-    * swept-horizon fence, same `.pending` reconcile, same
-    * manifest-then-rename commit and marker sweep — sequenced over
-    * spools that exist before the first marker check, so an
-    * already-committed retry deletes them instead of re-staging.
-    */
-  private def commitBatchSpooled(root: String, journal: String,
-      batchId: Long, spooled: Seq[(String, Long, String, String)],
-      codec: String, conf: Configuration): Unit = {
-    val dir = new HPath(root, journal)
-    val fs = dir.getFileSystem(conf)
-    def dropSpools(): Unit = spooled.foreach { case (_, _, _, t) =>
-      try fs.delete(new HPath(t), false) catch { case _: Exception => () }
-    }
-    val committed = new HPath(dir, s".batch-$batchId.committed")
-    if (fs.exists(committed)) { dropSpools(); return }
-    try assertNotSwept(fs, dir, "", batchId)
-    catch { case e: Throwable => dropSpools(); throw e }
-    fs.mkdirs(dir)
-    val pending = new HPath(dir, s".batch-$batchId.pending")
-    if (fs.exists(pending) &&
-        reconcilePending(fs, pending, committed, journal, codec, conf)) {
-      dropSpools(); return
-    }
-    val staged = planFragments(root, journal, codec, head(root, journal), spooled)
-    commitManifested(fs, pending, committed, staged, conf)
-    raiseHeadFloor(root, journal,
-      staged.iterator.map(_._1.end).foldLeft(0L)(math.max))
-    sweepMarkers(fs, dir, "", batchId)
+    } catch { case e: Throwable => dropSpools(fs, spooled); throw e }
   }
 
   /** How many epochs of `.batch-*.committed` idempotence markers stay
@@ -1232,14 +1194,14 @@ object Journal {
       "(then restart this writer: the horizon is cached in-process).")
   }
 
-  /** Reconcile a crashed attempt's `.pending` manifest. Each line is
-    * "fragPath\tspoolPath": finish renames where the spool survived;
-    * when every fragment is then present, finalize the committed marker
-    * and return true (batch fully landed). Otherwise roll the partial
-    * batch back — delete its fragments and the manifest, restoring the
-    * head — and return false so the caller re-appends.
+  /** Resolve a crashed attempt's `.pending` manifest. Each line is
+    * "fragPath\tspoolPath": finish the renames whose spool survived, and
+    * return true when every fragment is then present (the batch landed;
+    * the caller finalizes its marker). Otherwise roll the partial batch
+    * back — delete its fragments and the manifest, restoring the head —
+    * and return false so the caller re-appends.
     */
-  private def reconcilePending(fs: FileSystem, pending: HPath, committed: HPath,
+  private def reconcilePending(fs: FileSystem, pending: HPath,
       journal: String, codec: String, conf: Configuration): Boolean = {
     val entries = readString(fs, pending).split('\n')
       .filter(_.nonEmpty).map(_.split('\t')).toVector
@@ -1247,90 +1209,11 @@ object Journal {
       if (!fs.exists(new HPath(fragPath)) && fs.exists(new HPath(tmpPath)))
         commitFragment(Fragment(journal, 0, 0, "", codec, fragPath), tmpPath, conf)
     }
-    if (entries.forall(e => fs.exists(new HPath(e(0))))) {
-      if (!fs.rename(pending, committed))
-        throw new java.io.IOException(s"rename $pending -> $committed failed")
-      true
-    } else {
+    entries.forall(e => fs.exists(new HPath(e(0)))) || {
       entries.foreach(e => fs.delete(new HPath(e(0)), false))
       fs.delete(pending, false)
       false
     }
-  }
-
-  /** Manifest-then-rename commit of already-staged fragments: write the
-    * pending manifest atomically BEFORE any fragment rename — the
-    * manifest must never name fragments it doesn't fully describe —
-    * then rename every spool into the index and finalize the marker.
-    */
-  private def commitManifested(fs: FileSystem, pending: HPath, committed: HPath,
-      staged: Seq[(Fragment, String)], conf: Configuration): Unit = {
-    writeStringAtomic(fs, pending,
-      staged.map { case (f, tmp) => s"${f.path}\t$tmp" }.mkString("\n"))
-    staged.foreach { case (frag, tmp) => commitFragment(frag, tmp, conf) }
-    if (!fs.rename(pending, committed))
-      throw new java.io.IOException(s"rename $pending -> $committed failed")
-    if (staged.nonEmpty)
-      graft.metrics.GraftMetrics.appendCommitted(staged.head._1.journal,
-        staged.size, staged.iterator.map { case (f, _) => f.end - f.begin }.sum,
-        staged.iterator.map(_._1.end).max)
-  }
-
-  /** Exactly-once commit of executor-spooled fragments for one epoch of
-    * a DSv2 streaming write (the `journal` sink's analog of
-    * [[batchSink]], sharing its manifest fencing). `spooled` carries one
-    * (pathPostfix, uncompressedLength, sha1, spoolPath) per non-empty
-    * (partition, postfix) group, in (partition, postfix) order; offsets
-    * are assigned here, at commit time, so a rolled-back predecessor
-    * re-derives the head correctly. Returns committed fragments (empty
-    * when the epoch was already committed — duplicates of a retried
-    * epoch are dropped and their spools deleted).
-    */
-  private[graft] def commitSpooledEpoch(root: String, journal: String,
-      epochTag: String, spooled: Seq[(String, Long, String, String)],
-      codec: String, offsetRoots: Seq[String] = Nil): Seq[Fragment] = {
-    val conf = hadoopConf
-    val dir = new HPath(root, journal)
-    val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val committed = new HPath(dir, s".batch-$epochTag.committed")
-    val pending = new HPath(dir, s".batch-$epochTag.pending")
-    def dropSpools(): Unit =
-      spooled.foreach { case (_, _, _, t) => fs.delete(new HPath(t), false) }
-
-    if (fs.exists(committed)) { dropSpools(); return Nil }
-    if (fs.exists(pending) && reconcilePending(fs, pending, committed, journal, codec, conf)) {
-      dropSpools(); return Nil
-    }
-    // Same rewind fence as batchSink: an epoch below this query's swept
-    // horizon cannot be proven un-committed.
-    locally {
-      val cut0 = epochTag.lastIndexOf('-')
-      if (cut0 >= 0)
-        try assertNotSwept(fs, dir, epochTag.substring(0, cut0 + 1),
-          java.lang.Long.parseLong(epochTag.substring(cut0 + 1)))
-        catch {
-          case _: NumberFormatException => ()
-          // The fence refuses the epoch permanently — reclaim its
-          // executor-spooled .spool-*.tmp files before propagating, as
-          // append/stage do on their failure seams.
-          case e: IllegalStateException => dropSpools(); throw e
-        }
-    }
-    val staged = planFragments(root, journal, codec,
-      head((offsetRoots :+ root).distinct, journal), spooled)
-    commitManifested(fs, pending, committed, staged, conf)
-    raiseHeadFloor(root, journal,
-      staged.iterator.map(_._1.end).foldLeft(0L)(math.max))
-    // Epoch tags are "<queryId>-<epochId>": sweep THIS query's aged
-    // markers (the per-query prefix keeps other writers' tags safe).
-    val cut = epochTag.lastIndexOf('-')
-    if (cut >= 0) {
-      try sweepMarkers(fs, dir, epochTag.substring(0, cut + 1),
-        java.lang.Long.parseLong(epochTag.substring(cut + 1)))
-      catch { case _: NumberFormatException => () }
-    }
-    staged.map(_._1)
   }
 
   // ---- fixed binary framing (§1.2 application/x-protobuf-fixed) ------
@@ -1351,63 +1234,9 @@ object Journal {
       codec: String = "gz", payloadCol: String = "payload"): Seq[Fragment] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val conf = hadoopConf
-    val dir = new HPath(root, journal)
-    dir.getFileSystem(conf).mkdirs(dir)
-    val hc = new HadoopConf(conf)
-    val journalTag = journal.replace('/', '_')
-    val spooled = df.select(col(payloadCol)).as[Array[Byte]].rdd
-      .mapPartitionsWithIndex { (idx, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val fs = new HPath(root).getFileSystem(hc.value)
-          val tmp = new HPath(new HPath(root),
-            s".spool-$journalTag-$idx-${java.util.UUID.randomUUID}.tmp")
-          val digest = MessageDigest.getInstance("SHA-1")
-          var len = 0L
-          val out = new BufferedOutputStream(
-            wrapOutput(codec, fs.create(tmp, true)), 1 << 16)
-          val header = new Array[Byte](8)
-          FixedFramingMagic.copyToArray(header)
-          try {
-            it.foreach { payload =>
-              val n = payload.length
-              header(4) = n.toByte; header(5) = (n >>> 8).toByte
-              header(6) = (n >>> 16).toByte; header(7) = (n >>> 24).toByte
-              digest.update(header); digest.update(payload)
-              out.write(header); out.write(payload)
-              len += 8L + n
-            }
-            out.close()
-          } catch { case e: Throwable =>
-            // Mirror stage()'s failure discipline: retries open FRESH
-            // UUID-named tmps, so this attempt's must not outlive it.
-            try out.close() catch { case _: Exception => () }
-            try fs.delete(tmp, false) catch { case _: Exception => () }
-            throw e
-          }
-          val sha = digest.digest().map("%02x".format(_)).mkString
-          Iterator((idx, len, sha, tmp.toString))
-        }
-      }
-    val spooledArr =
-      try spooled.collect()
-      catch { case e: Throwable => sweepSpools(root, journalTag); throw e }
-    val spooledSorted = spooledArr.sortBy(_._1)
-
-    var begin = head(root, journal)
-    val out = spooledSorted.map { case (_, len, sha, tmpPath) =>
-      val frag = Fragment(journal, begin, begin + len, sha, codec,
-        new HPath(dir, f"$begin%016x-${begin + len}%016x-$sha.$codec").toString)
-      commitFragment(frag, tmpPath, conf)
-      begin = frag.end
-      frag
-    }.toSeq
-    raiseHeadFloor(root, journal, out.iterator.map(_.end).foldLeft(0L)(math.max))
-    graft.metrics.GraftMetrics.appendCommitted(journal, out.size,
-      out.iterator.map(f => f.end - f.begin).sum,
-      out.iterator.map(_.end).foldLeft(0L)(math.max))
-    out
+    val rows = df.select(col(payloadCol)).as[Array[Byte]].rdd.map(p => (p, 0, ""))
+    commitSpooled(root, journal,
+      spoolPass(rows, root, Vector(journal), codec, fixedFraming = true), codec)
   }
 
   /** Read fixed-framed binary envelopes with exact byte spans. */

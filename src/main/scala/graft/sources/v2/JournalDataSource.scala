@@ -60,11 +60,13 @@ import graft.sources.Journal.{Fragment, HadoopConf}
   * the byte range [start, end) via fragment slices — exact, replayable
   * offsets, so a checkpointed query resumes mid-journal.
   *
-  * Writes are the Append RPC re-expressed (protocol.proto:484-616):
-  * executors spool framed payloads (S6), the driver assigns contiguous
-  * offsets at commit and renames spools into the index (S5/S7).
-  * Streaming epochs are fenced by the same `.batch-*` manifests as
-  * [[Journal.batchSink]], so a retried epoch lands exactly once.
+  * Writes are the Append RPC re-expressed (protocol.proto:484-616) on
+  * the one journal write kernel every write path shares: executors
+  * spool framed payloads through [[Journal.SpoolSet]] (S6), and
+  * [[Journal.commitSpooled]] assigns contiguous offsets and renames the
+  * spools into the index (S5/S7). A streaming epoch commits under its
+  * (queryId, epochId) batch marker, so a retried epoch lands exactly
+  * once.
   */
 class JournalDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "journal"

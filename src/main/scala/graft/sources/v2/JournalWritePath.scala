@@ -6,20 +6,29 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import graft.sources.Journal
-import graft.sources.Journal.{Fragment, HadoopConf}
+import graft.sources.Journal.HadoopConf
+
+/** Table-level write defaults (a catalog table's JournalSpec fields);
+  * per-write options override them. Keeps CREATE/ALTER TABLE
+  * properties meaningful on the SQL write path, where no write
+  * options are passed.
+  */
+final case class JournalWriteDefaults(
+  maxFragmentBytes: Long = Long.MaxValue,
+  maxAppendRate: Long = 0L,
+  flushIntervalMs: Long = 0L)
 
 /** DSv2 write path for the `journal` format (S5: the Append RPC,
-  * protocol.proto:484-616, re-expressed in Spark's commit protocol).
-  *
-  * Executors spool framed payloads per (partition, postfix) with an
-  * incremental SHA1 (the reference's Spool, broker/fragment/spool.go:
-  * 26-50); the driver assigns contiguous offsets at commit time in
-  * (partition, postfix) order and renames spools into the fragment
+  * protocol.proto:484-616, re-expressed in Spark's commit protocol) on
+  * the journal write kernel every write path shares: each task spools
+  * framed payloads through one [[Journal.SpoolSet]] (the reference's
+  * Spool, broker/fragment/spool.go:26-50), and the driver commits with
+  * [[Journal.commitSpooled]] — offsets from the multi-store head in
+  * (partition, postfix, roll) order, then the rename into the fragment
   * index. Spark's commit coordinator (on by default) ensures exactly
   * one task attempt per partition commits; aborted attempts delete
-  * their own spools. Streaming epochs share [[Journal.batchSink]]'s
-  * `.batch-*` manifest fencing keyed by (queryId, epochId), so a
-  * retried epoch lands exactly once.
+  * their own spools. A streaming epoch commits under the batch marker
+  * (queryId, epochId), so a retried epoch lands exactly once.
   *
   * Write options: `codec` (fragment codec, default table codec);
   * `postfixCol` (string column routed to Hive-style `key=value` path
@@ -33,16 +42,6 @@ import graft.sources.Journal.{Fragment, HadoopConf}
   * a per-JVM token bucket, see [[AppendFlowControl]] for the
   * cluster-aggregate semantics).
   */
-/** Table-level write defaults (a catalog table's JournalSpec fields);
-  * per-write options override them. Keeps CREATE/ALTER TABLE
-  * properties meaningful on the SQL write path, where no write
-  * options are passed.
-  */
-final case class JournalWriteDefaults(
-  maxFragmentBytes: Long = Long.MaxValue,
-  maxAppendRate: Long = 0L,
-  flushIntervalMs: Long = 0L)
-
 class JournalWrite(roots: Seq[String], journal: String, tableCodec: String,
     info: LogicalWriteInfo,
     defaults: JournalWriteDefaults = JournalWriteDefaults()) extends Write {
@@ -57,7 +56,7 @@ class JournalWrite(roots: Seq[String], journal: String, tableCodec: String,
   private val maxFragmentBytes: Long = {
     val v = Option(info.options.get("maxFragmentBytes")).map(_.toLong)
       .getOrElse(defaults.maxFragmentBytes)
-    // Parity with Journal.stage's require: 0 would roll an empty spool
+    // Parity with the spool pass's require: 0 would roll an empty spool
     // on EVERY write — one fragment (and one commit rename) per record.
     require(v > 0, s"maxFragmentBytes must be positive, got $v")
     v
@@ -99,102 +98,59 @@ class JournalWrite(roots: Seq[String], journal: String, tableCodec: String,
     }.getOrElse(-1)
 
   private def factory = new JournalWriterFactory(
-    root, journal.replace('/', '_'), codec, payloadIdx, postfixIdx,
-    maxFragmentBytes, new HadoopConf(Journal.hadoopConf),
-    journal,
+    root, journal, codec, payloadIdx, postfixIdx, maxFragmentBytes,
+    new HadoopConf(Journal.hadoopConf),
     // maxAppendRate is the journal's AGGREGATE ceiling; each executor
     // JVM gets its share (see AppendFlowControl.perJvmShare).
     AppendFlowControl.perJvmShare(
       org.apache.spark.sql.SparkSession.active.sparkContext, maxAppendRate),
     flushIntervalMs)
 
+  private def spooled(messages: Array[WriterCommitMessage]): Seq[Journal.Spooled] =
+    messages.toSeq.flatMap {
+      case s: SpoolCommit => s.spools
+      case _ => Nil // a failed task's slot
+    }
+
+  private def dropSpooled(messages: Array[WriterCommitMessage]): Unit =
+    Journal.dropSpools(new HPath(root).getFileSystem(Journal.hadoopConf),
+      spooled(messages))
+
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
       factory
     override def commit(messages: Array[WriterCommitMessage]): Unit =
-      JournalWrite.commitAppend(roots, journal, codec, messages)
+      Journal.commitSpooled(root, journal, spooled(messages), codec, offsetRoots = roots)
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      JournalWrite.dropSpools(root, messages)
+      dropSpooled(messages)
   }
 
   override def toStreaming: StreamingWrite = new StreamingWrite {
     override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
       factory
     // queryId is stable across checkpointed restarts (unlike runId), so
-    // a retried epoch maps to the same manifest and lands exactly once.
+    // a retried epoch maps to the same marker and lands exactly once.
     private val qid = info.queryId()
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      Journal.commitSpooledEpoch(root, journal, s"$qid-$epochId",
-        JournalWrite.ordered(messages), codec, offsetRoots = roots)
+      Journal.commitSpooled(root, journal, spooled(messages), codec,
+        offsetRoots = roots, batch = Some((s"$qid-", epochId)))
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      JournalWrite.dropSpools(root, messages)
+      dropSpooled(messages)
   }
 }
 
-/** One spooled (postfix, rollSeq) group of a partition. */
-case class Spooled(postfix: String, seq: Int, len: Long, sha1: String, tmpPath: String)
-
-/** One partition's spool set, awaiting offset assignment + rename. */
-case class SpoolCommit(partitionId: Int, spools: Seq[Spooled])
+/** One task's closed spools, awaiting offset assignment + rename. */
+private[graft] case class SpoolCommit(spools: Seq[Journal.Spooled])
   extends WriterCommitMessage
 
-object JournalWrite {
-  /** Flatten commit messages into (postfix, len, sha, tmp) in
-    * (partition, postfix, rollSeq) order — the order offsets are
-    * assigned in, mirroring `Journal.stage`'s ordered-spool contract.
-    */
-  private[v2] def ordered(messages: Array[WriterCommitMessage]): Seq[(String, Long, String, String)] =
-    messages.collect { case s: SpoolCommit => s }
-      .flatMap(s => s.spools.map(sp => (s.partitionId, sp)))
-      .sortBy { case (pid, sp) => (pid, sp.postfix, sp.seq) }
-      .map { case (_, sp) => (sp.postfix, sp.len, sp.sha1, sp.tmpPath) }.toSeq
-
-  /** Batch append commit: offsets assigned from the MULTI-STORE head in
-    * (partition, postfix) order, spools renamed into the index at the
-    * first (active) store. Deriving the head across every store keeps
-    * mid-migration journals collision-free (see Journal.stage).
-    */
-  private[v2] def commitAppend(roots: Seq[String], journal: String, codec: String,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val root = roots.head
-    val conf = Journal.hadoopConf
-    val staged = Journal.planFragments(root, journal, codec,
-      Journal.head(roots, journal), ordered(messages))
-    staged.foreach { case (frag, tmpPath) =>
-      Journal.commitFragment(frag, tmpPath, conf)
-    }
-    Journal.raiseHeadFloor(root, journal,
-      staged.iterator.map(_._1.end).foldLeft(0L)(math.max))
-    graft.metrics.GraftMetrics.appendCommitted(journal, staged.size,
-      staged.iterator.map { case (f, _) => f.end - f.begin }.sum,
-      staged.iterator.map(_._1.end).foldLeft(0L)(math.max))
-  }
-
-  private[v2] def dropSpools(root: String, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = Journal.hadoopConf
-    messages.foreach {
-      case s: SpoolCommit => s.spools.foreach { sp =>
-        val p = new HPath(sp.tmpPath)
-        p.getFileSystem(conf).delete(p, false)
-      }
-      case _ =>
-    }
-  }
-}
-
-/** Executor-side writer: one spool per (partition, postfix) group,
-  * created lazily so empty partitions produce no fragment.
+/** Executor-side writer: one [[Journal.SpoolSet]] per task, so spools
+  * are created lazily per postfix and empty partitions produce no
+  * fragment.
   */
-class JournalWriterFactory(root: String, journalTag: String, codec: String,
+class JournalWriterFactory(root: String, journal: String, codec: String,
     payloadIdx: Int, postfixIdx: Int, maxFragmentBytes: Long, hc: HadoopConf,
-    journal: String, maxAppendRate: Long, flushIntervalMs: Long = 0L)
+    maxAppendRate: Long, flushIntervalMs: Long)
   extends DataWriterFactory with StreamingDataWriterFactory {
-
-  // A throttled writer MUST carry its journal name: the token bucket is
-  // keyed on it, and an empty key would silently merge throttles across
-  // distinct journals in the JVM.
-  require(maxAppendRate <= 0L || journal.nonEmpty,
-    "JournalWriterFactory: maxAppendRate > 0 requires a non-empty journal")
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     writer(partitionId, taskId)
@@ -203,70 +159,25 @@ class JournalWriterFactory(root: String, journalTag: String, codec: String,
 
   private def writer(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      // Journal.FragmentSpool: ONE spool implementation shared with the
-      // batch append path (framing, SHA-1, codec, roll policy).
-      private lazy val fs = new HPath(root).getFileSystem(hc.value)
-      private def fresh(seq: Int) = new Journal.FragmentSpool(fs, root,
-        s"$journalTag-$partitionId-$taskId", codec, seq, journal)
-      private def finished(postfix: String, sp: Journal.FragmentSpool) = {
-        val len = sp.len // read before finish() closes the stream
-        Spooled(postfix, sp.seq, len, sp.finish(), sp.tmp.toString)
-      }
-      private val spools =
-        scala.collection.mutable.LinkedHashMap.empty[String, Journal.FragmentSpool]
-      private val rolled = Seq.newBuilder[Spooled]
-
-      // Resolved executor-side: the bucket is shared by every writer of
-      // this journal in the JVM, so parallel tasks jointly honor the cap.
-      private lazy val flow: AppendFlowControl.TokenBucket =
-        if (maxAppendRate > 0)
-          AppendFlowControl.bucket(root, journal, maxAppendRate)
-        else null
+      // The task id in the spool names keeps them out of sweepSpools'
+      // batch-path pattern: aborted attempts reclaim their own.
+      private lazy val spools = new Journal.SpoolSet(
+        new HPath(root).getFileSystem(hc.value), root, Vector(journal),
+        partitionId, s"$partitionId-$taskId", codec,
+        maxFragmentBytes = maxFragmentBytes, flushIntervalMs = flushIntervalMs,
+        rateShare = maxAppendRate)
 
       override def write(row: InternalRow): Unit = {
-        val u = row.getUTF8String(payloadIdx)
-        require(u != null, "journal write: null payload")
+        val payload = row.getUTF8String(payloadIdx)
         val postfix =
           if (postfixIdx < 0) ""
-          else {
-            val p = row.getUTF8String(postfixIdx)
-            require(p != null, "journal write: null postfix value")
-            p.toString
-          }
-        // Checked once per distinct value: a malformed postfix writes
-        // fragments the listing never attributes (invisible data,
-        // offsets reused) — refuse at the source.
-        if (!spools.contains(postfix)) Journal.validatePostfix(postfix)
-        var sp = spools.getOrElseUpdate(postfix, fresh(0))
-        if (sp.shouldRoll(maxFragmentBytes, flushIntervalMs)) {
-          rolled += finished(postfix, sp)
-          sp = fresh(sp.seq + 1)
-          spools(postfix) = sp
-        }
-        val payload = u.getBytes
-        if (flow != null) flow.acquire(payload.length + 1L)
-        sp.write(payload)
+          else { val p = row.getUTF8String(postfixIdx); if (p == null) null else p.toString }
+        spools.write(0, postfix, if (payload == null) null else payload.getBytes)
       }
 
-      override def commit(): WriterCommitMessage = {
-        spools.iterator.foreach { case (postfix, sp) => rolled += finished(postfix, sp) }
-        spools.clear()
-        SpoolCommit(partitionId, rolled.result())
-      }
+      override def commit(): WriterCommitMessage = SpoolCommit(spools.finish())
 
-      override def abort(): Unit = {
-        // Best-effort and PER-SPOOL: abort typically runs on an already
-        // failing executor, where a codec close flushing to a dead
-        // stream throws — one such throw must not skip the remaining
-        // closes or any delete. A tmp skipped here is orphaned forever:
-        // retries spool to fresh UUID names, and sweepSpools
-        // deliberately never matches DSv2 spool names.
-        spools.values.foreach { sp =>
-          try sp.abortClose() catch { case _: Exception => () }
-        }
-        (rolled.result().map(sp => new HPath(sp.tmpPath)) ++ spools.values.map(_.tmp))
-          .foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
-      }
+      override def abort(): Unit = spools.abort()
 
       override def close(): Unit = ()
     }

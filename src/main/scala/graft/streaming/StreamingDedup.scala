@@ -22,8 +22,8 @@ import graft.operators.Dedup
   *    near-dup pair), then survivors are checked against the index.
   *  - Exactly-once: every write lands under `batch=<id>` directories
   *    with overwrite semantics, so a retried micro-batch replaces its
-  *    own partial output instead of duplicating it (same manifest idea
-  *    as Journal.batchSink).
+  *    own partial output instead of duplicating it (the same goal as
+  *    the journal sinks' batch markers, Journal.commitSpooled).
   *
   * Use via `docs.writeStream.foreachBatch(StreamingDedup.sink(...))`;
   * surviving (doc_id, text) rows accumulate under `outDir`.

@@ -186,8 +186,9 @@ class JournalSpec extends SparkSpec {
       java.nio.file.Paths.get(root), ".spool-fence", ".tmp")
     java.nio.file.Files.writeString(spool, "orphan-bytes")
     intercept[IllegalStateException] {
-      Journal.commitSpooledEpoch(root, "topic/fence", "q-1-10",
-        Seq(("", 12L, "0" * 40, spool.toString)), "none")
+      Journal.commitSpooled(root, "topic/fence",
+        Seq(Journal.Spooled(0, 0, "", 0, 12L, "0" * 40, spool.toString)), "none",
+        batch = Some(("q-1-", 10L)))
     }
     assert(!java.nio.file.Files.exists(spool),
       "the refused epoch must reclaim its executor spool files")
@@ -426,6 +427,46 @@ class JournalSpec extends SparkSpec {
       case Array(a, b) => a.end == b.begin
       case _ => true
     })
+  }
+
+  test("appendFramed fails loudly on a null payload and reclaims its spools") {
+    val root = tmpRoot()
+    val df = spark.range(0, 4, 1, 2).select(
+      when(col("id") === 3, lit(null).cast("binary"))
+        .otherwise(encode(col("id").cast("string"), "UTF-8")).as("payload"))
+    val err = intercept[Exception] {
+      Journal.appendFramed(df, root, "fx/np", "gz")
+    }
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).flatMap(e => Option(e.getMessage)).toList
+    assert(messages.exists(_.contains("journal append: null payload")),
+      s"want a clear null-payload error, got: $messages")
+    val orphans = new java.io.File(root).listFiles()
+      .map(_.getName).filter(_.startsWith(".spool-"))
+    assert(orphans.isEmpty, s"orphaned spool tmps: ${orphans.mkString(",")}")
+    assert(Journal.listFragments(root, "fx/np").isEmpty)
+  }
+
+  test("compact on a truncated source fails and leaves no tmp file") {
+    import spark.implicits._
+    val root = tmpRoot()
+    Journal.append(Seq("a-1", "a-2").toDF("payload").coalesce(1), root, "t/tr", codec = "none")
+    Journal.append(Seq("b-1", "b-2").toDF("payload").coalesce(1), root, "t/tr", codec = "none")
+    val last = Journal.listFragments(root, "t/tr").last
+    // Cut the second fragment short: its name still claims 8 bytes.
+    // (Its stale local-FS checksum goes too, so the read reaches EOF.)
+    val lastPath = java.nio.file.Paths.get(last.path)
+    java.nio.file.Files.write(lastPath, "b-1".getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(
+      lastPath.resolveSibling(s".${lastPath.getFileName}.crc"))
+    val err = intercept[IllegalArgumentException] {
+      Journal.compact(root, "t/tr", targetBytes = Long.MaxValue / 2)
+    }
+    assert(err.getMessage.contains("truncated fragment"), err.getMessage)
+    val tmps = new java.io.File(root).listFiles()
+      .map(_.getName).filter(_.startsWith(".compact-"))
+    assert(tmps.isEmpty, s"compaction tmp left behind: ${tmps.mkString(",")}")
+    assert(Journal.listFragments(root, "t/tr").size == 2, "sources must survive")
   }
 
   test("prune deletes fragments below the retention offset") {

@@ -116,7 +116,8 @@ class JournalV2Spec extends SparkSpec {
 
     // A replayed epoch is a no-op: same tag → spools dropped, no frags.
     val frags = Journal.listFragments(dstRoot, "dst")
-    val dup = Journal.commitSpooledEpoch(dstRoot, "dst", "replayed-epoch-0", Nil, "gz")
+    val dup = Journal.commitSpooled(dstRoot, "dst", Nil, "gz",
+      batch = Some(("replayed-epoch-", 0L)))
     assert(dup.isEmpty || Journal.listFragments(dstRoot, "dst").size >= frags.size)
   }
 
