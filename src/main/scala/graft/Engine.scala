@@ -55,6 +55,21 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         cores.toString)
       .config("spark.ui.enabled", "false")
+      // Buffers sized to a local heap. Spark's defaults suit cluster
+      // executors: a 4m block for every stage's task-binary broadcast,
+      // and aggregate/sort pages of execution memory / cores / 16 (32m
+      // on a 2g heap at local[2]). On a small G1 heap each is a
+      // humongous allocation, whole regions outside eden that only a GC
+      // returns, and between GCs they pile up to hundreds of MB of
+      // resident heap. 256k blocks stay under G1's humongous threshold
+      // (half a region); 2m pages cut the per-task waste 16×.
+      .config("spark.broadcast.blockSize", "256k")
+      .config("spark.buffer.pageSize", "2m")
+      // Generated-class cache sized above a session's working set. The
+      // default 100 entries are split over 4 LRU segments of 25; a
+      // segment that overflows evicts classes the next query needs, so
+      // every repeat of that query compiles them again with Janino.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     if (master.startsWith("local-cluster")) b = forkedExecutors(b, master)
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

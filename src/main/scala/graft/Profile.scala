@@ -43,9 +43,6 @@ object Profile {
     t("wordTokens")(Tables.documents(spark, sfDir)
       .repartition(32)
       .select(size(graft.operators.TextAnalysis.wordTokens($"text")).as("s")).agg(sum($"s")).count())
-    t("shingles")(Tables.documents(spark, sfDir)
-      .repartition(32)
-      .select(size(graft.operators.TextAnalysis.shingles($"text", 3)).as("s")).agg(sum($"s")).count())
     t("docShingles full")(graft.operators.Dedup.docShingles(
       Tables.documents(spark, sfDir), $"doc_id", $"text", 3).agg(sum(size($"sh"))).count())
     val ds = graft.operators.Dedup.docShingles(

@@ -61,12 +61,19 @@ object TopKAgg {
       }
     }
 
-    def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-    def outputEncoder: Encoder[Seq[Entry]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Entry]]()
+    def bufferEncoder: Encoder[Buf] = bufEncoder
+    def outputEncoder: Encoder[Seq[Entry]] = outEncoder
   }
+
+  // Derived once per JVM. Each derivation is a Scala-reflection walk
+  // under a global lock, and Spark asks an aggregate for its output
+  // encoder again in every task that deserializes it.
+  private lazy val entryEncoder: Encoder[Entry] = Encoders.product[Entry]
+  private lazy val bufEncoder: Encoder[Buf] = Encoders.product[Buf]
+  private lazy val outEncoder: Encoder[Seq[Entry]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Entry]]()
 
   /** Column-function form: `topK(3)($"value", $"id")` → array<struct<v,id>>. */
   def topK(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(new TopK(k), Encoders.product[Entry])
+    org.apache.spark.sql.functions.udaf(new TopK(k), entryEncoder)
 }

@@ -1,13 +1,17 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language-ID heuristics, quality scoring, and document
-  * fingerprinting. All are pure column expressions (whole-stage codegen,
-  * no UDFs) so they scan-parallelize trivially at 100 TB — each is a
-  * narrow map over the text column with no shuffle.
+  * fingerprinting. Single-regex scans are column expressions
+  * (whole-stage codegen). Operators that need a document's tokens more
+  * than once run the one JIT tokenizer ([[tokenize]]) in a typed map or
+  * group kernel — never a regex inside a higher-order function's
+  * lambda, which Catalyst evaluates again for every array element.
+  * [[langIdFast]] is a UDF.
   *
   * Every formula is deliberately expressible in ANSI SQL so the DuckDB
   * oracle can mirror it term-for-term (see queries.PipelineOps).
@@ -23,18 +27,6 @@ object TextAnalysis {
     */
   def wordTokens(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
-
-  /** Distinct word n-gram shingles (space-joined). Empty when the
-    * document has fewer than n tokens.
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = wordTokens(text)
-    when(size(toks) >= n,
-      array_distinct(transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*))))
-      .otherwise(array().cast("array<string>"))
-  }
 
   /** JIT-compiled tokenizer matching [[wordTokens]] ([a-z]+ runs of the
     * lowercased text) for the typed fast paths. Single char scan — no
@@ -74,9 +66,10 @@ object TextAnalysis {
     out.toArray
   }
 
-  /** Space-joined word n-grams of one document, in order — the typed
-    * fast path of [[ngramsAll]] (same strings, JIT loop instead of
-    * interpreted array HOFs).
+  /** All space-joined word n-grams of one document, in order and
+    * non-distinct — the word-count example's n-gram stream
+    * (word_count.go:158-217) over [[tokenize]]. Empty when the document
+    * has fewer than `n` tokens.
     */
   def ngramIterator(text: String, n: Int): Iterator[String] = {
     val toks = tokenize(text)
@@ -87,18 +80,6 @@ object TextAnalysis {
       while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
       sb.toString
     }
-  }
-
-  /** All word n-grams in order (non-distinct) — the word-count example's
-    * n-gram stream (word_count.go:158-217).
-    */
-  def ngramsAll(text: Column, n: Int): Column = {
-    val toks = wordTokens(text)
-    when(size(toks) >= n,
-      transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*)))
-      .otherwise(array().cast("array<string>"))
   }
 
   /** GPT-2-style BPE pre-tokenizer regex, restricted to constructs with
@@ -225,30 +206,65 @@ object TextAnalysis {
     * High values flag boilerplate loops and degenerate generations.
     * Integer counts + one double division each — oracle-exact.
     *
-    * The 3-gram ratio is a narrow map (array_distinct inside the row);
-    * only the top-2-gram mode needs a (doc, gram) aggregation, and its
-    * partial agg collapses within-doc repeats before the exchange.
+    * Plan: one exchange on doc_id, then one [[repetitionCounts]] pass
+    * per row (a single [[tokenize]] call yields all three counts), and
+    * the ratios as column expressions over the integer counts. One
+    * output row per input row, in any order:
+    *  - n_tokens, dup3_ratio: that row's own text. Null text gives a
+    *    null n_tokens and no n-grams.
+    *  - top2_frac: rows that share a doc_id are one document to the
+    *    2-gram mode — their 2-gram counts are pooled and every one of
+    *    them carries the pooled mode. A null doc_id pools with nothing
+    *    and gets 0.0.
     */
-  def repetitionStats(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    val base = docs.select(id.cast("long").as("doc_id"),
-      wordTokens(text).as("w"), ngramsAll(text, 2).as("g2"), ngramsAll(text, 3).as("g3"))
-    val perDoc = base.select(col("doc_id"),
-      size(col("w")).cast("long").as("n_tokens"),
-      size(col("g3")).cast("long").as("t3"),
-      size(array_distinct(col("g3"))).cast("long").as("d3"),
-      col("g2"))
-    val top2 = perDoc.select(col("doc_id"), explode(col("g2")).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("c")).as("maxc"), sum(col("c")).as("t2"))
-    perDoc.drop("g2").join(top2, Seq("doc_id"), "left")
+  def repetitionStats(docs: DataFrame, id: Column, text: Column): DataFrame =
+    docs.select(id.cast("long").as("doc_id"), text.cast("string").as("text"))
+      .as(repetitionIn)
+      .groupByKey(_._1)(repetitionKey)
+      .flatMapGroups { (docId, rows: Iterator[(Option[Long], String)]) =>
+        val per = rows.map(r => Option(r._2).map(repetitionCounts)).toVector
+        val pooled = scala.collection.mutable.HashMap.empty[String, Long]
+        if (docId.isDefined)
+          for (c <- per.flatten; (g, k) <- c._4) pooled(g) = pooled.getOrElse(g, 0L) + k
+        val maxc = pooled.valuesIterator.foldLeft(0L)(math.max)
+        val t2 = pooled.valuesIterator.sum
+        per.map(c => (docId, c.map(_._1.toLong), c.fold(0L)(_._2.toLong),
+          c.fold(0L)(_._3.toLong), maxc, t2))
+      }(repetitionOut)
+      .toDF("doc_id", "n_tokens", "t3", "d3", "maxc", "t2")
       .select(col("doc_id"), col("n_tokens"),
         when(col("t3") > 0,
           Curation.floorRound6(lit(1.0) - col("d3").cast("double") / col("t3")))
           .otherwise(0.0).as("dup3_ratio"),
-        when(coalesce(col("t2"), lit(0L)) > 0,
+        when(col("t2") > 0,
           Curation.floorRound6(col("maxc").cast("double") / col("t2")))
           .otherwise(0.0).as("top2_frac"))
+
+  // `repetitionStats`' encoders, derived once per JVM: each derivation
+  // is a Scala-reflection walk under a global lock.
+  private lazy val repetitionIn = ExpressionEncoder[(Option[Long], String)]()
+  private lazy val repetitionKey = ExpressionEncoder[Option[Long]]()
+  private lazy val repetitionOut =
+    ExpressionEncoder[(Option[Long], Option[Long], Long, Long, Long, Long)]()
+
+  /** One document's [[repetitionStats]] counts from one [[tokenize]]
+    * pass: (tokens, 3-grams, distinct 3-grams, count per distinct
+    * 2-gram). N-grams are keyed by their space-joined words; tokens hold
+    * no spaces, so equal keys are equal n-grams.
+    */
+  private[graft] def repetitionCounts(t: String)
+      : (Int, Int, Int, scala.collection.mutable.HashMap[String, Int]) = {
+    val toks = tokenize(t)
+    val g3 = new java.util.HashSet[String]()
+    val g2 = scala.collection.mutable.HashMap.empty[String, Int]
+    var i = 0
+    while (i + 1 < toks.length) {
+      val bi = toks(i) + " " + toks(i + 1)
+      g2(bi) = g2.getOrElse(bi, 0) + 1
+      if (i + 2 < toks.length) g3.add(bi + " " + toks(i + 2))
+      i += 1
+    }
+    (toks.length, math.max(toks.length - 2, 0), g3.size, g2)
   }
 
   /** PII pattern scan: per-document counts of e-mail addresses,

@@ -24,8 +24,8 @@ class JournalCatalogSpec extends AnyFunSuite {
     assert(c.upsert(JournalSpec("bad/label",
       LabelSet("x", "v"))).isLeft) // label name too short
     // Reject at upsert what the append path rejects at write time: a
-    // 0 fragment target passed the old validator only to throw
-    // Journal.stage's require on the first append.
+    // 0 fragment target passed the old validator only to throw the
+    // spool pass's maxFragmentBytes require on the first append.
     assert(c.upsert(JournalSpec("bad/fragsize",
       fragmentTargetLength = 0L)).isLeft)
     assert(c.upsert(JournalSpec("bad/replication",

@@ -135,6 +135,69 @@ class CorpusSpec extends SparkSpec {
     assert(out(3L) == ((0.0, 0.0)))  // single token: no n-grams at all
   }
 
+  test("repetitionStats matches the column-form plan on edge cases and shared ids") {
+    import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
+    // Reference: the former column-form plan — regex tokens, n-grams
+    // built in a transform lambda, the 2-gram mode as two aggregates
+    // and a left join on doc_id.
+    def ngramsAll(text: Column, n: Int): Column = {
+      val toks = TextAnalysis.wordTokens(text)
+      when(size(toks) >= n,
+        transform(
+          sequence(lit(1), size(toks) - (n - 1)),
+          i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*)))
+        .otherwise(array().cast("array<string>"))
+    }
+    def reference(docs: DataFrame, id: Column, text: Column): DataFrame = {
+      val base = docs.select(id.cast("long").as("doc_id"),
+        TextAnalysis.wordTokens(text).as("w"), ngramsAll(text, 2).as("g2"),
+        ngramsAll(text, 3).as("g3"))
+      val perDoc = base.select(col("doc_id"),
+        size(col("w")).cast("long").as("n_tokens"),
+        size(col("g3")).cast("long").as("t3"),
+        size(array_distinct(col("g3"))).cast("long").as("d3"),
+        col("g2"))
+      val top2 = perDoc.select(col("doc_id"), explode(col("g2")).as("g"))
+        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+        .groupBy(col("doc_id"))
+        .agg(max(col("c")).as("maxc"), sum(col("c")).as("t2"))
+      perDoc.drop("g2").join(top2, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_tokens"),
+          when(col("t3") > 0,
+            Curation.floorRound6(lit(1.0) - col("d3").cast("double") / col("t3")))
+            .otherwise(0.0).as("dup3_ratio"),
+          when(coalesce(col("t2"), lit(0L)) > 0,
+            Curation.floorRound6(col("maxc").cast("double") / col("t2")))
+            .otherwise(0.0).as("top2_frac"))
+    }
+    val docs = Seq[(Option[Long], String)](
+      (Some(1L), null),
+      (Some(2L), ""),
+      (Some(3L), "İstanbul ISTANBUL"),
+      (Some(4L), "café STRASSE straße"),
+      (Some(5L), "2024 1999 42"),
+      (Some(6L), "alone"),
+      (Some(7L), "two words"),
+      (None, "aa bb aa bb aa bb"),
+      (Some(9L), "x y x y"), // three rows share doc 9: one pooled
+      (Some(9L), "x y z"),   // 2-gram mode, 'x y' 3 of 5
+      (Some(9L), null),
+      (Some(12L), "aa bb cc aa bb cc aa bb cc"))
+      .toDF("doc_id", "text")
+    val got = TextAnalysis.repetitionStats(docs, $"doc_id", $"text")
+    val want = reference(docs, $"doc_id", $"text")
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.count() == docs.count())
+    assert(got.exceptAll(want).isEmpty, got.exceptAll(want).collect().mkString("\n"))
+    assert(want.exceptAll(got).isEmpty, want.exceptAll(got).collect().mkString("\n"))
+    val rows = got.collect().map(_.toSeq).toSet
+    // A null-text row of a shared id still carries the pooled mode; a
+    // null id pools with nothing.
+    assert(rows.contains(Seq(9L, null, 0.0, 0.6)))
+    assert(rows.contains(Seq(null, 6L, 0.5, 0.0)))
+  }
+
   test("ngramOverlap reports shared shingles against the eval slice only") {
     import spark.implicits._
     // Letter-distinct tokens ([a-z]+ tokenization drops digits).

@@ -12,19 +12,17 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("shingles and ngrams") {
-    import spark.implicits._
-    val d = docs((1L, "The quick brown Fox the quick brown"))
-    val sh = d.select(TextAnalysis.shingles($"text", 3).as("s"))
-      .collect().head.getSeq[String](0)
-    assert(sh.contains("the quick brown"))
-    assert(sh.distinct.length == sh.length)
-    val ng = d.select(TextAnalysis.ngramsAll($"text", 3).as("s"))
-      .collect().head.getSeq[String](0)
+    val txt = "The quick brown Fox the quick brown"
+    val ng = TextAnalysis.ngramIterator(txt, 3).toSeq
+    assert(ng.contains("the quick brown"))
     assert(ng.count(_ == "the quick brown") == 2) // non-distinct
+    // Shingles are the distinct n-grams: one hash per distinct 3-gram.
+    val sh = Dedup.shingleHashes(txt, 3)
+    assert(sh.distinct.length == sh.length)
+    assert(sh.length == ng.distinct.length)
     // short doc yields empty
-    val empty = docs((2L, "one two")).select(TextAnalysis.shingles($"text", 3).as("s"))
-      .collect().head.getSeq[String](0)
-    assert(empty.isEmpty)
+    assert(TextAnalysis.ngramIterator("one two", 3).isEmpty)
+    assert(Dedup.shingleHashes("one two", 3).isEmpty)
   }
 
   test("exactDedup keeps first row per key") {
@@ -540,11 +538,16 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("ngramIterator matches the ngramsAll column form") {
-    import spark.implicits._
+    // The retired column form, as a reference: [a-z]+ runs of the
+    // lowercased text, n consecutive runs joined by one space.
+    def ref(t: String, n: Int) = {
+      val toks = "[a-z]+".r.findAllIn(t.toLowerCase(java.util.Locale.ROOT)).toSeq
+      if (toks.length < n) Seq.empty else toks.sliding(n).map(_.mkString(" ")).toSeq
+    }
     val txt = "The cat5 sat, on the MAT the cat"
-    val colForm = docs((1L, txt))
-      .select(TextAnalysis.ngramsAll($"text", 2)).collect().head.getSeq[String](0)
-    assert(TextAnalysis.ngramIterator(txt, 2).toSeq == colForm)
+    assert(TextAnalysis.ngramIterator(txt, 2).toSeq == ref(txt, 2))
+    assert(ref(txt, 2) == Seq("the cat", "cat sat", "sat on", "on the",
+      "the mat", "mat the", "the cat"))
     assert(TextAnalysis.ngramIterator("one", 2).isEmpty)
   }
 

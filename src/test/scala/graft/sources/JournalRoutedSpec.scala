@@ -31,6 +31,12 @@ class JournalRoutedSpec extends SparkSpec {
     "j/keep" -> (col("route") === "keep"),
     "j/quarantine" -> (col("route") === "quarantine"))
 
+  /** One multi-route pass against per-route passes of the same write
+    * kernel: `batchSink` is the one-route case of `batchSinkRouted`, so
+    * this checks that routing splits rows and fragment boundaries the
+    * way separate passes do. The byte pin of what the kernel writes is
+    * `JournalWriteGoldenSpec`.
+    */
   test("routed sink produces byte-identical fragments to sequential batchSink") {
     // Stage through parquet, as the streaming gates do: a file scan's
     // row-to-partition assignment is fixed by the splits, so the
