@@ -18,9 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * table. Every step is set arithmetic on integers — deterministic
   * under any partitioning, replayable by a recursive-CTE oracle.
   *
-  * Each round materializes its frontier (count) to truncate lineage
-  * and to stop early when the frontier drains — without the count the
-  * plan would re-expand every prior round at the terminal action.
+  * Each round's count materializes the visited table, so no round
+  * recomputes an earlier one, and stops the loop early when the
+  * frontier drains. The visited table is carried through [[IterLoop.rebase]],
+  * so the plan stays one leaf instead of doubling per hop.
   */
 object Bfs {
 
@@ -45,23 +46,19 @@ object Bfs {
     // discoveries before the exchange, where distinct+anti-join shipped
     // them twice. The visited table is ONE cache replaced per hop
     // (same Σ bytes as the per-frontier caches it replaces).
-    var visited = seeds.selectExpr("cast(node as long) as node").distinct()
-      .withColumn("dist", lit(0)).persist(StorageLevel.MEMORY_AND_DISK)
+    var visited = IterLoop.rebase(seeds.selectExpr("cast(node as long) as node")
+      .distinct().withColumn("dist", lit(0)))
     var frontier = visited
     var hop = 0
     var drained = false
     while (hop < maxHops && !drained) {
       hop += 1
-      // Re-alias both sides: from round 2 the frontier derives from
-      // the same cached edge plan, and unqualified refs would trip
-      // Spark's ambiguous-self-join detection.
       val expanded = frontier.select(col("node").as("fnode"))
         .join(e.as("e"), col("fnode") === col("e.src"))
         .select(col("e.dst").as("node")).withColumn("dist", lit(hop))
-      val nextVisited = visited.select(col("node"), col("dist"))
+      val nextVisited = IterLoop.rebase(visited.select(col("node"), col("dist"))
         .unionAll(expanded)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
       val newFrontier = nextVisited.filter(col("dist") === hop)
       // The count materializes nextVisited's cache (full scan) AND is
       // the drain check — still exactly one action per hop.

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * replaced allocated a sequence+filter+transform chain per document
   * per round and its compounded codegen paid tens of seconds of JIT on
   * first execution). The corpus
-  * is re-persisted each round so round r never replays rounds 1..r-1
-  * (at cluster scale: checkpoint every few rounds instead).
+  * is carried through [[IterLoop.rebase]], so round r neither replays
+  * rounds 1..r-1 nor analyses a plan one Project deeper per round.
   *
   * Merged symbols are space-joined token runs; original tokens are
   * `[a-z]+` so a merged symbol can never collide with a base token.
@@ -75,11 +75,10 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    var corpus = docs
+    var corpus = IterLoop.rebase(docs
       .select(id.cast("long").as("doc_id"),
         TextAnalysis.wordTokens(text).as("syms"))
-      .filter(size(col("syms")) >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(size(col("syms")) >= 2))
     // The parent round's cache is dropped only AFTER the child's first
     // action (the argmax below) has materialized the child — so each
     // round costs exactly ONE corpus pass, with no extra count() pass.
@@ -101,8 +100,8 @@ object Bpe {
         val (l, rr, cnt) = best(0)
         merges += ((r, l, rr, cnt))
         parent = corpus
-        corpus = corpus.withColumn("syms", applyMerge(col("syms"), l, rr))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        corpus = IterLoop.rebase(
+          corpus.withColumn("syms", applyMerge(col("syms"), l, rr)))
         r += 1
       }
     }

@@ -178,8 +178,9 @@ object Clustering {
     * literal — codegen'd fused cosine, no UDF, no shuffle) and ONE
     * 1-row argmax pull to the driver (`orderBy.limit(1)` = per-partition
     * top-1 then a k-way merge — never a sort of the corpus). State on
-    * the driver is k rows total. The md column is re-persisted each
-    * round so round r does not replay rounds 1..r-1.
+    * the driver is k rows total. The md column is carried through
+    * [[IterLoop.rebase]], so round r neither replays rounds 1..r-1 nor
+    * analyses a plan that grows by one Project per round.
     *
     * Determinism: dist = round(1 − round(cos, 6), 6); argmax ties break
     * to the lowest vec_id; already-chosen ids are excluded by id (not
@@ -210,8 +211,7 @@ object Clustering {
     require(seed.nonEmpty, "kcenterGreedy: empty input")
     val chosen = scala.collection.mutable.ArrayBuffer(
       (1, seed(0)._1, 2.0))
-    var cur = base.withColumn("md", distTo(seed(0)._2))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var cur = IterLoop.rebase(base.withColumn("md", distTo(seed(0)._2)))
     // Parent caches drop only after the child's argmax action has
     // materialized the child — one corpus pass per round, no count().
     var parent: DataFrame = null
@@ -226,14 +226,7 @@ object Clustering {
         val (id, v, d) = next(0)
         chosen += ((r, id, d))
         parent = cur
-        // Rebase on the updated frame's RDD: persist caches DATA but
-        // leaves the logical plan growing one Project per round, so
-        // analysis cost would be O(k²) and k in the thousands would
-        // overflow the analyzer stack. A LogicalRDD leaf keeps the
-        // plan depth constant at coreset-scale k.
-        val updated = cur.withColumn("md", least(col("md"), distTo(v)))
-        cur = spark.createDataFrame(updated.rdd, updated.schema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        cur = IterLoop.rebase(cur.withColumn("md", least(col("md"), distTo(v))))
         r += 1
       }
     }

@@ -69,11 +69,7 @@ object Curation {
     * collected. For HIGH-diameter graphs (chains, lattices) use
     * [[connectedComponentsStars]] — O(log n) rounds, same result.
     *
-    * Lineage is TRUNCATED every round (the label table is rebuilt as a
-    * fresh leaf over the materialized rows, then cached): persist alone
-    * keeps the logical plan compounding round over round, and Catalyst
-    * re-analysis of a plan that doubles per iteration goes super-linear
-    * after ~10 rounds — the classic iterative-DataFrame trap. Carrying
+    * The label table is carried through [[IterLoop.rebase]]. Carrying
     * the previous label in the materialized row makes the convergence
     * check a filter-count on the cache, not a self-join.
     *
@@ -89,14 +85,10 @@ object Curation {
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    def truncate(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     val sym = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .unionAll(edges.select(col("b").cast("long").as("a"), col("a").cast("long").as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var cached = truncate(sym.groupBy(col("a"))
+    var cached = IterLoop.rebase(sym.groupBy(col("a"))
       .agg(least(min(col("b")), col("a")).as("comp")) // round 1 fused into init
       .withColumnRenamed("a", "id"))
     var labels = cached
@@ -105,7 +97,7 @@ object Curation {
     while (!converged && iter < maxIter) {
       val nbrMin = sym.join(labels, sym("b") === labels("id"))
         .groupBy(sym("a").as("id")).agg(min(col("comp")).as("cand"))
-      val next = truncate(labels.as("l")
+      val next = IterLoop.rebase(labels.as("l")
         .join(nbrMin.as("n"), col("l.id") === col("n.id"), "left")
         .select(col("l.id").as("id"),
           least(col("l.comp"), coalesce(col("n.cand"), col("l.comp"))).as("comp"),
@@ -122,10 +114,10 @@ object Curation {
     require(converged, s"connectedComponents did not converge in $maxIter rounds — " +
       "component diameter exceeds the bound; raise maxIter")
     // The returned frame reads the final round's MEMORY_AND_DISK cache
-    // (the truncated-lineage contract: dropping it would recompute the
-    // whole loop). Long-lived sessions should consume the labels
-    // (write/aggregate) and then clearCache(), as the bench harness
-    // does per rep; gate queries run once so the cost is bounded.
+    // (dropping it would recompute the whole loop). Long-lived sessions
+    // should consume the labels (write/aggregate) and then clearCache(),
+    // as the bench harness does per rep; gate queries run once so the
+    // cost is bounded.
     labels
   }
 
@@ -145,21 +137,15 @@ object Curation {
     * center's neighbor set is never materialized in one task);
     * small-star = the same over the to-larger-endpoint orientation;
     * then canonicalize + distinct. Fixed point is an exact anti-join
-    * emptiness test, and lineage is truncated per round like
-    * [[connectedComponents]].
+    * emptiness test; the edge set is carried through [[IterLoop.rebase]].
     */
   def connectedComponentsStars(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    def truncate(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     def canon(df: DataFrame): DataFrame =
       df.filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
         .distinct()
-    var cur = truncate(canon(edges.select(col("a").cast("long").as("a"),
+    var cur = IterLoop.rebase(canon(edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))))
     // |cur| rides along from each round's materializing count, so the
     // convergence test below can usually skip its join outright.
@@ -194,14 +180,13 @@ object Curation {
       val minsS = e2.groupBy(col("u")).agg(min(col("v")).as("m"))
       val small = e2.join(minsS, "u").select(col("v").as("a"), col("m").as("b"))
         .unionAll(minsS.select(col("u").as("a"), col("m").as("b")))
-      val next = truncate(canon(small))
+      val next = IterLoop.rebase(canon(small))
       // Convergence = set equality of two DISTINCT edge sets. One
-      // count materializes `next` (truncate's contract needs an action
-      // anyway); when the cardinality moved, the sets provably differ
-      // and both r11 anti-join jobs are skipped; when it matched, ONE
-      // anti-join decides (|next| = |cur| ∧ next∖cur = ∅ ⇒ cur∖next =
-      // ∅ too, since |cur∖next| = |cur| − |cur∩next| = 0). Typical
-      // rounds pay 1 job here instead of 2-3.
+      // count materializes `next`; when the cardinality moved, the sets
+      // provably differ and both r11 anti-join jobs are skipped; when it
+      // matched, ONE anti-join decides (|next| = |cur| ∧ next∖cur = ∅
+      // ⇒ cur∖next = ∅ too, since |cur∖next| = |cur| − |cur∩next| = 0).
+      // Typical rounds pay 1 job here instead of 2-3.
       val nextCount = next.count()
       converged = nextCount == curCount &&
         next.join(cur, Seq("a", "b"), "left_anti").isEmpty
@@ -210,6 +195,7 @@ object Curation {
       curCount = nextCount
       iter += 1
     }
+    if (!converged) cur.unpersist() // don't leak the cache on the failure path
     require(converged,
       s"connectedComponentsStars did not converge in $maxIter rounds")
     // Fixed point is a star per component; canon puts the center

@@ -1,27 +1,48 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Latency discipline for DRIVER-SYNCHRONIZED iterative loops whose
-  * per-round REDUCE side is bounded by a model constant — k centroids,
-  * a pair vocabulary, a 1-row argmax — rather than by corpus size.
+/** The two disciplines of DRIVER-SYNCHRONIZED iterative loops.
   *
-  * For such rounds the session defaults are pure overhead (measured on
-  * the BPE trainer, PERF.md round-10): AQE materializes every shuffle
-  * stage as its own job (~0.3 s fixed latency per round) and schedules
-  * a full shuffle-partition fan of reduce tasks for a few KB of
-  * aggregate state. Map-side partial aggregation already collapses to
-  * the bounded vocabulary BEFORE the exchange, so pinning a small
-  * reduce width and skipping AQE inside the loop changes nothing about
-  * the corpus-sized map side — at any scale.
+  * [[rebase]] is how a loop carries a frame from one round to the
+  * next. Catalyst analyses a frame's whole logical plan on every
+  * action, and `persist` caches the data, not the plan: a round built
+  * from the previous round's frame, used m times, multiplies the plan
+  * by m per round (k-core peeling ×3, BFS ×2; PERF.md "Flat plans for
+  * the iterative loops"). A rebased frame is one plan node whatever
+  * the round.
   *
-  * NOT for loops whose per-round shuffle is corpus-sized (BFS
-  * frontiers, label propagation, k-core peeling): those want AQE's
-  * coalescing and skew handling, and their reduce width must scale
-  * with the data. The discipline is applied per-operator, with the
-  * boundedness argument stated at the call site.
+  * [[tinyReduce]] is the latency discipline for loops whose per-round
+  * REDUCE side is bounded by a model constant — k centroids, a pair
+  * vocabulary, a 1-row argmax — rather than by corpus size. For such
+  * rounds the session defaults are pure overhead (measured on the BPE
+  * trainer, PERF.md round-10): AQE materializes every shuffle stage as
+  * its own job (~0.3 s fixed latency per round) and schedules a full
+  * shuffle-partition fan of reduce tasks for a few KB of aggregate
+  * state. Map-side partial aggregation already collapses to the
+  * bounded vocabulary BEFORE the exchange, so pinning a small reduce
+  * width and skipping AQE inside the loop changes nothing about the
+  * corpus-sized map side — at any scale. NOT for loops whose per-round
+  * shuffle is corpus-sized (BFS frontiers, label propagation, k-core
+  * peeling): those want AQE's coalescing and skew handling, and their
+  * reduce width must scale with the data. The discipline is applied
+  * per-operator, with the boundedness argument stated at the call
+  * site.
   */
 private[graft] object IterLoop {
+
+  /** `df` as a single flat leaf over its rows, persisted
+    * MEMORY_AND_DISK. The round's next action materializes the cache
+    * (with AQE on, `df`'s shuffle stages run here already). The leaf
+    * keeps RDD lineage, so a cached block lost with an executor
+    * recomputes (`localCheckpoint` blocks do not). The caller
+    * unpersists the previous round's frame once this one is
+    * materialized.
+    */
+  def rebase(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.ColumnBridge.rddLeaf(df)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Run `body` with AQE off and `spark.sql.shuffle.partitions`
     * pinned to `reduceWidth`; always restores the session's previous

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** k-core decomposition by iterative degree peeling: repeatedly drop
   * vertices of degree < k until the remaining subgraph is a k-core
@@ -17,9 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * materialize globally; the only driver value is the surviving-edge
   * count used for convergence. Rounds are bounded by `maxRounds`
   * (peeling converges in O(peel-depth) rounds, typically < 10 on
-  * power-law graphs); each round truncates lineage by materializing
-  * the filtered edge list, so the terminal plan does not re-expand
-  * the full iteration history.
+  * power-law graphs). Each round's count materializes the filtered
+  * edge list, so no round recomputes an earlier one; the edge list is
+  * carried through [[IterLoop.rebase]], so the plan stays one leaf
+  * instead of tripling per round.
   *
   * Determinism: degree thresholds are integer comparisons on exact
   * counts — the fixpoint is unique (the k-core is a well-defined
@@ -38,14 +38,13 @@ object KCore {
   def core(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var e = edges
+    var e = IterLoop.rebase(edges
       .selectExpr("cast(src as long) as src", "cast(dst as long) as dst")
       // Self-loops and duplicate edge rows inflate degrees (a vertex
       // could sit in the reported core on loop-degree alone) — drop
       // and dedupe up front, as Triangles does.
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     var n = e.count()
     var round = 0
     var converged = false
@@ -55,11 +54,10 @@ object KCore {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      val pruned = e
+      val pruned = IterLoop.rebase(e
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("src"), col("dst")))
       val m = pruned.count()
       converged = m == n
       e.unpersist()

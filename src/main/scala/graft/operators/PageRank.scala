@@ -25,8 +25,8 @@ import org.apache.spark.storage.StorageLevel
   * src + one groupBy dst — both hash exchanges on vertex ids. The
   * ranks table carries deg, so the outflow r div deg is a projection,
   * not a join (r12; the old shape paid a deg⋈ranks join per
-  * iteration). Lineage grows linearly with iterations; for deep runs
-  * persist every few rounds to truncate it.
+  * iteration). The plan grows linearly with iterations; a deep run
+  * that must bound it carries `ranks` through [[IterLoop.rebase]].
   */
 object PageRank {
 

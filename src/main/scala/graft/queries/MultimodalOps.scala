@@ -448,12 +448,10 @@ object MultimodalOps {
     // the real write path rather than a batch projection.
     "q176_media_routing_streaming" -> { (s, d) =>
       import s.implicits._
-      import java.nio.file.Paths
       import org.apache.spark.sql.streaming.Trigger
       import graft.operators.MediaRouter
       import graft.sources.Journal
-      val root = s"/tmp/graft-journals/mr-${d.replace('/', '_')}"
-      StreamOps.deleteRecursively(Paths.get(root))
+      val root = StreamOps.privateRoot("mr")
       // Identical corpus arithmetic to q171 — the shared oracle demands it.
       val params = Tables.documents(s, d)
         .select($"doc_id".cast("long").as("doc_id"))
@@ -947,11 +945,9 @@ object MultimodalOps {
     // batch gates cannot see live (q167/q176 both caught one).
     "q189_web_pipeline_streaming" -> { (s, d) =>
       import s.implicits._
-      import java.nio.file.Paths
       import org.apache.spark.sql.streaming.Trigger
       import graft.sources.Journal
-      val root = s"/tmp/graft-journals/web-${d.replace('/', '_')}"
-      StreamOps.deleteRecursively(Paths.get(root))
+      val root = StreamOps.privateRoot("web")
       val params = Tables.documents(s, d)
         .select($"doc_id".cast("long").as("doc_id"))
         .withColumn("n", (lit(3) + $"doc_id" % 4).cast("int"))
@@ -1236,11 +1232,9 @@ object MultimodalOps {
     // the declared semantics cannot drift.
     "q197_doc_pipeline_streaming" -> { (s, d) =>
       import s.implicits._
-      import java.nio.file.Paths
       import org.apache.spark.sql.streaming.Trigger
       import graft.sources.Journal
-      val root = s"/tmp/graft-journals/docs-${d.replace('/', '_')}"
-      StreamOps.deleteRecursively(Paths.get(root))
+      val root = StreamOps.privateRoot("docs")
       val build = udf { docId: Long =>
         (docId % 3) match {
           case 0 => graft.operators.PdfFixtures.pdf(docId)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.Comparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,8 +46,7 @@ object StreamOps {
     "q36_read_committed" -> { (s, d) =>
       import s.implicits._
       import graft.functions.F
-      val root = s"/tmp/graft-journals/rc-${d.replace('/', '_')}"
-      deleteRecursively(Paths.get(root))
+      val root = privateRoot("rc")
       // Parallel ordered spool: range partitions are index-ordered and
       // the journal commit assigns offsets by partition index, so N sorted
       // range partitions produce N fragments whose concatenated byte
@@ -93,8 +92,7 @@ object StreamOps {
       import s.implicits._
       import org.apache.spark.sql.streaming.Trigger
       import graft.operators.{Contamination, Dedup}
-      val root = s"/tmp/graft-journals/ig-${d.replace('/', '_')}"
-      deleteRecursively(Paths.get(root))
+      val root = privateRoot("ig")
       val docs = Tables.documents(s, d)
       val evalSet = Contamination.evalShingleSet(
         Dedup.docShingles(docs.filter($"doc_id" % 17 === 0),
@@ -143,8 +141,7 @@ object StreamOps {
     // byte offsets, payloads decoded and re-aggregated.
     "q31_journal_roundtrip" -> { (s, d) =>
       import s.implicits._
-      val root = s"/tmp/graft-journals/rt-${d.replace('/', '_')}"
-      deleteRecursively(Paths.get(root))
+      val root = privateRoot("rt")
       // Single-file parquet scans arrive as ONE partition: repartition
       // so the to_json + gzip spool runs on every core and the read
       // back gets one task per fragment.
@@ -192,7 +189,17 @@ object StreamOps {
         |WHERE mx IS NULL OR clock > mx""".stripMargin
   )
 
-  private[queries] def deleteRecursively(p: Path): Unit =
+  /** A journal root of its own for one query invocation, so
+    * concurrent runs never share one. It is deleted when the JVM exits,
+    * not on return: the returned frame reads its journals lazily.
+    */
+  private[queries] def privateRoot(tag: String): String = {
+    val p = Files.createTempDirectory(s"graft-journals-$tag-")
+    sys.addShutdownHook(deleteRecursively(p))
+    p.toString
+  }
+
+  private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       // Files.walk holds open DirectoryStreams until close() — without
       // it each invocation leaks directory FDs until finalization.

@@ -142,4 +142,29 @@ class ExecutorLossSpec extends SparkSpec {
     assert(again == expect, s"cache recompute diverged: $again != $expect")
     df.unpersist()
   }
+
+  test("a rebased loop result recomputes from lineage after every executor is killed") {
+    assume(isCluster, "needs real executor processes (GRAFT_TEST_MASTER=local-cluster[...])")
+    import spark.implicits._
+
+    // 100 chains of 10 vertices: ten rounds of label propagation, each
+    // carried through IterLoop.rebase. Killing every executor loses
+    // every cached block and shuffle file of every round, so the
+    // re-read can only succeed by recomputing through RDD lineage,
+    // which a localCheckpoint'd leaf does not keep.
+    val es = (0L until 100L).flatMap(c =>
+      (0L until 9L).map(i => (c * 10 + i, c * 10 + i + 1))).toDF("a", "b")
+    val cc = graft.operators.Curation.connectedComponents(es, maxIter = 20)
+    val expect = (0L until 1000L).map(v => (v, v / 10 * 10))
+    assert(cc.as[(Long, Long)].collect().sorted.toSeq == expect)
+
+    val pidsBefore = executorPids()
+    pidsBefore.foreach(pid => ProcessHandle.of(pid).ifPresent(_.destroyForcibly()))
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    while (executorPids().filterNot(pidsBefore.contains).size < pidsBefore.size &&
+        System.nanoTime() < deadline) Thread.sleep(500)
+
+    assert(cc.as[(Long, Long)].collect().sorted.toSeq == expect,
+      "rebased frame diverged after losing every executor")
+  }
 }

@@ -4,11 +4,15 @@ import graft.SparkSpec
 
 class BfsSpec extends SparkSpec {
 
+  private def distFrame(edges: Seq[(Long, Long)], seeds: Seq[Long], hops: Int) = {
+    import spark.implicits._
+    Bfs.distances(edges.toDF("src", "dst"), seeds.toDF("node"), hops)
+  }
+
   private def dists(edges: Seq[(Long, Long)], seeds: Seq[Long],
                     hops: Int): Map[Long, Int] = {
     import spark.implicits._
-    Bfs.distances(edges.toDF("src", "dst"), seeds.toDF("node"), hops)
-      .as[(Long, Int)].collect().toMap
+    distFrame(edges, seeds, hops).as[(Long, Int)].collect().toMap
   }
 
   test("single-source path graph: layered distances, horizon respected") {
@@ -52,5 +56,13 @@ class BfsSpec extends SparkSpec {
       frontier = next
     }
     assert(dists(edges, seeds, 3) == ref)
+  }
+
+  test("12 hops down a 41-vertex path keep the plan as small as 3 hops") {
+    val path = (0L to 40L).sliding(2).map(w => (w(0), w(1))).toSeq
+    assert(dists(path, Seq(0L), 12) == (0 to 12).map(i => i.toLong -> i).toMap)
+    def planNodes(hops: Int): Int =
+      distFrame(path, Seq(0L), hops).queryExecution.logical.collect { case p => p }.size
+    assert(planNodes(12) == planNodes(3))
   }
 }

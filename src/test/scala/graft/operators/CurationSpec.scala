@@ -47,6 +47,18 @@ class CurationSpec extends SparkSpec {
     assert(cc.size == 100 && cc.values.forall(_ == 0L))
   }
 
+  test("both connected-components variants release their caches when they fail to converge") {
+    val chain = edges((0L until 12L).map(i => (i, i + 1)): _*)
+    val variants = Seq[DataFrame => DataFrame](
+      Curation.connectedComponents(_, maxIter = 1),
+      Curation.connectedComponentsStars(_, maxIter = 1))
+    for (cc <- variants) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[IllegalArgumentException](cc(chain))
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    }
+  }
+
   test("connectedComponentsStars agrees with min-label propagation") {
     // Mixed components incl. a cycle and reversed orientations.
     val es = edges((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L),
