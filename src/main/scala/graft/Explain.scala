@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of selected
-  * queries (all when no names given). Used to audit pushdown, broadcast
+  * queries (all when no names given), from the same `Engine.local`
+  * session `Verify` and `Bench` run. Used to audit pushdown, broadcast
   * choice, and whole-stage codegen coverage.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Engine.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -20,10 +20,6 @@ object GazetteUuid {
   /** 100ns intervals between 15 Oct 1582 (RFC 4122) and the Unix epoch. */
   val G1582NS100: Long = 122192928000000000L
 
-  final val FlagOutsideTxn: Int = 0x0
-  final val FlagContinueTxn: Int = 0x1
-  final val FlagAckTxn: Int = 0x2
-
   /** Pack (producer, clock, flags) into a 16-byte v1 UUID. */
   def build(producer: Array[Byte], clock: Long, flags: Int): Array[Byte] = {
     require(producer.length == 6, s"producer must be 6 bytes, got ${producer.length}")

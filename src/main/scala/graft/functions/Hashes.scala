@@ -26,11 +26,6 @@ object Hashes {
     h & 0xffffffffL
   }
 
-  /** Stable modulo partition mapping: fnv1a32(key) mod n
-    * (ModuloMapping, routines.go:80-96).
-    */
-  def fnvModulo(bytes: Array[Byte], n: Int): Int = (fnv1a32(bytes) % n).toInt
-
   /** CRC64 with the ECMA polynomial, reflected (Go hash/crc64 semantics). */
   private val Ecma: Long = 0xC96C5795D7870F42L
 

@@ -254,40 +254,4 @@ object Clustering {
       .select(col("cell"), col("va"), col("vb"), graft.operators.Curation.floorRound(col("c"), 6).as("sim"))
       .filter(col("sim") >= threshold)
   }
-
-  /** Corpus-sized k for the SemDeDup trade: per-cell verification does
-    * Σ|cell|² ≈ n²/k pair work while assignment does n·k distance
-    * evals; k = √n balances them at ~n^1.5 total — a FIXED k (the gate
-    * hardcodes 8 for the tiny corpus) leaves verification quadratic.
-    */
-  def kForCount(n: Long): Int =
-    math.max(8, math.ceil(math.sqrt(math.max(0L, n).toDouble)).toInt)
-
-  /** [[kmeansAssign]] + [[semanticDupPairs]] with the corpus-sized k.
-    * One `count()` buys the parameterization; pass `n` when known.
-    *
-    * RECALL trade (measured, PERF.md round-5): more cells mean more
-    * cross-cell misses — on weakly-clustered data the pair count drops
-    * with k (27,983 → 7,730 at 10× gate scale going k=8 → k=√n). That
-    * is SemDeDup's documented bargain, acceptable when near-dups
-    * co-locate in embedding space (real corpora) — when they may not,
-    * use [[Similarity.lshNearDupPairsAuto]], whose recall is a tunable
-    * guarantee rather than a clustering accident.
-    *
-    * Cache lifecycle: [[kmeansAssign]]'s corpus-sized cache is released
-    * HERE — the pairs are persisted and materialized first (so the
-    * self-join never replays assignment), then the assignment is
-    * dropped. The RETURNED frame is cached; callers done with the
-    * pairs `unpersist()` it (same contract as [[kmeansAssign]]).
-    */
-  def semanticDupPairsAuto(emb: DataFrame, threshold: Double,
-      updates: Int = 1, seed: String = "km42", n: Long = -1L): DataFrame = {
-    val rows = if (n >= 0L) n else emb.count()
-    val assigned = kmeansAssign(emb, kForCount(rows), updates, seed)
-    val pairs = semanticDupPairs(assigned, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    assigned.unpersist()
-    pairs
-  }
 }

@@ -183,16 +183,6 @@ object Robots {
   def crawlDelay(r: RobotsFile, agent: String): Option[Double] =
     groupFor(r, agent).flatMap(_.crawlDelay)
 
-  /** Column form: allowed(robots_txt, agent, path). */
-  def robotsAllowed(robotsTxt: Column, agent: Column,
-      path: Column): Column = {
-    val f = udf { (t: String, a: String, p: String) =>
-      if (t == null || a == null || p == null) None
-      else Some(isAllowed(parse(t), a, p))
-    }
-    f(robotsTxt, agent, path)
-  }
-
   // ---- sitemaps ------------------------------------------------------
 
   final case class SitemapEntry(loc: String, lastmod: Option[String],

@@ -819,27 +819,6 @@ object Similarity {
     }
   }
 
-  /** Corpus-sized nlist: per probe, the centroid scan costs nlist and
-    * the cell scans cost nprobe·n/nlist; √(nprobe·n) balances them —
-    * the classic IVF sizing law. A FIXED nlist (the gate hardcodes 16)
-    * makes cell scans degrade linearly with corpus growth. Capped at
-    * 2^16 (the centroid table broadcasts).
-    */
-  def nlistForCount(n: Long, nprobe: Int = 4): Int = {
-    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    math.min(1 << 16, math.max(16,
-      math.ceil(math.sqrt(nprobe.toDouble * math.max(0L, n))).toInt))
-  }
-
-  /** [[ivfTopK]] with the corpus-sized nlist; one `count()` buys the
-    * parameterization (pass `n` when known).
-    */
-  def ivfTopKAuto(corpus: DataFrame, probes: DataFrame, k: Int,
-      nprobe: Int = 4, seed: Long = 42L, n: Long = -1L): DataFrame = {
-    val rows = if (n >= 0L) n else corpus.count()
-    ivfTopK(corpus, probes, k, nlistForCount(rows, nprobe), nprobe, seed)
-  }
-
   def ivfTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame = {
     val spark = corpus.sparkSession

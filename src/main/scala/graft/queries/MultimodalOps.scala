@@ -448,10 +448,7 @@ object MultimodalOps {
     // the real write path rather than a batch projection.
     "q176_media_routing_streaming" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       import graft.operators.MediaRouter
-      import graft.sources.Journal
-      val root = StreamOps.privateRoot("mr")
       // Identical corpus arithmetic to q171 — the shared oracle demands it.
       val params = Tables.documents(s, d)
         .select($"doc_id".cast("long").as("doc_id"))
@@ -471,46 +468,23 @@ object MultimodalOps {
       }
       val corpus = params.select($"doc_id",
         build($"shape", $"w", $"h", $"nf").as("media"))
-      // Stage as a replayable file stream: 4 files → 4 micro-batches
-      // under maxFilesPerTrigger=1, so triage + sink commit repeatedly.
-      val stage = s"$root/stage"
-      corpus.repartition(4).write.parquet(stage)
-      val src = s.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
       // Triage in-stream (stateless projection: zero exchanges), then
       // serialize the routed frame once; each journal route filters on
       // the already-computed kind, never re-running the parsers.
       // to_json drops null fields, so quarantine payloads carry only
       // doc_id and from_json restores the NULLs the oracle demands.
-      val routed = MediaRouter.route(src)
-        .select($"kind", to_json(struct($"doc_id", $"kind", $"format",
-            $"width".cast("long").as("width"),
-            $"height".cast("long").as("height"), $"n_frames"))
-          .as("payload"))
-      val q = routed.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // r12: ONE spool pass routes all three journals (the
-          // five-parser triage UDF runs once per blob with no persist
-          // at all) — the r11 shape persisted the batch and ran one
-          // filter+spool job per journal, paying the job-launch floor
-          // thrice per batch. Per-journal manifests/markers unchanged.
-          Journal.batchSinkRouted(root, Seq(
-            "media/image" -> ($"kind" === "image"),
-            "media/video" -> ($"kind" === "video"),
-            "media/quarantine" -> $"kind".isNull), df, batchId)
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(600000), "q176 stream drain timed out")
-      val frame = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, kind STRING, format STRING, width BIGINT, " +
-          "height BIGINT, n_frames BIGINT")
-      Seq("media/image", "media/video", "media/quarantine")
-        .map(j => Journal.read(s, root, j).toDF())
-        .reduce(_ unionByName _)
-        .select(from_json($"payload", frame).as("r"))
-        .select($"r.doc_id", $"r.kind", $"r.format", $"r.width",
-          $"r.height", $"r.n_frames")
+      StreamOps.drainRouted(s, "mr", corpus, Seq(
+          "media/image" -> ($"kind" === "image"),
+          "media/video" -> ($"kind" === "video"),
+          "media/quarantine" -> $"kind".isNull),
+          "doc_id BIGINT, kind STRING, format STRING, width BIGINT, " +
+            "height BIGINT, n_frames BIGINT") { src =>
+        MediaRouter.route(src)
+          .select($"kind", to_json(struct($"doc_id", $"kind", $"format",
+              $"width".cast("long").as("width"),
+              $"height".cast("long").as("height"), $"n_frames"))
+            .as("payload"))
+      }
     },
 
     // ---- q177: VBR MP3 duration (VERDICT r9 #5) — the common
@@ -945,9 +919,6 @@ object MultimodalOps {
     // batch gates cannot see live (q167/q176 both caught one).
     "q189_web_pipeline_streaming" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.sources.Journal
-      val root = StreamOps.privateRoot("web")
       val params = Tables.documents(s, d)
         .select($"doc_id".cast("long").as("doc_id"))
         .withColumn("n", (lit(3) + $"doc_id" % 4).cast("int"))
@@ -957,60 +928,37 @@ object MultimodalOps {
       }
       val corpus = params.select($"doc_id",
         build($"doc_id", $"n", $"gz").as("content"))
-      val stage = s"$root/stage"
-      corpus.repartition(4).write.parquet(stage)
-      val src = s.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
       // The whole triage is one stateless projection: archive explode,
       // HTML extraction, URL canonicalization, route decision — zero
       // exchanges before the sink.
-      val recs = graft.operators.Warc.explodeRecords(src,
-        blobCol = "content", keep = Seq("doc_id"))
-      val routed = recs
-        .withColumn("i",
-          regexp_extract($"target_uri", "[?&]x=(\\d+)", 1).cast("long"))
-        .withColumn("url",
-          graft.operators.UrlNorm.urlCanonical($"target_uri"))
-        .withColumn("is_html", $"content_type" === "text/html")
-        // Mask extraction to HTML records AFTER computing it — the
-        // kernel is total (garbage in, counted blocks out), and the
-        // when() keeps quarantine rows' stats NULL as the oracle
-        // demands.
-        .withColumn("hx", graft.operators.HtmlExtract.htmlText(
-          $"payload".cast("string")))
-        .withColumn("h", when($"is_html", $"hx"))
-        .withColumn("route",
-          when(!$"is_html", lit("quarantine"))
-            .when($"h.n_blocks" > 0, lit("keep"))
-            .otherwise(lit("boilerplate")))
-        .select($"route", to_json(struct($"doc_id", $"i", $"route",
-          $"url", length($"h.text").cast("long").as("n_chars"),
-          $"h.n_links".cast("long").as("n_links"))).as("payload"))
-      val q = routed.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // r12: ONE spool pass routes all three journals (the
-          // explode+extract+canonicalize triage runs once per record
-          // with no persist at all) — the r11 shape persisted the
-          // batch and ran one filter+spool job per journal, paying the
-          // job-launch floor thrice per batch. Per-journal
-          // manifests/markers unchanged (batchSinkRouted).
-          Journal.batchSinkRouted(root, Seq(
-            "web/keep" -> ($"route" === "keep"),
-            "web/boilerplate" -> ($"route" === "boilerplate"),
-            "web/quarantine" -> ($"route" === "quarantine")), df, batchId)
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(600000), "q189 stream drain timed out")
-      val frame = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, i BIGINT, route STRING, url STRING, " +
-          "n_chars BIGINT, n_links BIGINT")
-      Seq("web/keep", "web/boilerplate", "web/quarantine")
-        .map(j => Journal.read(s, root, j).toDF())
-        .reduce(_ unionByName _)
-        .select(from_json($"payload", frame).as("r"))
-        .select($"r.doc_id", $"r.i", $"r.route", $"r.url", $"r.n_chars",
-          $"r.n_links")
+      StreamOps.drainRouted(s, "web", corpus, Seq(
+          "web/keep" -> ($"route" === "keep"),
+          "web/boilerplate" -> ($"route" === "boilerplate"),
+          "web/quarantine" -> ($"route" === "quarantine")),
+          "doc_id BIGINT, i BIGINT, route STRING, url STRING, " +
+            "n_chars BIGINT, n_links BIGINT") { src =>
+        graft.operators.Warc.explodeRecords(src,
+            blobCol = "content", keep = Seq("doc_id"))
+          .withColumn("i",
+            regexp_extract($"target_uri", "[?&]x=(\\d+)", 1).cast("long"))
+          .withColumn("url",
+            graft.operators.UrlNorm.urlCanonical($"target_uri"))
+          .withColumn("is_html", $"content_type" === "text/html")
+          // Mask extraction to HTML records AFTER computing it — the
+          // kernel is total (garbage in, counted blocks out), and the
+          // when() keeps quarantine rows' stats NULL as the oracle
+          // demands.
+          .withColumn("hx", graft.operators.HtmlExtract.htmlText(
+            $"payload".cast("string")))
+          .withColumn("h", when($"is_html", $"hx"))
+          .withColumn("route",
+            when(!$"is_html", lit("quarantine"))
+              .when($"h.n_blocks" > 0, lit("keep"))
+              .otherwise(lit("boilerplate")))
+          .select($"route", to_json(struct($"doc_id", $"i", $"route",
+            $"url", length($"h.text").cast("long").as("n_chars"),
+            $"h.n_links".cast("long").as("n_links"))).as("payload"))
+      }
     },
 
     // ---- q192: FLAC — the engine's first REAL compressed-codec
@@ -1232,9 +1180,6 @@ object MultimodalOps {
     // the declared semantics cannot drift.
     "q197_doc_pipeline_streaming" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.sources.Journal
-      val root = StreamOps.privateRoot("docs")
       val build = udf { docId: Long =>
         (docId % 3) match {
           case 0 => graft.operators.PdfFixtures.pdf(docId)
@@ -1245,44 +1190,25 @@ object MultimodalOps {
       val corpus = Tables.documents(s, d)
         .select($"doc_id".cast("long").as("doc_id"))
         .select($"doc_id", build($"doc_id").as("blob"))
-      val stage = s"$root/stage"
-      corpus.repartition(4).write.parquet(stage)
-      val src = s.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
       // One stateless projection: route, extract with the kernel the
       // router chose, count — zero exchanges before the sink.
-      val routed = graft.operators.MediaRouter.route(src, blobCol = "blob")
-        .withColumn("pdf", graft.operators.Pdf.pdfText($"blob"))
-        .withColumn("dx", graft.operators.OfficeDoc.docx($"blob"))
-        .withColumn("n_chars",
-          when($"format" === "pdf", length($"pdf.text"))
-            .when($"format" === "docx", length($"dx.text"))
-            .cast("long"))
-        .withColumn("route",
-          when($"kind" === "document", lit("keep"))
-            .otherwise(lit("quarantine")))
-        .select($"route", to_json(struct($"doc_id", $"format",
-          $"n_chars")).as("payload"))
-      val q = routed.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // r12: ONE spool pass routes both journals (the pdf/docx
-          // extraction runs once per blob with no persist at all) —
-          // the r11 shape persisted the batch and ran one filter+spool
-          // job per journal. Per-journal manifests/markers unchanged.
-          Journal.batchSinkRouted(root, Seq(
-            "docs/keep" -> ($"route" === "keep"),
-            "docs/quarantine" -> ($"route" === "quarantine")), df, batchId)
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(600000), "q197 stream drain timed out")
-      val frame = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, format STRING, n_chars BIGINT")
-      Seq("docs/keep", "docs/quarantine")
-        .map(j => Journal.read(s, root, j).toDF())
-        .reduce(_ unionByName _)
-        .select(from_json($"payload", frame).as("r"))
-        .select($"r.doc_id", $"r.format", $"r.n_chars")
+      StreamOps.drainRouted(s, "docs", corpus, Seq(
+          "docs/keep" -> ($"route" === "keep"),
+          "docs/quarantine" -> ($"route" === "quarantine")),
+          "doc_id BIGINT, format STRING, n_chars BIGINT") { src =>
+        graft.operators.MediaRouter.route(src, blobCol = "blob")
+          .withColumn("pdf", graft.operators.Pdf.pdfText($"blob"))
+          .withColumn("dx", graft.operators.OfficeDoc.docx($"blob"))
+          .withColumn("n_chars",
+            when($"format" === "pdf", length($"pdf.text"))
+              .when($"format" === "docx", length($"dx.text"))
+              .cast("long"))
+          .withColumn("route",
+            when($"kind" === "document", lit("keep"))
+              .otherwise(lit("quarantine")))
+          .select($"route", to_json(struct($"doc_id", $"format",
+            $"n_chars")).as("payload"))
+      }
     },
 
     // ---- q198: XLSX cell extraction — SpreadsheetML through the

@@ -2,9 +2,11 @@ package graft.queries
 
 import java.nio.file.{Files, Path}
 import java.util.Comparator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.sources.Journal
 import graft.streaming.Sequencer
@@ -90,50 +92,25 @@ object StreamOps {
     // validate-before-publish contract (interfaces.go:143-145).
     "q167_ingest_guard_streaming" -> { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       import graft.operators.{Contamination, Dedup}
-      val root = privateRoot("ig")
       val docs = Tables.documents(s, d)
       val evalSet = Contamination.evalShingleSet(
         Dedup.docShingles(docs.filter($"doc_id" % 17 === 0),
           $"doc_id", $"text", 5))
-      // Stage the corpus as a replayable file stream: 4 files → 4
-      // micro-batches under maxFilesPerTrigger=1, so the guard and the
-      // sink commit repeatedly (a single-batch run would not exercise
-      // the per-batch idempotence markers at all).
-      val stage = s"$root/stage"
-      docs.repartition(4).write.parquet(stage)
-      val src = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
       // Observability: the guard publishes per-batch checked/quarantined
       // aggregates (observe → GraftStreamingListener → `query.*.observed
       // .graft_guard.*` counters) — a plan annotation, rows unchanged.
       graft.metrics.GraftMetrics.attachListener(s)
-      val tagged = graft.metrics.GraftMetrics.observeGuard(
-          Contamination.ingestGuardExact(src, evalSet, n = 5))
-        .select($"contaminated",
-          to_json(struct($"doc_id", $"n_eval_hits", $"contaminated"))
-            .as("payload"))
-      val q = tagged.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // r12: ONE spool pass routes both journals (the shingle-probe
-          // UDF runs once per doc with no persist at all) — the r11
-          // shape persisted the batch and ran one filter+spool job per
-          // journal, paying the job-launch floor twice per batch.
-          // Per-journal manifests/markers unchanged (batchSinkRouted).
-          Journal.batchSinkRouted(root, Seq(
-            "guard/quarantine" -> $"contaminated",
-            "guard/train" -> !$"contaminated"), df, batchId)
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      require(q.awaitTermination(600000), "q167 stream drain timed out")
-      val tagSchema = org.apache.spark.sql.types.StructType
-        .fromDDL("doc_id BIGINT, n_eval_hits BIGINT, contaminated BOOLEAN")
-      Journal.read(s, root, "guard/quarantine").toDF()
-        .unionByName(Journal.read(s, root, "guard/train").toDF())
-        .select(from_json($"payload", tagSchema).as("r"))
-        .select($"r.doc_id", $"r.n_eval_hits", $"r.contaminated")
+      drainRouted(s, "ig", docs, Seq(
+          "guard/quarantine" -> $"contaminated",
+          "guard/train" -> !$"contaminated"),
+          "doc_id BIGINT, n_eval_hits BIGINT, contaminated BOOLEAN") { src =>
+        graft.metrics.GraftMetrics.observeGuard(
+            Contamination.ingestGuardExact(src, evalSet, n = 5))
+          .select($"contaminated",
+            to_json(struct($"doc_id", $"n_eval_hits", $"contaminated"))
+              .as("payload"))
+      }
     },
 
     // ---- q31: journal write→read round-trip: events framed as ndjson
@@ -188,6 +165,40 @@ object StreamOps {
         |  FROM events) t
         |WHERE mx IS NULL OR clock > mx""".stripMargin
   )
+
+  /** Streams `corpus` through a routed journal sink and reads the
+    * routes back. The corpus is staged as 4 parquet files and replayed
+    * one file per micro-batch, so `transform` and the sink's commit run
+    * repeatedly (one batch would not exercise the per-batch idempotence
+    * markers). `transform` turns the stream into a frame with a
+    * `payload` column; every micro-batch goes through one
+    * `Journal.batchSinkRouted` spool pass over `routes`, and
+    * `AvailableNow` drains the stream. The result is every route's
+    * payload decoded by the `ddl` schema. The query is stopped on every
+    * exit, so a timeout or a failure never leaves it running on the
+    * session.
+    */
+  private[queries] def drainRouted(s: SparkSession, tag: String,
+      corpus: DataFrame, routes: Seq[(String, Column)], ddl: String)(
+      transform: DataFrame => DataFrame): DataFrame = {
+    val root = privateRoot(tag)
+    val stage = s"$root/stage"
+    corpus.repartition(4).write.parquet(stage)
+    val src = s.readStream.schema(corpus.schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+    val q = transform(src).writeStream
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        Journal.batchSinkRouted(root, routes, df, batchId)
+      }
+      .option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    try require(q.awaitTermination(600000), s"$tag stream drain timed out")
+    finally q.stop()
+    routes.map { case (j, _) => Journal.read(s, root, j).toDF() }
+      .reduce(_ unionByName _)
+      .select(from_json(col("payload"), StructType.fromDDL(ddl)).as("r"))
+      .select("r.*")
+  }
 
   /** A journal root of its own for one query invocation, so
     * concurrent runs never share one. It is deleted when the JVM exits,

@@ -1395,43 +1395,4 @@ object Journal {
       readFragmentSlice(frag, readFrom, frag.end, hc.value)
     }
   }
-
-  /** Read all journals under `root` matching a label-selector-resolved
-    * journal list (P3): union of per-journal reads.
-    */
-  def readAll(spark: SparkSession, root: String, journals: Seq[String]): Dataset[Envelope] =
-    journals.map(read(spark, root, _)).reduce(_.unionAll(_))
-
-  /** Streaming read: Spark's file source over the fragment index — new
-    * fragments are discovered per micro-batch (the blocking-tail read as
-    * repeated polls, S1). Payload-only envelopes (offset -1): exact
-    * offsets in streaming mode arrive with a DSv2 MicroBatchStream in a
-    * later round.
-    */
-  def readStream(spark: SparkSession, root: String, journal: String): DataFrame = {
-    // This legacy path decodes via Hadoop's extension-registered codecs:
-    // ".gz" is registered, plain text is fine, but ".zst"/".sz" are NOT
-    // (snappy-framed has no Hadoop codec at all) — the text source would
-    // stream compressed bytes as garbage lines with no error. The DSv2
-    // `journal` format decodes every codec; use it for those journals.
-    val codecs = listFragments(root, journal).map(_.codec).toSet
-    val unsupported = codecs -- Set("gz", "none", "raw")
-    require(unsupported.isEmpty,
-      s"Journal.readStream cannot decode codec(s) $unsupported — read with " +
-        """spark.readStream.format("journal") instead""")
-    // The require above can only see fragments that exist NOW; a writer
-    // switching to zst/sz mid-query would otherwise feed the text
-    // source compressed bytes as garbage lines. The glob pins the query
-    // to the codecs it can decode — a later unsupported fragment is
-    // EXCLUDED (visible as a head/count gap) rather than silently
-    // garbled. The DSv2 `journal` source decodes per-fragment codecs
-    // and has neither limitation.
-    spark.readStream
-      .option("pathGlobFilter", "*-*-*.{gz,none,raw}")
-      .text(new HPath(root, journal).toString)
-      .select(
-        lit(journal).as("journal"),
-        lit(-1L).as("begin"), lit(-1L).as("end"),
-        col("value").as("payload"))
-  }
 }

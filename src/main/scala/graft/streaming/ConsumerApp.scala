@@ -68,9 +68,8 @@ object ConsumerApp {
     * pattern across chained pipelines. Returns false on timeout.
     *
     * Reads the committed offset from query progress — works with the
-    * DSv2 `journal` source (offset shape `{"head":N}`); the legacy
-    * file-based `Journal.readStream` path reports file-log offsets the
-    * barrier can't interpret. In a multi-source query, only sources
+    * DSv2 `journal` source (offset shape `{"head":N}`). In a
+    * multi-source query, only sources
     * whose progress description names this journal (`journal:<name>`)
     * are consulted — another journal's larger head can't release the
     * barrier early.

@@ -141,39 +141,6 @@ object Sequencer {
       }
   }
 
-  /** [[sequenceStream]] on Spark 4's `transformWithState` API — the
-    * successor to flatMapGroupsWithState, with typed per-key state
-    * handles and built-in state TTL. Same semantics as
-    * [[sequenceStream]] (shared `advance` state machine); requires the
-    * RocksDB state store provider.
-    */
-  def sequenceStreamTws(
-      ds: Dataset[SeqEnvelope],
-      producerTtlMs: Long = 24L * 3600 * 1000): Dataset[SeqEnvelope] = {
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-    ds.groupByKey(e => (e.journal, e.producer))
-      .transformWithState(
-        new StatefulProcessor[(String, String), SeqEnvelope, SeqEnvelope] {
-          @transient private var state:
-            org.apache.spark.sql.streaming.ValueState[SeqState] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            state = getHandle.getValueState[SeqState]("seq",
-              org.apache.spark.sql.Encoders.product[SeqState],
-              TTLConfig(java.time.Duration.ofMillis(producerTtlMs)))
-          override def handleInputRows(key: (String, String),
-              rows: Iterator[SeqEnvelope],
-              timerValues: TimerValues): Iterator[SeqEnvelope] = {
-            val st0 = if (state.exists()) state.get() else initialState
-            val (out, st1) = advance(st0, rows.toVector.sortBy(_.begin).iterator)
-            state.update(st1)
-            out.iterator
-          }
-        },
-        TimeMode.ProcessingTime(),
-        OutputMode.Append())
-  }
-
   /** Streaming sequencing via flatMapGroupsWithState: state persists in
     * the state store across micro-batches; envelopes are sorted by offset
     * within each batch (cross-batch order is the source's contract, as in

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -32,11 +32,8 @@ object StreamingOrder {
     * query (every checkpoint-recovery replay of the batch fails the
     * same way), where a skipped row is just a skipped row.
     */
-  /** Shared keying preamble: null-drop + the EpochShuffle s:/o: key
-    * family — ONE definition so the two state-API variants cannot
-    * drift. */
-  private def keyedByShard(docs: DataFrame, id: Column, seed: String,
-      shards: Int): Dataset[(Long, Int, String)] = {
+  def assign(docs: DataFrame, id: Column, seed: String,
+      shards: Int): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -46,70 +43,18 @@ object StreamingOrder {
       .withColumn("shard", EpochShuffle.shardOf(col("doc_id"), seed, shards))
       .withColumn("okey", EpochShuffle.orderKeyOf(col("doc_id"), seed))
       .as[(Long, Int, String)]
-  }
-
-  /** Shared per-group kernel: sort the micro-batch slice by the seeded
-    * key and assign positions from the counter; returns the rows and
-    * the advanced counter. */
-  private def assignSlice(shard: Int, rows: Iterator[(Long, Int, String)],
-      next0: Long): (Vector[(Int, Long, Long)], Long) = {
-    var next = next0
-    val out = rows.toVector.sortBy(r => (r._3, r._1))
-      .map { case (d, _, _) => val r = (shard, next, d); next += 1; r }
-    (out, next)
-  }
-
-  def assign(docs: DataFrame, id: Column, seed: String,
-      shards: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    keyedByShard(docs, id, seed, shards)
       .groupByKey(_._2)
       .flatMapGroupsWithState[Long, (Int, Long, Long)](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (shard, rows, state: GroupState[Long]) =>
-          val (out, next) = assignSlice(shard, rows,
-            state.getOption.getOrElse(0L))
+          // Sort the micro-batch slice by the seeded key and assign
+          // positions from the shard's counter.
+          var next = state.getOption.getOrElse(0L)
+          val out = rows.toVector.sortBy(r => (r._3, r._1))
+            .map { case (d, _, _) => val r = (shard, next, d); next += 1; r }
           state.update(next)
           out.iterator
       }
-      .toDF("shard", "pos", "doc_id")
-  }
-
-  /** [[assign]] on Spark 4's `transformWithState` API (the
-    * flatMapGroupsWithState successor — typed per-key state handles;
-    * the same counter semantics, shared keying). NO state TTL on
-    * purpose: an expired counter would restart a shard at position 0
-    * and violate the never-reuse contract. Requires the RocksDB state
-    * store provider.
-    */
-  def assignTws(docs: DataFrame, id: Column, seed: String,
-      shards: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig}
-    keyedByShard(docs, id, seed, shards)
-      .groupByKey(_._2)
-      .transformWithState(
-        new StatefulProcessor[Int, (Long, Int, String), (Int, Long, Long)] {
-          @transient private var next:
-            org.apache.spark.sql.streaming.ValueState[Long] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-            next = getHandle.getValueState[Long]("next",
-              org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-          override def handleInputRows(shard: Int,
-              rows: Iterator[(Long, Int, String)],
-              timerValues: TimerValues): Iterator[(Int, Long, Long)] = {
-            val (out, n) = assignSlice(shard, rows,
-              if (next.exists()) next.get() else 0L)
-            next.update(n)
-            out.iterator
-          }
-        },
-        // No timers, no TTL: TimeMode.None skips the timer machinery
-        // and makes the never-expire counter contract structural.
-        TimeMode.None(),
-        OutputMode.Append())
       .toDF("shard", "pos", "doc_id")
   }
 }

@@ -35,4 +35,21 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .count()
     assert(n == 1)
   }
+
+  test("engine code builds sessions only through Engine") {
+    // One session recipe: a second SparkSession.builder() in main code
+    // runs queries without the extension or the engine's conventions.
+    val main = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(main), s"no $main under ${sys.props("user.dir")}")
+    val stream = java.nio.file.Files.walk(main)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Engine.scala")
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains("SparkSession.builder("))
+        .map(main.relativize(_).toString).toVector.sorted
+    } finally stream.close()
+    assert(offenders.isEmpty, s"SparkSession.builder() outside Engine.scala: $offenders")
+  }
 }

@@ -33,17 +33,28 @@ class GateSmokeSpec extends SparkSpec {
 
   test("all queries execute at sf0.001; entry returns rows") {
     val regexLambdas = Seq.newBuilder[String]
+    val leftRunning = Seq.newBuilder[String]
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        try {
-          val df = fn(spark, "/root/testdata/sf0.001")
-          if (regexInLambda(df.queryExecution.optimizedPlan)) regexLambdas += name
-          df.write.format("noop").mode("overwrite").save()
-          None
-        }
-        catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+        val before = spark.streams.active.map(_.id).toSet
+        val failure =
+          try {
+            val df = fn(spark, "/root/testdata/sf0.001")
+            if (regexInLambda(df.queryExecution.optimizedPlan)) regexLambdas += name
+            df.write.format("noop").mode("overwrite").save()
+            None
+          }
+          catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+        // A query that returns with its stream still running leaves it
+        // on the shared session; stop it so the next query starts clean.
+        val left = spark.streams.active.filterNot(q => before(q.id))
+        if (left.nonEmpty) leftRunning += name
+        left.foreach(_.stop())
+        failure
     }
     assert(failures.isEmpty, s"queries failed at sf0.001:\n${failures.mkString("\n")}")
+    assert(leftRunning.result().isEmpty,
+      s"streaming queries left running: ${leftRunning.result().mkString(", ")}")
     assert(regexLambdas.result().isEmpty,
       s"regex inside a higher-order function lambda: ${regexLambdas.result().mkString(", ")}")
     assert(SparkEntry.entry(spark).count() > 0, "entry() must return rows")

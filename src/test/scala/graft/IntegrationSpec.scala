@@ -21,7 +21,8 @@ class IntegrationSpec extends SparkSpec {
     Journal.append(batch1.toDF("payload"), root, "docs", "gz")
 
     val counts = WordCountApp.ngramCounts(
-      Journal.readStream(spark, root, "docs").withColumnRenamed("payload", "text"), 2)
+      spark.readStream.format("journal").option("root", root)
+        .option("journal", "docs").load().withColumnRenamed("payload", "text"), 2)
     val q = counts.writeStream
       .format("memory").queryName("e2e_counts")
       .option("checkpointLocation", Files.createTempDirectory("graft-e2e-ckpt").toString)
@@ -65,7 +66,8 @@ class IntegrationSpec extends SparkSpec {
 
     Journal.append(Seq("the quick fox", "the quick dog").toDF("payload"), root, "docs", "gz")
     val counts = WordCountApp.ngramCounts(
-      Journal.readStream(spark, root, "docs").withColumnRenamed("payload", "text"), 2)
+      spark.readStream.format("journal").option("root", root)
+        .option("journal", "docs").load().withColumnRenamed("payload", "text"), 2)
     val q = counts.writeStream
       .outputMode("update") // changed (n_gram, cnt) rows per micro-batch
       .option("checkpointLocation", Files.createTempDirectory("graft-sql-ckpt").toString)

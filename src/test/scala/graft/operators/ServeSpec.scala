@@ -80,18 +80,6 @@ class ServeSpec extends SparkSpec {
     }
   }
 
-  test("corpus-sized k and nlist follow their balance laws") {
-    import graft.operators.Clustering.kForCount
-    import Similarity.nlistForCount
-    // k = sqrt(n) balances n*k assignment vs n^2/k verification.
-    assert(kForCount(0) == 8 && kForCount(64) == 8)
-    assert(kForCount(10000) == 100)
-    // nlist = sqrt(nprobe*n) balances centroid scan vs cell scans.
-    assert(nlistForCount(64, 4) == 16)
-    assert(nlistForCount(10000, 4) == 200)
-    assert(nlistForCount(Long.MaxValue >> 8, 4) == (1 << 16)) // capped
-  }
-
   test("lshNearDupPairsAuto finds the pairs the fixed gate config finds") {
     import spark.implicits._
     // A corpus with two exact near-dup clusters + noise: any sane

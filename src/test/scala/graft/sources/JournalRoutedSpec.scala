@@ -4,11 +4,10 @@ import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** Pins the r12 one-pass routed sink ([[Journal.batchSinkRouted]]) to
-  * the semantics of the sequential per-journal [[Journal.batchSink]]
-  * calls it replaced in the streaming gates: byte-identical fragments
-  * per journal, the same exactly-once marker protocol per (journal,
-  * batch), and the same crash-recovery matrix.
+/** The one-pass routed sink ([[Journal.batchSinkRouted]]): the
+  * exactly-once marker protocol per (journal, batch), route selection,
+  * and crash recovery. The bytes it writes are pinned by
+  * `JournalWriteGoldenSpec`.
   */
 class JournalRoutedSpec extends SparkSpec {
 
@@ -30,44 +29,6 @@ class JournalRoutedSpec extends SparkSpec {
   private def routes = Seq(
     "j/keep" -> (col("route") === "keep"),
     "j/quarantine" -> (col("route") === "quarantine"))
-
-  /** One multi-route pass against per-route passes of the same write
-    * kernel: `batchSink` is the one-route case of `batchSinkRouted`, so
-    * this checks that routing splits rows and fragment boundaries the
-    * way separate passes do. The byte pin of what the kernel writes is
-    * `JournalWriteGoldenSpec`.
-    */
-  test("routed sink produces byte-identical fragments to sequential batchSink") {
-    // Stage through parquet, as the streaming gates do: a file scan's
-    // row-to-partition assignment is fixed by the splits, so the
-    // sequential form's filters and the routed form see identical
-    // partitioning. (A round-robin repartition would NOT give that:
-    // Catalyst pushes the route filter below the exchange in the
-    // sequential form, legally re-dealing rows — different fragment
-    // boundaries, same rows.)
-    val stage = tmpRoot() + "/stage"
-    frame(90).write.parquet(stage)
-    val df = spark.read.parquet(stage)
-    val seqRoot = tmpRoot()
-    Journal.batchSink(seqRoot, "j/keep", "gz")(
-      df.filter(col("route") === "keep").select(col("payload")), 0L)
-    Journal.batchSink(seqRoot, "j/quarantine", "gz")(
-      df.filter(col("route") === "quarantine").select(col("payload")), 0L)
-
-    val rtRoot = tmpRoot()
-    Journal.batchSinkRouted(rtRoot, routes, df, 0L)
-
-    for (j <- Seq("j/keep", "j/quarantine")) {
-      val a = Journal.listFragments(seqRoot, j).map(_.name)
-      val b = Journal.listFragments(rtRoot, j).map(_.name)
-      // Fragment NAME = offsets + content SHA: equality is
-      // byte-identity of the whole journal.
-      assert(a.nonEmpty && a == b, s"$j fragments: $a vs $b")
-    }
-    // Rows matching no route are dropped, exactly as no filter keeps them.
-    assert(Journal.read(spark, rtRoot, "j/keep").count() == 30)
-    assert(Journal.read(spark, rtRoot, "j/quarantine").count() == 30)
-  }
 
   test("idempotent per (journal, batchId); offsets continue across batches") {
     val root = tmpRoot()

@@ -530,7 +530,8 @@ class JournalSpec extends SparkSpec {
     import spark.implicits._
     val root = tmpRoot()
     Journal.append((1 to 10).map(i => s"m$i").toDF("payload"), root, "sj", "gz")
-    val q = Journal.readStream(spark, root, "sj")
+    val q = spark.readStream.format("journal")
+      .option("root", root).option("journal", "sj").load()
       .writeStream.format("memory").queryName("journal_stream")
       .option("checkpointLocation", tmpRoot()).start()
     q.processAllAvailable()

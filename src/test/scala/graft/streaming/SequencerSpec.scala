@@ -192,48 +192,6 @@ class SequencerSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState sequencing matches flatMapGroupsWithState across restart") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, // transformWithState requires RocksDB
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ckpt = Files.createTempDirectory("graft-tws-ckpt").toString
-      val outDir = Files.createTempDirectory("graft-tws-out").toString
-      val input = MemoryStream[SeqEnvelope](spark)
-      def drain(expectRows: Long): Unit = {
-        val q = Sequencer.sequenceStreamTws(input.toDS()).writeStream
-          .format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        drainAndStop(q, expectRows)
-      }
-      // batch 1: open span (nothing commits), plus an OUTSIDE_TXN row
-      input.addData(env("T", 1, ContinueTxn), env("T", 2, ContinueTxn),
-        env("U", 7, OutsideTxn))
-      drain(expectRows = 3)
-      val schema = org.apache.spark.sql.Encoders.product[SeqEnvelope].schema
-      assert(spark.read.schema(schema).parquet(outDir)
-        .as[SeqEnvelope].collect().map(_.producer).toSeq == Seq("U"))
-      // restart: the ACK commits the span carried in TWS state
-      input.addData(env("T", 3, AckTxn), env("T", 2, ContinueTxn)) // dup dropped
-      drain(expectRows = 2)
-      val out = spark.read.schema(schema).parquet(outDir).as[SeqEnvelope]
-        .collect().sortBy(e => (e.producer, e.clock))
-      assert(out.map(e => (e.producer, e.clock)).toVector ==
-        Vector(("T", 1L), ("T", 2L), ("T", 3L), ("U", 7L)),
-        s"got ${out.toVector}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(conf, v)
-        case None => spark.conf.unset(conf)
-      }
-    }
-  }
-
   /** Drain an AvailableNow sequencer query, then stop. Neither
     * awaitTermination nor processAllAvailable works here: pending
     * processing-time state timers keep the query alive (and

@@ -55,6 +55,20 @@ class StreamingOrderSpec extends SparkSpec {
       assert(rows.map(_._2).sorted == (0L until rows.length.toLong).toVector,
         s"shard $sh not dense: $rows")
     }
+    // Batch 1 matches a pure md5 mirror of the keying exactly:
+    // shard = first 8 hex of md5("s:so1:"+id) % 2, in-shard order by
+    // md5("o:so1:"+id).
+    def md5hex(s: String): String = java.security.MessageDigest
+      .getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val want = (0L until 20L)
+      .groupBy(d => (java.lang.Long.parseLong(
+        md5hex(s"s:so1:$d").take(8), 16) % 2).toInt)
+      .flatMap { case (sh, ids) =>
+        ids.sortBy(d => (md5hex(s"o:so1:$d"), d)).zipWithIndex
+          .map { case (d, p) => (sh, p.toLong, d) }
+      }.toSet
+    assert(r1.toSet == want, "batch-1 order diverged from the md5 mirror")
     // Restart from checkpoint: counters continue, nothing re-deals.
     input.addData(20L until 30L: _*)
     runQuery(expectRows = 10)
@@ -85,71 +99,5 @@ class StreamingOrderSpec extends SparkSpec {
     val rep = spark.read.schema(schema).parquet(out2)
       .as[(Int, Long, Long)].collect().toVector
     assert(rep.sorted == r1.sorted, "same batch + seed must reproduce")
-  }
-
-  test("transformWithState variant matches flatMapGroupsWithState across restart") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.Trigger
-    val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, // transformWithState requires RocksDB
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sot-ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft-sot-out").toString
-      val input = MemoryStream[Long](spark)
-      def drain(expectRows: Long): Unit =
-        drainAndStop(StreamingOrder.assignTws(input.toDF(), $"value",
-            seed = "so1", shards = 2)
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start(),
-          expectRows)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("shard",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType)))
-      def readOut() = spark.read.schema(schema).parquet(outDir)
-        .as[(Int, Long, Long)].collect().toVector
-      input.addData(0L until 20L: _*)
-      drain(expectRows = 20)
-      val r1 = readOut()
-      // Batch 1 must match the pure md5 mirror of the EpochShuffle
-      // keying exactly: shard = first 8 hex of md5("s:so1:"+id) % 2,
-      // in-shard order by md5("o:so1:"+id).
-      def md5hex(s: String): String = java.security.MessageDigest
-        .getInstance("MD5").digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val want = (0L until 20L)
-        .groupBy(d => (java.lang.Long.parseLong(
-          md5hex(s"s:so1:$d").take(8), 16) % 2).toInt)
-        .flatMap { case (sh, ids) =>
-          ids.sortBy(d => (md5hex(s"o:so1:$d"), d)).zipWithIndex
-            .map { case (d, p) => (sh, p.toLong, d) }
-        }.toSet
-      assert(r1.toSet == want, "TWS batch-1 order diverged from the mirror")
-      // Restart from checkpoint; batch-1 assignments must be immutable.
-      input.addData(20L until 30L: _*)
-      drain(expectRows = 10)
-      val r2 = readOut()
-      assert(r2.length == 30)
-      r2.groupBy(_._1).foreach { case (sh, rs) =>
-        assert(rs.map(_._2).sorted == (0L until rs.length.toLong).toVector,
-          s"shard $sh not dense across TWS restart")
-      }
-      val m1 = r1.map(r => r._3 -> (r._1, r._2)).toMap
-      val m2 = r2.map(r => r._3 -> (r._1, r._2)).toMap
-      assert(m1.forall { case (d, sp) => m2(d) == sp },
-        "TWS append-only contract violated: an existing doc moved")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(conf, v)
-        case None => spark.conf.unset(conf)
-      }
-    }
   }
 }
