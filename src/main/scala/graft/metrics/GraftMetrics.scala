@@ -120,9 +120,9 @@ object GraftMetrics {
   }
 
   /** Attach the guard's observed metrics to a (batch or streaming)
-    * frame tagged by [[graft.operators.Contamination.ingestGuardExact]]
-    * or `ingestGuard`: per batch, `checked` rows and `quarantined`
-    * (contaminated=true) rows. Streaming: harvested into
+    * frame tagged by [[graft.operators.Contamination.ingestGuardExact]]:
+    * per batch, `checked` rows and `quarantined` (contaminated=true)
+    * rows. Streaming: harvested into
     * `query.<name>.observed.graft_guard.*` by
     * [[GraftStreamingListener]]; batch: read via Spark's Observation
     * API. A pure plan annotation (CollectMetrics) — rows pass through

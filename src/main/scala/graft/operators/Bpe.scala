@@ -51,7 +51,7 @@ object Bpe {
     * adoption time). Stops early if no pair occurs twice.
     */
   def trainMerges(docs: DataFrame, id: Column, text: Column,
-      rounds: Int, aggPartitions: Int = 8): DataFrame = {
+      rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     require(rounds > 0, s"rounds must be positive, got $rounds")
@@ -62,10 +62,10 @@ object Bpe {
     // scale), so the reduce side of the count is a few KB no matter
     // how big the corpus is, while map-side partial agg still
     // collapses counts to the pair vocabulary before the exchange.
-    // `aggPartitions` sizes the reduce side: the default suits pair
-    // vocabularies up to ~10 M; a web-scale early-round vocabulary
-    // wants ~vocab²·16B/64MiB partitions.
-    IterLoop.tinyReduce(spark, aggPartitions) {
+    // IterLoop's fixed reduce width suits pair vocabularies up to
+    // ~10 M; a web-scale early-round vocabulary would want
+    // ~vocab²·16B/64MiB partitions.
+    IterLoop.tinyReduce(spark) {
       trainMergesLoop(docs, id, text, rounds)
     }
   }

@@ -56,28 +56,12 @@ object Contamination {
     out
   }
 
-  /** Broadcastable eval-set shingle sketch for [[ingestGuard]]: the
-    * distinct 64-bit shingle hashes of the eval docs folded into a
-    * Bloom filter. Sized from the exact distinct count (eval sets are
-    * benchmark suites — a count over them is trivial); at fpp 1e-3 a
-    * 10M-shingle eval set costs ~18 MB, comfortably broadcastable.
-    * `evalSh` is (doc_id, sh) from [[Dedup.docShingles]].
-    */
-  def evalShingleBloom(evalSh: DataFrame,
-      fpp: Double = 0.001): org.apache.spark.util.sketch.BloomFilter = {
-    val flat = evalSh.select(explode(col("sh")).as("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try flat.stat.bloomFilter("h", math.max(1L, flat.count()), fpp)
-    finally flat.unpersist()
-  }
-
   /** Exact broadcastable eval-set shingle table for [[ingestGuardExact]]:
     * the distinct 64-bit shingle hashes of the eval docs, collected and
     * sorted for binary-search probing. 8 bytes per distinct shingle
-    * (~80 MB at a 10M-shingle eval set) vs the Bloom's ~14 bits — use
-    * the Bloom form when the eval set outgrows comfortable broadcast;
-    * below that, the exact set buys determinism (zero false positives,
-    * hit counts identical to [[ngramOverlap]]'s by construction).
+    * (~80 MB at a 10M-shingle eval set); the exact set buys
+    * determinism (zero false positives, hit counts identical to
+    * [[ngramOverlap]]'s by construction).
     * `evalSh` is (doc_id, sh) from [[Dedup.docShingles]].
     */
   def evalShingleSet(evalSh: DataFrame): Array[Long] = {
@@ -87,26 +71,33 @@ object Contamination {
     arr
   }
 
-  /** Exact-set variant of [[ingestGuard]]: probes a broadcast sorted
-    * array of the eval set's distinct shingle hashes instead of a Bloom
-    * sketch. Deterministic — `n_eval_hits` equals the distinct shared
-    * shingle count the exact batch scan ([[ngramOverlap]]) reports, and
-    * `contaminated` equals its tag set restricted to training docs — so
-    * this form IS oracle-gateable (q166, and q167 end-to-end through
-    * the streaming quarantine/train journal route) where the Bloom
-    * form's one-sided error is not. Same stateless-projection shape:
-    * works on batch and streaming frames, no shuffle, corpus scanned
-    * once.
+  /** INGEST-TIME contamination guard — the streaming counterpart of
+    * [[ngramOverlap]], and the engine's analog of the reference's
+    * per-message Validator (message/interfaces.go:143-145): tag each
+    * document BEFORE it lands in a journal, so contaminated docs can be
+    * routed to quarantine at write time instead of discovered by the
+    * next batch scan.
+    *
+    * A stateless projection (works identically on batch and streaming
+    * frames, no shuffle, corpus scanned once): per doc, the
+    * [[Dedup.shingleHashes]] kernel (the SAME tokenize/hash as the
+    * batch path) probes a broadcast sorted array of the eval set's
+    * distinct shingle hashes. Deterministic — `n_eval_hits` equals the
+    * distinct shared shingle count the exact batch scan
+    * ([[ngramOverlap]]) reports, and `contaminated` equals its tag set
+    * restricted to training docs — so the guard is oracle-gated (q166,
+    * and q167 end-to-end through the streaming quarantine/train
+    * journal route).
     *
     * Deliberately a UDF, not a codegen'd Expression (round-9 decision,
     * measured): the kernel is tokenize+shingle-dominated — the exact
-    * sorted-array probe and the Bloom probe land within 20% of each
-    * other end-to-end (33 K vs 28 K docs/s, PERF.md round-8 guard
-    * addendum), so a codegen'd binary search could reclaim at most a
-    * slice of that 20%, while the tokenizer itself is intrinsically
-    * procedural and SHARED with the batch path (Dedup.shingleHashes —
-    * splitting the kernel across an Expression boundary would let the
-    * two paths drift, the exact bug class q166/q167 exist to prevent).
+    * sorted-array probe ran within 20% of a Bloom-filter probe
+    * end-to-end (33 K vs 28 K docs/s, PERF.md round-8 guard addendum),
+    * so a codegen'd binary search could reclaim at most a slice of
+    * that 20%, while the tokenizer itself is intrinsically procedural
+    * and SHARED with the batch path (Dedup.shingleHashes — splitting
+    * the kernel across an Expression boundary would let the two paths
+    * drift, the exact bug class q166/q167 exist to prevent).
     */
   def ingestGuardExact(docs: DataFrame, evalShingles: Array[Long],
       n: Int, textCol: String = "text"): DataFrame = {
@@ -121,47 +112,6 @@ object Contamination {
         var i = 0
         while (i < hs.length) {
           if (java.util.Arrays.binarySearch(bc.value, hs(i)) >= 0) c += 1
-          i += 1
-        }
-        c
-      }
-    }
-    docs.withColumn("n_eval_hits", hits(col(textCol)))
-      .withColumn("contaminated", col("n_eval_hits") > 0)
-  }
-
-  /** INGEST-TIME contamination guard — the streaming counterpart of
-    * [[ngramOverlap]], and the engine's analog of the reference's
-    * per-message Validator (message/interfaces.go:143-145): tag each
-    * document BEFORE it lands in a journal, so contaminated docs can be
-    * routed to quarantine at write time instead of discovered by the
-    * next batch scan.
-    *
-    * A stateless projection over the stream (works identically on batch
-    * and streaming frames): per doc, the [[Dedup.shingleHashes]] kernel
-    * (the SAME tokenize/hash as the batch path) probes the broadcast
-    * Bloom sketch; `n_eval_hits` counts distinct shingles the sketch
-    * claims — distinct ONLY because [[Dedup.shingleHashes]]'s contract
-    * is to return deduplicated hashes (asserted in DedupSpec; a change
-    * there would silently change this column's meaning) —
-    * `contaminated` flags any hit. Bloom error is one-sided:
-    * every doc the batch scan would report IS tagged (no false
-    * negatives); false positives over-tag at the sketch's fpp and are
-    * settled by the exact batch pass — the right trade for a gate whose
-    * miss cost is an eval-set leak into training data.
-    */
-  def ingestGuard(docs: DataFrame,
-      bloom: org.apache.spark.util.sketch.BloomFilter,
-      n: Int, textCol: String = "text"): DataFrame = {
-    val bc = docs.sparkSession.sparkContext.broadcast(bloom)
-    val hits = udf { t: String =>
-      if (t == null) 0
-      else {
-        val hs = Dedup.shingleHashes(t, n)
-        var c = 0
-        var i = 0
-        while (i < hs.length) {
-          if (bc.value.mightContainLong(hs(i))) c += 1
           i += 1
         }
         c

@@ -55,7 +55,7 @@ object Dedup {
 
   /** The fused tokenize → n-gram shingle → hash → dedupe kernel of
     * [[docShingles]], per document — shared with the streaming ingest
-    * guard ([[Contamination.ingestGuard]]) so the two paths cannot
+    * guard ([[Contamination.ingestGuardExact]]) so the two paths cannot
     * drift on tokenization or hashing. Returns the DISTINCT shingle
     * hashes, empty when the text has fewer than `n` tokens.
     */

@@ -44,8 +44,12 @@ private[graft] object IterLoop {
     org.apache.spark.sql.graft.ColumnBridge.rddLeaf(df)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+  /** Reduce width of a [[tinyReduce]] scope: both callers' bounded
+    * reduce sides (k centroids, a pair vocabulary) fit 8 tasks. */
+  private val ReduceWidth = 8
+
   /** Run `body` with AQE off and `spark.sql.shuffle.partitions`
-    * pinned to `reduceWidth`; always restores the session's previous
+    * pinned to [[ReduceWidth]]; always restores the session's previous
     * values. Single-session mutation — an UNRELATED query submitted on
     * the same session during `body` would observe the loop confs, the
     * standing caveat of any session-conf scope in Spark; a host
@@ -57,10 +61,10 @@ private[graft] object IterLoop {
     * capture the first loop's confs as the "previous" values and leave
     * AQE off on the session forever after both unwind.
     */
-  def tinyReduce[A](spark: SparkSession, reduceWidth: Int = 8)(body: => A): A =
+  def tinyReduce[A](spark: SparkSession)(body: => A): A =
     scopeLock.computeIfAbsent(spark, _ => new Object).synchronized {
       val confs = Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> reduceWidth.toString)
+        "spark.sql.shuffle.partitions" -> ReduceWidth.toString)
       val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try body

@@ -240,26 +240,15 @@ object Retrieval {
     * micro-batch of (query_id, terms) probes [[bm25ProbeIndex]] — the
     * probed term-bucket set is data-dependent, so partition pruning is
     * planned batch by batch via foreachBatch — and appends per-query
-    * top-k rows to `outPath`. At-least-once per batch, identical rows
-    * on replay (same caveat and remedy as the IVF serving tier).
+    * top-k rows to `outPath`, releasing each batch's cached result
+    * after the append. The serve loop is the ANN indexes' one
+    * (at-least-once per batch, identical rows on replay).
     */
   def bm25StreamingServe(queryStream: DataFrame, path: String,
       outPath: String, checkpoint: String, k: Int,
       buckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // bm25ProbeIndex persists its scored table under a
-          // caller-releases contract: unpersist after the write or a
-          // long-running serve pins one cache entry per micro-batch
-          // until executors thrash (CacheManager holds them forever).
-          val hits = bm25ProbeIndex(batch.sparkSession, path, batch, k, buckets)
-          try hits.write.mode("append").parquet(outPath)
-          finally hits.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    Similarity.serveBatches(queryStream, outPath, checkpoint)(batch =>
+      bm25ProbeIndex(batch.sparkSession, path, batch, k, buckets))
 
   /** Late-interaction (ColBERT-style) retrieval: score(q, d) =
     * Σ_{qt ∈ q} max_{dt ∈ d} sim(qt, dt) — per query token, the BEST

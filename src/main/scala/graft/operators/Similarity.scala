@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -35,16 +37,9 @@ object Similarity {
     * [[cosineFused]]); the math (index-order double accumulation) is
     * identical to the column form.
     */
-  def bruteTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val joined = corpus.as("c").join(
-        broadcast(probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"))),
-        col("c.vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("c.vec_id").as("vec_id"),
-        graft.operators.Curation.floorRound(graft.functions.F.vec_cosine(col("pe"), col("c.embedding")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+  def bruteTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    topPerProbe(pairs(corpus, probeSide(probes)), "sim",
+      graft.functions.F.vec_cosine(col("pe"), col("embedding")), k)
 
   /** Hard-negative mining for embedding-model training: for each probe,
     * the k most cosine-similar vectors whose LABEL DIFFERS from the
@@ -106,13 +101,6 @@ object Similarity {
         lit(s" != plane dim $dim"))))
   }
 
-  /** Embedding-cosine near-duplicate pairs: every (va < vb) pair with
-    * cosine >= threshold. The corpus side is broadcast when it fits
-    * (probes stream past it with zero shuffle); at 100 TB the same
-    * verification runs only on LSH-bucket-equal candidates
-    * ([[lshBucket]] self-join — identical shape to [[Dedup.minhashLshPairs]]'
-    * band join), trading bounded recall for a linear-ish candidate set.
-    */
   /** Hot-path cosine/dot/norm: the native codegen kernels
     * ([[graft.functions.VecOps]] via `F.vec_cosine`/`vec_dot`/
     * `vec_norm`) — they read Catalyst `ArrayData` in place, where a
@@ -131,6 +119,13 @@ object Similarity {
   def cosineFused(a: Column, b: Column): Column =
     graft.functions.F.vec_cosine(a, b)
 
+  /** Embedding-cosine near-duplicate pairs: every (va < vb) pair with
+    * cosine >= threshold. The corpus side is broadcast when it fits
+    * (probes stream past it with zero shuffle); at 100 TB the same
+    * verification runs only on LSH-bucket-equal candidates
+    * ([[lshBucket]] self-join — identical shape to [[Dedup.minhashLshPairs]]'
+    * band join), trading bounded recall for a linear-ish candidate set.
+    */
   def cosinePairs(corpus: DataFrame, threshold: Double): DataFrame = {
     // Explicit broadcast-nested-loop: one corpus copy rides to every
     // task as primitive float arrays, and the streamed side flatMaps
@@ -185,77 +180,6 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** A chosen banded-LSH configuration: `recall` is the collision
-    * probability 1-(1-p^rows)^bands for a pair AT the threshold;
-    * `bgCandidateRate` the same for an unrelated pair (the candidate
-    * volume a random corpus pays per pair).
-    */
-  final case class LshPlan(bands: Int, rowsPerBand: Int,
-    recall: Double, bgCandidateRate: Double)
-
-  /** Parameter planner for banded LSH: the cheapest (bands, rows per
-    * band) whose recall at the threshold meets `targetRecall`, where
-    * cost is the background candidate rate (what the pair join pays on
-    * unrelated pairs), tie-broken by total hash count bands·rows.
-    *
-    * `pAt` maps a similarity to its per-hash collision probability —
-    * sign-LSH: 1 - acos(c)/π; MinHash: the Jaccard value itself. The
-    * search space is tiny (maxBands·maxRows grid), run it at plan
-    * time, not per row. This is how q37's (8, 4) at τ=0.4 and the
-    * production note (~0.95 ⇒ recall>0.999) in its comment were
-    * derived.
-    */
-  def lshPlan(pAtThreshold: Double, pBackground: Double,
-      targetRecall: Double, maxBands: Int = 64,
-      maxRows: Int = 16): LshPlan = {
-    require(pAtThreshold > 0 && pAtThreshold < 1,
-      s"collision probability in (0,1), got $pAtThreshold")
-    def hit(p: Double, b: Int, r: Int) =
-      1.0 - math.pow(1.0 - math.pow(p, r), b)
-    val ok = for {
-      r <- 1 to maxRows
-      b <- 1 to maxBands
-      if hit(pAtThreshold, b, r) >= targetRecall
-    } yield LshPlan(b, r, hit(pAtThreshold, b, r), hit(pBackground, b, r))
-    require(ok.nonEmpty,
-      s"no (bands<=$maxBands, rows<=$maxRows) reaches recall $targetRecall")
-    ok.minBy(c => (c.bgCandidateRate, c.bands * c.rowsPerBand))
-  }
-
-  /** [[lshPlan]] for sign-LSH over cosine similarity: per-hyperplane
-    * collision probability 1 - acos(c)/π; background pairs in a
-    * random (zero-mean) corpus sit at cos≈0 ⇒ p=1/2.
-    */
-  def lshPlanCosine(threshold: Double, targetRecall: Double,
-      maxBands: Int = 64, maxRows: Int = 16): LshPlan =
-    lshPlan(1.0 - math.acos(threshold) / math.Pi, 0.5,
-      targetRecall, maxBands, maxRows)
-
-  /** [[lshPlan]] for MinHash over Jaccard: per-hash collision
-    * probability IS the Jaccard value; `bgJaccard` is the typical
-    * unrelated-pair similarity of the corpus (shingle overlap of
-    * random documents — near 0 for long shingles).
-    */
-  def lshPlanJaccard(threshold: Double, targetRecall: Double,
-      bgJaccard: Double = 0.05, maxBands: Int = 64,
-      maxRows: Int = 16): LshPlan =
-    lshPlan(threshold, bgJaccard, targetRecall, maxBands, maxRows)
-
-  /** Embedding near-duplicate pairs at corpus scale: banded sign-LSH
-    * candidate generation + exact cosine verification — the structure
-    * of [[Dedup.minhashLshPairs]] with hyperplane buckets instead of
-    * minhash bands.
-    *
-    * Each band hashes every vector with its own `planesPerBand` seeded
-    * hyperplanes; candidates are pairs sharing a (band, bucket) slot in
-    * ANY band (recall for pairs at cosine c: 1-(1-p^planes)^bands with
-    * p = 1-acos(c)/π). Shape at 100 TB: one narrow (band, bucket,
-    * vec_id) shuffle for the self-join — embeddings do NOT ride through
-    * the candidate exchange — then two id-keyed joins fetch vectors for
-    * verification of the (deduplicated) candidate set only. No
-    * driver-side collect, no all-pairs scan; [[cosinePairs]] remains
-    * the broadcast-scale exactness baseline.
-    */
   /** Corpus-size-aware wrapper solving the two-knob LSH tuning problem
     * the fixed-parameter gate entry (q37: bands=8, planes=4, sized for
     * the tiny gate corpus) cannot:
@@ -300,11 +224,10 @@ object Similarity {
     * `threshold` (p = 1 − acos(t)/π). THROWS when the target needs more
     * than `maxBands` — silently clamping would hand back a fraction of
     * the requested recall with no signal (at n=5M/thr=0.4 a clamp to
-    * 128 bands delivers ~3% of the true pairs), the same refusal
-    * contract as [[lshPlan]]. Low thresholds are intrinsically
-    * band-hungry (bands ~ ln(1/(1−R))/p^planes): raise the threshold,
-    * lower the recall target, or raise maxBands consciously (band cost
-    * is linear, bands × n bucket rows).
+    * 128 bands delivers ~3% of the true pairs). Low thresholds are
+    * intrinsically band-hungry (bands ~ ln(1/(1−R))/p^planes): raise
+    * the threshold, lower the recall target, or raise maxBands
+    * consciously (band cost is linear, bands × n bucket rows).
     */
   def bandsForRecall(threshold: Double, planesPerBand: Int,
       recall: Double = 0.9, maxBands: Int = 512): Int = {
@@ -321,6 +244,21 @@ object Similarity {
     needed
   }
 
+  /** Embedding near-duplicate pairs at corpus scale: banded sign-LSH
+    * candidate generation + exact cosine verification — the structure
+    * of [[Dedup.minhashLshPairs]] with hyperplane buckets instead of
+    * minhash bands.
+    *
+    * Each band hashes every vector with its own `planesPerBand` seeded
+    * hyperplanes; candidates are pairs sharing a (band, bucket) slot in
+    * ANY band (recall for pairs at cosine c: 1-(1-p^planes)^bands with
+    * p = 1-acos(c)/π). Shape at 100 TB: one narrow (band, bucket,
+    * vec_id) shuffle for the self-join — embeddings do NOT ride through
+    * the candidate exchange — then two id-keyed joins fetch vectors for
+    * verification of the (deduplicated) candidate set only. No
+    * driver-side collect, no all-pairs scan; [[cosinePairs]] remains
+    * the broadcast-scale exactness baseline.
+    */
   def lshNearDupPairs(corpus: DataFrame, threshold: Double,
       bands: Int = 8, planesPerBand: Int = 4, dim: Int = 64,
       seed: Long = 42L, maxBucket: Option[Int] = None): DataFrame = {
@@ -419,16 +357,8 @@ object Similarity {
       if (!multiProbe) array(pbucket)
       else array(pbucket +:
         (0 until numPlanes).map(i => pbucket.bitwiseXOR(lit(1L << i))): _*)
-    val pb = probes.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"),
-      explode(pbuckets).as("bucket"))
-    val joined = cb.join(broadcast(pb),
-        cb("bucket") === pb("bucket") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        graft.operators.Curation.floorRound(graft.functions.F.vec_cosine(col("pe"), col("embedding")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topPerProbe(pairs(cb, probeSide(probes, explode(pbuckets).as("bucket")), "bucket"),
+      "sim", graft.functions.F.vec_cosine(col("pe"), col("embedding")), k)
   }
 
   /** Index-quality evaluation: recall@k of an approximate ranked result
@@ -458,23 +388,6 @@ object Similarity {
         graft.operators.Curation.floorRound(count(col("a_vec")) / lit(k).cast("double"), 4).as("recall"))
   }
 
-  /** Product-quantization ANN (PQ, Jégou et al. TPAMI'11 shape):
-    * split each vector into `m` subvectors, quantize each against a
-    * per-subvector codebook of `k` centroids, and answer queries with
-    * asymmetric distance computation (ADC) — the probe's exact
-    * subvectors against the corpus's quantized codes.
-    *
-    * Scale shape (100 TB): the corpus compresses from 64 floats to `m`
-    * byte codes per vector (64× smaller scan), codebooks are tiny and
-    * broadcast, and ADC is a table lookup per subvector. Codebooks here
-    * are md5-ordered corpus samples (deterministic, SQL-replayable —
-    * k-means iterations would only tighten cells). Per-(probe, corpus,
-    * subvector) partial distances accumulate in decimal so the total is
-    * float-order-independent, matching the oracle bit-for-bit.
-    *
-    * Returns (probe_id, vec_id, adc, rank): top-k smallest ADC per
-    * probe, ties to the lower vec_id.
-    */
   /** Deterministic PQ codebooks: md5-ordered corpus samples (k-means
     * iterations would only tighten cells). k full-dim rows — each
     * subvector mi uses its [mi·subDim, (mi+1)·subDim) slice. */
@@ -499,10 +412,12 @@ object Similarity {
     d
   }
 
-  private def pqCodesUdf(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]], m: Int) =
-    udf { v: Seq[Float] =>
-      val cs = bc.value
+  /** (vec_id, codes, extra…) of each vector: `m` PQ codes against the
+    * broadcast codebooks. */
+  private def pqEncode(vecs: DataFrame, books: Quantizer, m: Int,
+      extra: Column*): DataFrame = {
+    val codes = udf { v: Seq[Float] =>
+      val cs = books.value
       // Loud contract (the lshNearDupPairs discipline): truncating
       // division would silently drop trailing dims from every distance,
       // and m > dim would make subDim 0 — ALL distances 0, "nearest
@@ -522,19 +437,21 @@ object Similarity {
         best
       }
     }
+    vecs.select(Seq(col("vec_id"), codes(col("embedding")).as("codes")) ++ extra: _*)
+  }
 
-  // ADC: the m partial distances sum in DECIMAL so the total is
-  // float-order-independent. Fused into one UDF — the explode +
-  // decimal groupBy form shuffles m rows per (probe, corpus) pair
-  // (m·n·|probes| rows through an exchange) to add FOUR numbers.
-  // Each partial converts exactly as Spark's double→decimal(38,18)
-  // cast does (shortest-repr string → BigDecimal, HALF_UP scale);
-  // decimal addition is exact, so fusing preserves bit-equality with
-  // the previous aggregate and the SQL oracle.
-  private def pqAdcUdf(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) =
+  // ADC: the m partial distances of probe `pe` against stored `codes`
+  // sum in DECIMAL so the total is float-order-independent. Fused into
+  // one UDF — the explode + decimal groupBy form shuffles m rows per
+  // (probe, corpus) pair (m·n·|probes| rows through an exchange) to
+  // add FOUR numbers. Each partial converts exactly as Spark's
+  // double→decimal(38,18) cast does (shortest-repr string →
+  // BigDecimal, HALF_UP scale); decimal addition is exact, so fusing
+  // preserves bit-equality with the previous aggregate and the SQL
+  // oracle.
+  private def adc(books: Quantizer): Column =
     udf { (p: Seq[Float], codes: Seq[Int]) =>
-      val cs = bc.value
+      val cs = books.value
       require(codes.nonEmpty && p.length % codes.length == 0,
         s"pq ADC: probe dim ${p.length} not divisible by ${codes.length} codes")
       val subDim = p.length / codes.length
@@ -547,22 +464,31 @@ object Similarity {
         mi += 1
       }
       acc.doubleValue
-    }
+    }.apply(col("pe"), col("codes"))
 
+  /** Product-quantization ANN (PQ, Jégou et al. TPAMI'11 shape):
+    * split each vector into `m` subvectors, quantize each against a
+    * per-subvector codebook of `k` centroids, and answer queries with
+    * asymmetric distance computation (ADC) — the probe's exact
+    * subvectors against the corpus's quantized codes.
+    *
+    * Scale shape (100 TB): the corpus compresses from 64 floats to `m`
+    * byte codes per vector (64× smaller scan), codebooks are tiny and
+    * broadcast, and ADC is a table lookup per subvector. Codebooks here
+    * are md5-ordered corpus samples (deterministic, SQL-replayable —
+    * k-means iterations would only tighten cells). Per-(probe, corpus,
+    * subvector) partial distances accumulate in decimal so the total is
+    * float-order-independent, matching the oracle bit-for-bit.
+    *
+    * Returns (probe_id, vec_id, adc, rank): top-k smallest ADC per
+    * probe, ties to the lower vec_id.
+    */
   def pqTopK(corpus: DataFrame, probes: DataFrame, kTop: Int,
       m: Int = 4, k: Int = 16): DataFrame = {
     val spark = corpus.sparkSession
-    val bc = spark.sparkContext.broadcast(pqCodebooks(corpus, k))
-    val coded = corpus
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("vec_id"), pqCodesUdf(bc, m)(col("embedding")).as("codes"))
-    val pb = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val joined = coded.join(broadcast(pb), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        graft.operators.Curation.floorRound(pqAdcUdf(bc)(col("pe"), col("codes")), 6).as("adc"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
+    val books = spark.sparkContext.broadcast(pqCodebooks(corpus, k))
+    val coded = pqEncode(corpus.repartition(spark.sparkContext.defaultParallelism), books, m)
+    topPerProbe(pairs(coded, probeSide(probes)), "adc", adc(books), kTop)
   }
 
   /** Materialize the PQ index: the corpus reduced to its code table
@@ -576,26 +502,11 @@ object Similarity {
   def pqBuildIndex(corpus: DataFrame, path: String,
       m: Int = 4, k: Int = 16): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = pqCodebooks(corpus, k)
-    val bc = spark.sparkContext.broadcast(cents)
-    // The two component writes are independent once the codebooks are
-    // sampled — overlap them (r12, guide §2.6 via DriverPar): the
-    // 1-task codebook write rides inside the code-table write's tail
-    // instead of adding a serial job. Committer safety: distinct
-    // output directories, so the two FileOutputCommitter instances
-    // never share staging paths.
-    DriverPar.run(spark, "pq-build")(Seq(
-      () => corpus
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(col("vec_id"), pqCodesUdf(bc, m)(col("embedding")).as("codes"))
-        .write.mode("overwrite").parquet(s"$path/codes"),
-      () => cents.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("code", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/codebooks")))
-    bc.destroy()
+    buildIndex(spark, path, "pq-build", "codebooks" -> pqCodebooks(corpus, k)) {
+      case Seq(books) =>
+        pqEncode(corpus.repartition(spark.sparkContext.defaultParallelism), books, m)
+          .write.mode("overwrite").parquet(s"$path/codes")
+    }
   }
 
   /** ADC search against a materialized PQ index: probes (exact
@@ -604,23 +515,10 @@ object Similarity {
     * accumulation as [[pqTopK]], so with equal (m, k) the results are
     * identical.
     */
-  def pqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      probes: DataFrame, kTop: Int): DataFrame = {
-    import spark.implicits._
-    val cents: Array[Array[Double]] = spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("code").asc)
-      .select(col("centroid")).as[Seq[Double]].collect()
-      .map(_.toArray)
-    val bc = spark.sparkContext.broadcast(cents)
-    val coded = spark.read.parquet(s"$path/codes")
-    val pb = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val joined = coded.join(broadcast(pb), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        graft.operators.Curation.floorRound(pqAdcUdf(bc)(col("pe"), col("codes")), 6).as("adc"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
-  }
+  def pqProbeIndex(spark: SparkSession, path: String,
+      probes: DataFrame, kTop: Int): DataFrame =
+    topPerProbe(pairs(spark.read.parquet(s"$path/codes"), probeSide(probes)),
+      "adc", adc(quantizer(spark, path, "codebooks")), kTop)
 
   /** Materialize an IVF+PQ index (the canonical large-scale ANN layout,
     * FAISS's IVFPQ shape): the code table is PARTITIONED by coarse IVF
@@ -633,26 +531,15 @@ object Similarity {
   def ivfPqBuildIndex(corpus: DataFrame, path: String,
       nlist: Int = 16, m: Int = 4, k: Int = 16, seed: Long = 42L): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     // Both quantizer samples are independent collect jobs over the
     // corpus — overlap them (r12, guide §2.6 via DriverPar).
-    val sampled = DriverPar.run(spark, "ivfpq-quantizers")(Seq(
+    val Seq(cents, books) = DriverPar.run(spark, "ivfpq-quantizers")(Seq(
       () => ivfCentroids(corpus, nlist, seed),
       () => pqCodebooks(corpus, k)))
-    val cents = sampled(0)
-    val books = sampled(1)
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcB = spark.sparkContext.broadcast(books)
-    // The three component writes are independent once the quantizers
-    // exist: the two 1-task quantizer-table writes ride inside the
-    // code-table write's stage tail instead of adding two serial jobs
-    // (distinct output directories — no committer staging overlap).
-    DriverPar.run(spark, "ivfpq-build")(Seq(
-      () => corpus
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(col("vec_id"),
-          pqCodesUdf(bcB, m)(col("embedding")).as("codes"),
-          nearestCellUdf(bcC)(col("embedding")).as("cell"))
+    buildIndex(spark, path, "ivfpq-build",
+        "centroids" -> cents, "codebooks" -> books) { case Seq(bcC, bcB) =>
+      pqEncode(corpus.repartition(spark.sparkContext.defaultParallelism),
+          bcB, m, cellOf(bcC).as("cell"))
         // Cluster by cell before the partitioned write (guide §6, small
         // files): P map tasks × nlist dirs would write up to P·nlist
         // slivers, and every probe's pruned read pays the per-file open
@@ -661,14 +548,8 @@ object Similarity {
         // narrows to one task (= one file) per cell.
         .repartition(nlist, col("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/codes"),
-      () => cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/centroids"),
-      () => books.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("code", "centroid").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/codebooks")))
-    bcC.destroy(); bcB.destroy()
+        .parquet(s"$path/codes")
+    }
   }
 
   /** Continuously ingest vectors into an IVF+PQ index: micro-batches
@@ -679,13 +560,9 @@ object Similarity {
     * and [[ivfPqCompactIndex]] folds the delta back.
     */
   def ivfPqStreamingIngest(stream: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     val spark = stream.sparkSession
     import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(readCentroids(spark, path))
-    val books: Array[Array[Double]] = spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("code").asc)
-      .select(col("centroid")).as[Seq[Double]].collect().map(_.toArray)
     // headOption-style guard: an index built from an empty corpus has a
     // codes table with zero rows, and a bare head() would fail stream
     // setup with an opaque NoSuchElementException.
@@ -696,17 +573,8 @@ object Similarity {
           s"ivfPqStreamingIngest: $path/codes is empty — cannot infer the " +
             "PQ segment count; build the index over a non-empty corpus first")
       }
-    val bcB = spark.sparkContext.broadcast(books)
-    stream
-      .select(col("vec_id"),
-        pqCodesUdf(bcB, m)(col("embedding")).as("codes"),
-        nearestCellUdf(bcC)(col("embedding")).as("cell"))
-      .writeStream
-      .format("parquet")
-      .option("path", s"$path/delta")
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("cell")
-      .start()
+    ingestDelta(pqEncode(stream, quantizer(spark, path, "codebooks"), m,
+      cellOf(quantizer(spark, path, "centroids")).as("cell")), path, checkpoint)
   }
 
   /** Serve a probe stream against the at-rest IVF+PQ index — the ADC
@@ -714,39 +582,14 @@ object Similarity {
     * pruning, same at-least-once append contract). */
   def ivfPqStreamingServe(probeStream: DataFrame, path: String,
       outPath: String, checkpoint: String, kTop: Int,
-      nprobe: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    probeStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          ivfPqProbeIndex(batch.sparkSession, path, batch, kTop, nprobe)
-            .write.mode("append").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      nprobe: Int = 4): StreamingQuery =
+    serveBatches(probeStream, outPath, checkpoint)(batch =>
+      ivfPqProbeIndex(batch.sparkSession, path, batch, kTop, nprobe))
 
   /** Fold the IVF+PQ streaming delta into the base code table (see
     * [[ivfCompactIndex]] — same offline rewrite-and-rename). */
-  def ivfPqCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val delta = new Path(s"$path/delta")
-    val fs = delta.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(delta)) return
-    val merged = spark.read.parquet(s"$path/codes")
-      .unionByName(spark.read.parquet(s"$path/delta"))
-    merged.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes_compacting")
-    // Same crash-safe aside-swap as ivfCompactIndex: the live code
-    // table is never absent, only superseded.
-    val codes = new Path(s"$path/codes")
-    val old = new Path(s"$path/codes_old")
-    fs.delete(old, true)
-    require(fs.rename(codes, old), s"aside-rename of live code table failed under $path")
-    require(fs.rename(new Path(s"$path/codes_compacting"), codes),
-      s"rename of compacted IVFPQ index failed under $path")
-    fs.delete(old, true)
-    fs.delete(delta, true)
-  }
+  def ivfPqCompactIndex(spark: SparkSession, path: String): Unit =
+    compact(spark, path, "codes")
 
   /** ADC search against an IVF+PQ index: probes route to their nprobe
     * cells, the scan reads ONLY those `cell=` partitions of the code
@@ -755,48 +598,11 @@ object Similarity {
     * as [[pqTopK]] — with nprobe = nlist the candidate set is the
     * whole corpus and results equal [[pqTopK]] exactly.
     */
-  def ivfPqProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      probes: DataFrame, kTop: Int, nprobe: Int = 4): DataFrame = {
-    import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(readCentroids(spark, path))
-    val books: Array[Array[Double]] = spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("code").asc)
-      .select(col("centroid")).as[Seq[Double]].collect()
-      .map(_.toArray)
-    val bcB = spark.sparkContext.broadcast(books)
-    val nearestCells = nearestCellsUdf(bcC)
-    val pb = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-      explode(nearestCells(col("embedding"), lit(nprobe))).as("cell"))
-    val probedCells = pb.select(col("cell")).distinct().as[Int].collect().toSeq
-    val codesBase = spark.read.parquet(s"$path/codes")
-    val deltaPath = new org.apache.hadoop.fs.Path(s"$path/delta")
-    val fs = deltaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val codesAll =
-      if (fs.exists(deltaPath))
-        codesBase.unionByName(spark.read.parquet(s"$path/delta")
-          .select(codesBase.columns.map(col): _*))
-      else codesBase
-    val coded = codesAll.filter(col("cell").isin(probedCells: _*))
-    val joined = coded.join(broadcast(pb),
-        coded("cell") === pb("cell") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        graft.operators.Curation.floorRound(pqAdcUdf(bcB)(col("pe"), col("codes")), 6).as("adc"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= kTop)
-  }
+  def ivfPqProbeIndex(spark: SparkSession, path: String,
+      probes: DataFrame, kTop: Int, nprobe: Int = 4): DataFrame =
+    topPerProbe(probeTiers(spark, path, "codes", probes, nprobe), "adc",
+      adc(quantizer(spark, path, "codebooks")), kTop)
 
-  /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
-    * (deterministically sampled corpus vectors, normalized) partitions
-    * the corpus into cells; probes search their `nprobe` nearest cells.
-    *
-    * Scale shape (100 TB): the centroid table is tiny and broadcast
-    * everywhere; the corpus is written bucketed/partitioned by `cell`
-    * once at indexing time, so a probe batch shuffles only the probe
-    * rows (fan-out × nprobe) and each cell scan is a partition-pruned
-    * hash-join lookup, not a corpus scan. Recall rises with nprobe
-    * (nprobe = nlist ⇒ exact brute force).
-    */
   /** Coarse quantizer for IVF: sample `nlist` corpus vectors as
     * centroids (k-means init without iterations — deterministic, and
     * refinement only sharpens cell balance, not correctness).
@@ -819,27 +625,67 @@ object Similarity {
     }
   }
 
+  /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
+    * (deterministically sampled corpus vectors, normalized) partitions
+    * the corpus into cells; probes search their `nprobe` nearest cells.
+    *
+    * Scale shape (100 TB): the centroid table is tiny and broadcast
+    * everywhere; the corpus is written bucketed/partitioned by `cell`
+    * once at indexing time, so a probe batch shuffles only the probe
+    * rows (fan-out × nprobe) and each cell scan is a partition-pruned
+    * hash-join lookup, not a corpus scan. Recall rises with nprobe
+    * (nprobe = nlist ⇒ exact brute force).
+    */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame = {
     val spark = corpus.sparkSession
-    val cents = ivfCentroids(corpus, nlist, seed)
-    val bc = spark.sparkContext.broadcast(cents)
-    val nearestCells = nearestCellsUdf(bc)
+    val cents = spark.sparkContext.broadcast(ivfCentroids(corpus, nlist, seed))
     val cb = corpus
       .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("cell", element_at(nearestCells(col("embedding"), lit(1)), 1))
-    val pb = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-      explode(nearestCells(col("embedding"), lit(nprobe))).as("cell"))
-    val joined = cb.join(broadcast(pb),
-        cb("cell") === pb("cell") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        graft.operators.Curation.floorRound(graft.functions.F.vec_cosine(col("pe"), col("embedding")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .withColumn("cell", element_at(nearestCellsUdf(cents)(col("embedding"), lit(1)), 1))
+    topPerProbe(pairs(cb, routeProbes(probes, cents, nprobe), "cell"), "sim",
+      graft.functions.F.vec_cosine(col("pe"), col("embedding")), k)
   }
 
   // ---- IVF index at rest ---------------------------------------------
+
+  /** argmax-n cell routing against broadcast centroids: the n cells
+    * with the highest dot product (centroids are unit vectors, so dot
+    * ranks identically to cosine), ties to the lower cell id. ONE
+    * shared implementation — the "results equal [[ivfTopK]] exactly"
+    * contracts of the at-rest probes depend on every call site routing
+    * identically. */
+  private def nearestCellsUdf(cents: Quantizer) =
+    udf { (e: Seq[Float], n: Int) =>
+      val cs = cents.value
+      cs.indices.map { ci =>
+        val c = cs(ci)
+        var dotv = 0.0; var i = 0
+        while (i < c.length) { dotv += e(i).toDouble * c(i); i += 1 }
+        (ci, dotv)
+      }.sortBy { case (ci, d) => (-d, ci) }.take(n).map(_._1)
+    }
+
+  /** argmax-1 cell of `embedding` against broadcast centroids; ties to
+    * the lower cell id (matches [[ivfTopK]]'s `nearestCells(…, 1)`). */
+  private def cellOf(cents: Quantizer): Column =
+    udf { e: Seq[Float] =>
+      val cs = cents.value
+      var best = 0; var bestD = Double.MinValue
+      var ci = 0
+      while (ci < cs.length) {
+        val c = cs(ci)
+        var dotv = 0.0; var i = 0
+        while (i < c.length) { dotv += e(i).toDouble * c(i); i += 1 }
+        if (dotv > bestD) { bestD = dotv; best = ci }
+        ci += 1
+      }
+      best
+    }.apply(col("embedding"))
+
+  /** The index's fixed centroid table, cell-ordered. nlist rows. */
+  def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
+    readQuantizer(spark, path, "centroids")
 
   /** Materialize an IVF index: the corpus written as parquet
     * PARTITIONED BY the coarse cell (`cell=N/` Hive dirs) plus a tiny
@@ -852,79 +698,20 @@ object Similarity {
     * partition column — work O(corpus), done once. At real scale
     * `nlist` grows with corpus size (cells of ~256 MB), so a probe
     * batch with nprobe=8 touches nprobe/nlist of the bytes at rest.
+    *
+    * `nrm` is stored at rest: probes then verify candidates with ONE
+    * fused dot per pair instead of the 3-accumulator cosine loop —
+    * same bits (see [[cosineFused]]), a third of the verification FLOPs.
     */
-  /** argmax-n cell routing against broadcast centroids: the n cells
-    * with the highest dot product (centroids are unit vectors, so dot
-    * ranks identically to cosine), ties to the lower cell id. ONE
-    * shared implementation — the "results equal [[ivfTopK]] exactly"
-    * contracts of the at-rest probes depend on every call site routing
-    * identically. */
-  private def nearestCellsUdf(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) =
-    udf { (e: Seq[Float], n: Int) =>
-      val cs = bc.value
-      cs.indices.map { ci =>
-        val c = cs(ci)
-        var dotv = 0.0; var i = 0
-        while (i < c.length) { dotv += e(i).toDouble * c(i); i += 1 }
-        (ci, dotv)
-      }.sortBy { case (ci, d) => (-d, ci) }.take(n).map(_._1)
-    }
-
-  /** argmax-1 cell assignment against broadcast centroids; ties to the
-    * lower cell id (matches [[ivfTopK]]'s `nearestCells(…, 1)`). */
-  private def nearestCellUdf(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) =
-    udf { e: Seq[Float] =>
-      val cs = bc.value
-      var best = 0; var bestD = Double.MinValue
-      var ci = 0
-      while (ci < cs.length) {
-        val c = cs(ci)
-        var dotv = 0.0; var i = 0
-        while (i < c.length) { dotv += e(i).toDouble * c(i); i += 1 }
-        if (dotv > bestD) { bestD = dotv; best = ci }
-        ci += 1
-      }
-      best
-    }
-
-  /** The index's fixed centroid table, cell-ordered. nlist rows. */
-  def readCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] = {
-    import spark.implicits._
-    spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell").asc)
-      .select(col("centroid")).as[Seq[Double]].collect()
-      .map(_.toArray)
-  }
-
   def ivfBuildIndex(corpus: DataFrame, path: String,
-      nlist: Int = 16, seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = ivfCentroids(corpus, nlist, seed)
-    val bc = spark.sparkContext.broadcast(cents)
-    // The two component writes are independent once the centroids are
-    // sampled — overlap them (r12, guide §2.6 via DriverPar; distinct
-    // output directories, so no committer staging overlap).
-    //
-    // `nrm` stored at rest: probes then verify candidates with ONE
-    // fused dot per pair instead of the 3-accumulator cosine loop —
-    // same bits (see dotUdf), a third of the verification FLOPs.
-    DriverPar.run(spark, "ivf-build")(Seq(
-      () => corpus
-        .withColumn("cell", nearestCellUdf(bc)(col("embedding")))
+      nlist: Int = 16, seed: Long = 42L): Unit =
+    buildIndex(corpus.sparkSession, path, "ivf-build",
+        "centroids" -> ivfCentroids(corpus, nlist, seed)) { case Seq(cents) =>
+      corpus.withColumn("cell", cellOf(cents))
         .withColumn("nrm", graft.functions.F.vec_norm(col("embedding")))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/cells"),
-      () => cents.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/centroids")))
-    bc.destroy()
-  }
+        .parquet(s"$path/cells")
+    }
 
   /** Continuously ingest a vector stream into a materialized index:
     * each micro-batch assigns cells against the index's FIXED centroids
@@ -941,49 +728,16 @@ object Similarity {
     * cell balance drifts, you don't mutate a live quantizer.
     */
   def ivfStreamingIngest(stream: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    val bc = spark.sparkContext.broadcast(readCentroids(spark, path))
-    stream
-      .withColumn("cell", nearestCellUdf(bc)(col("embedding")))
-      .withColumn("nrm", graft.functions.F.vec_norm(col("embedding")))
-      .writeStream
-      .format("parquet")
-      .option("path", s"$path/delta")
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("cell")
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    ingestDelta(stream
+      .withColumn("cell", cellOf(quantizer(stream.sparkSession, path, "centroids")))
+      .withColumn("nrm", graft.functions.F.vec_norm(col("embedding"))),
+      path, checkpoint)
 
-  /** Fold the streaming `delta/` tier into the base `cells/` tier:
-    * one partitioned rewrite of base ∪ delta, committed by Hadoop FS
-    * rename (the journal persister's pattern), then the delta and its
-    * commit log are dropped. Run offline — stop the ingest query
-    * first; on restart its checkpoint skips the already-folded batches.
-    */
-  def ivfCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val delta = new Path(s"$path/delta")
-    val fs = delta.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(delta)) return
-    val merged = spark.read.parquet(s"$path/cells")
-      .unionByName(spark.read.parquet(s"$path/delta"))
-    merged.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/cells_compacting")
-    // Crash-safe swap: move the live dir ASIDE (not delete) before the
-    // new one renames in, so no window exists where cells/ is gone and
-    // unrecoverable — a crash leaves either the old index live or the
-    // old index in _old with the compacted one live.
-    val cells = new Path(s"$path/cells")
-    val old = new Path(s"$path/cells_old")
-    fs.delete(old, true)
-    require(fs.rename(cells, old), s"aside-rename of live index failed under $path")
-    require(fs.rename(new Path(s"$path/cells_compacting"), cells),
-      s"rename of compacted index failed under $path")
-    fs.delete(old, true)
-    fs.delete(delta, true)
-  }
+  /** Fold the streaming `delta/` tier into the base `cells/` tier
+    * (offline; see the at-rest kernel's `compact`). */
+  def ivfCompactIndex(spark: SparkSession, path: String): Unit =
+    compact(spark, path, "cells")
 
   /** Probe a materialized IVF index: assign each probe its `nprobe`
     * nearest cells, then scan ONLY those `cell=` partitions — the
@@ -991,43 +745,14 @@ object Similarity {
     * pruned at planning time and never read from storage. Exact cosine
     * + window top-k over the candidates; same math as [[ivfTopK]], so
     * with equal (nlist, nprobe, seed) the results are identical.
-    *
-    * The distinct probed-cell set is collected to the driver — bounded
-    * by nlist (the centroid table already lives there), never by the
-    * corpus.
     */
-  def ivfProbeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      probes: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(readCentroids(spark, path))
-    val nearestCells = nearestCellsUdf(bc)
-    val pb = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-      graft.functions.F.vec_norm(col("embedding")).as("pnrm"),
-      explode(nearestCells(col("embedding"), lit(nprobe))).as("cell"))
-    // Bounded collect: ≤ nlist distinct cell ids, for the partition
-    // filter. IN over partition values prunes the unprobed dirs.
-    val probedCells = pb.select(col("cell")).distinct().as[Int].collect().toSeq
-    // Base tier ∪ streaming delta tier (if an ingest has run), both
-    // scans partition-pruned to the probed cells. The delta read goes
-    // through the file sink's commit log, so only committed batches
-    // are visible.
-    val base = spark.read.parquet(s"$path/cells")
-    val deltaPath = new org.apache.hadoop.fs.Path(s"$path/delta")
-    val fs = deltaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val tiers =
-      if (fs.exists(deltaPath))
-        base.unionByName(
-          spark.read.parquet(s"$path/delta").select(base.columns.map(col): _*))
-      else base
-    val cb = tiers.filter(col("cell").isin(probedCells: _*))
-    val joined = cb.join(broadcast(pb),
-        cb("cell") === pb("cell") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        graft.operators.Curation.floorRound(graft.functions.F.vec_dot(col("pe"), col("embedding")) / (col("pnrm") * col("nrm")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    joined.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
+  def ivfProbeIndex(spark: SparkSession, path: String,
+      probes: DataFrame, k: Int, nprobe: Int = 4): DataFrame =
+    topPerProbe(
+      probeTiers(spark, path, "cells", probes, nprobe,
+        graft.functions.F.vec_norm(col("embedding")).as("pnrm")),
+      "sim", graft.functions.F.vec_dot(col("pe"), col("embedding")) /
+        (col("pnrm") * col("nrm")), k)
 
   /** Cell-occupancy audit of the IVF coarse quantizer: rows and
     * normalized load (n·nlist/total; 1.0 = perfectly even) per cell.
@@ -1048,7 +773,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val bc = spark.sparkContext.broadcast(ivfCentroids(corpus, nlist, seed))
     val counts = corpus
-      .withColumn("cell", nearestCellUdf(bc)(col("embedding")))
+      .withColumn("cell", cellOf(bc))
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val w = Window.partitionBy()
     counts.select(col("cell"), col("n"),
@@ -1063,25 +788,13 @@ object Similarity {
     * its top-k result rows to `outPath`. With [[ivfStreamingIngest]]
     * and [[ivfCompactIndex]] this completes the index lifecycle:
     * build at rest, ingest continuously, serve continuously, compact
-    * offline.
-    *
-    * Delivery is at-least-once per batch (a crash between the parquet
-    * append and the checkpoint commit replays the batch — unlike the
-    * ingest tier's file sink there is no `_spark_metadata` log here);
-    * replayed batches rewrite identical rows, so downstream readers
-    * dedup on (probe_id, vec_id) or read the latest run.
+    * offline. Delivery is at-least-once per batch (see `serveBatches`).
     */
   def ivfStreamingServe(probeStream: DataFrame, path: String,
       outPath: String, checkpoint: String, k: Int,
-      nprobe: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    probeStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          ivfProbeIndex(batch.sparkSession, path, batch, k, nprobe)
-            .write.mode("append").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      nprobe: Int = 4): StreamingQuery =
+    serveBatches(probeStream, outPath, checkpoint)(batch =>
+      ivfProbeIndex(batch.sparkSession, path, batch, k, nprobe))
 
   /** Maximal-marginal-relevance rerank (Carbonell & Goldstein 1998):
     * from each probe's top-`poolSize` cosine candidates, greedily pick
@@ -1174,4 +887,181 @@ object Similarity {
     }
     out.result()
   }
+
+  // ---- Search and at-rest index kernel -------------------------------
+  //
+  // The window-ranked top-k searches above (all but hardNegatives'
+  // mergeable heap) rank probe × corpus candidate pairs with one
+  // ranker. Every index at rest is a base table (IVF `cells/`, PQ
+  // `codes/`, IVF-PQ cell-partitioned `codes/`) plus fixed quantizer
+  // tables (`centroids/` keyed by cell, `codebooks/` keyed by code);
+  // the cell-partitioned kinds add a streaming `delta/` tier that is
+  // compacted offline. Each step of that lifecycle is written once
+  // here, and Retrieval's BM25 serving tier shares the serve loop.
+
+  private type Quantizer = org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]
+
+  /** The broadcast probe side: (probe_id, pe, extra…). */
+  private def probeSide(probes: DataFrame, extra: Column*): DataFrame =
+    probes.select(Seq(col("vec_id").as("probe_id"), col("embedding").as("pe")) ++ extra: _*)
+
+  /** [[probeSide]] with one row per probed cell: the `nprobe` cells
+    * nearest each probe. */
+  private def routeProbes(probes: DataFrame, cents: Quantizer, nprobe: Int,
+      extra: Column*): DataFrame =
+    probeSide(probes, extra :+
+      explode(nearestCellsUdf(cents)(col("embedding"), lit(nprobe))).as("cell"): _*)
+
+  /** Candidate pairs: every corpus row against the broadcast probes
+    * that share its `on` columns (cell or bucket), self-pairs dropped. */
+  private def pairs(corpus: DataFrame, pb: DataFrame, on: String*): DataFrame =
+    corpus.join(broadcast(pb),
+      (on.map(c => corpus(c) === pb(c)) :+ (col("vec_id") =!= col("probe_id"))).reduce(_ && _))
+
+  /** Top-`k` per probe over candidate pairs, with `score` rounded to 6
+    * places as column `name`: similarities (`sim`) rank descending, ADC
+    * distances (`adc`) ascending, ties to the lower vec_id. Returns
+    * (probe_id, vec_id, name, rank). */
+  private def topPerProbe(cands: DataFrame, name: String, score: Column,
+      k: Int): DataFrame = {
+    val order = if (name == "adc") col(name).asc else col(name).desc
+    cands.select(col("probe_id"), col("vec_id"),
+        graft.operators.Curation.floorRound(score, 6).as(name))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(order, col("vec_id").asc)))
+      .filter(col("rank") <= k)
+  }
+
+  /** Row key of a quantizer table at rest: `centroids/` rows are
+    * cells, `codebooks/` rows are codes. */
+  private def quantizerKey(table: String): String =
+    if (table == "centroids") "cell" else "code"
+
+  private def writeQuantizer(spark: SparkSession, path: String, table: String,
+      rows: Array[Array[Double]]): Unit = {
+    import spark.implicits._
+    rows.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF(quantizerKey(table), "centroid").coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/$table")
+  }
+
+  private def readQuantizer(spark: SparkSession, path: String,
+      table: String): Array[Array[Double]] = {
+    import spark.implicits._
+    spark.read.parquet(s"$path/$table")
+      .orderBy(col(quantizerKey(table)).asc)
+      .select(col("centroid")).as[Seq[Double]].collect()
+      .map(_.toArray)
+  }
+
+  private def quantizer(spark: SparkSession, path: String, table: String): Quantizer =
+    spark.sparkContext.broadcast(readQuantizer(spark, path, table))
+
+  /** Write an index at rest: `writeBase` (handed the quantizers,
+    * broadcast, in order) and one table per quantizer. The writes are
+    * independent, so they overlap (r12, guide §2.6 via DriverPar): the
+    * 1-task quantizer writes ride in the base write's stage tail
+    * instead of adding serial jobs, and their distinct output
+    * directories keep the committers' staging paths apart. */
+  private def buildIndex(spark: SparkSession, path: String, label: String,
+      quantizers: (String, Array[Array[Double]])*)(
+      writeBase: Seq[Quantizer] => Unit): Unit = {
+    val bcs = quantizers.map { case (_, q) => spark.sparkContext.broadcast(q) }
+    DriverPar.run(spark, label)((() => writeBase(bcs)) +: quantizers.map {
+      case (table, q) => () => writeQuantizer(spark, path, table, q) })
+    bcs.foreach(_.destroy())
+  }
+
+  private def fileSystem(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Append a stream's encoded rows to the cell-partitioned `delta/`
+    * tier through Spark's exactly-once parquet file sink. */
+  private def ingestDelta(rows: DataFrame, path: String,
+      checkpoint: String): StreamingQuery =
+    rows.writeStream
+      .format("parquet")
+      .option("path", s"$path/delta")
+      .option("checkpointLocation", checkpoint)
+      .partitionBy("cell")
+      .start()
+
+  /** Candidate pairs of a cell-partitioned index: each probe routed to
+    * its `nprobe` nearest cells, against the rows of those cells in the
+    * `table` tier ∪ the committed `delta/` tier (if an ingest has run).
+    * The distinct probed-cell set is collected to the driver — bounded
+    * by nlist, never by the corpus — and `cell IN (…)` over partition
+    * values prunes the unprobed dirs of both tiers at planning time.
+    * The delta read goes through the file sink's commit log, so only
+    * committed batches are visible. */
+  private def probeTiers(spark: SparkSession, path: String, table: String,
+      probes: DataFrame, nprobe: Int, extra: Column*): DataFrame = {
+    import spark.implicits._
+    val pb = routeProbes(probes, quantizer(spark, path, "centroids"), nprobe, extra: _*)
+    val cells = pb.select(col("cell")).distinct().as[Int].collect().toSeq
+    val base = spark.read.parquet(s"$path/$table")
+    val tiers =
+      if (fileSystem(spark, path).exists(new Path(s"$path/delta")))
+        base.unionByName(
+          spark.read.parquet(s"$path/delta").select(base.columns.map(col): _*))
+      else base
+    pairs(tiers.filter(col("cell").isin(cells: _*)), pb, "cell")
+  }
+
+  /** Fold the streaming `delta/` tier into the base `table`: one
+    * cell-partitioned rewrite of base ∪ delta into `<table>_compacting`,
+    * swapped in by two renames (live → `<table>_old`, compacted → live;
+    * the journal persister's rename commit), then `_old`, the delta and
+    * its commit log are dropped. Run offline: stop the ingest query
+    * first; on restart its checkpoint skips the already-folded batches.
+    *
+    * A crash does NOT always leave either the old or the compacted
+    * index live. Two windows break that:
+    *  - between the two renames no `<table>/` exists: every probe
+    *    fails, and so does the next compaction (it reads the base);
+    *  - after the swap but before the delta is deleted, the base
+    *    already holds the delta's rows and `delta/` is still read:
+    *    probes return each streamed vector twice, and the next
+    *    compaction folds the delta in again.
+    * Closing both needs a commit marker that the tier read honours.
+    */
+  private def compact(spark: SparkSession, path: String, table: String): Unit = {
+    val fs = fileSystem(spark, path)
+    val delta = new Path(s"$path/delta")
+    if (!fs.exists(delta)) return
+    spark.read.parquet(s"$path/$table")
+      .unionByName(spark.read.parquet(s"$path/delta"))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$path/${table}_compacting")
+    val live = new Path(s"$path/$table")
+    val old = new Path(s"$path/${table}_old")
+    fs.delete(old, true)
+    require(fs.rename(live, old), s"aside-rename of live $table failed under $path")
+    require(fs.rename(new Path(s"$path/${table}_compacting"), live),
+      s"rename of compacted $table failed under $path")
+    fs.delete(old, true)
+    fs.delete(delta, true)
+  }
+
+  /** Serve a stream batch by batch: `probe` each non-empty micro-batch,
+    * append its rows to `outPath`, then release the result (a probe may
+    * return a cached frame, as `Retrieval.bm25ProbeIndex` does; unreleased,
+    * a long-running serve pins one cache entry per batch). Delivery is
+    * at-least-once per batch: a crash between the append and the
+    * checkpoint commit replays the batch (no `_spark_metadata` log
+    * here, unlike the ingest tier's file sink), and the replay rewrites
+    * identical rows, so readers dedup on the result key or read the
+    * latest run. */
+  private[operators] def serveBatches(stream: DataFrame, outPath: String,
+      checkpoint: String)(probe: DataFrame => DataFrame): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) {
+          val hits = probe(batch)
+          try hits.write.mode("append").parquet(outPath)
+          finally hits.unpersist()
+        }
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
 }

@@ -89,10 +89,8 @@ object CorpusOps {
     // a batch gate: every doc tagged with its distinct eval-shingle hit
     // count via a broadcast sorted array of eval-set shingle hashes. A
     // stateless projection — no shuffle, corpus scanned once — whose
-    // counts equal q57's broadcast-join scan by construction; the
-    // deployment's Bloom form (ingestGuard, spec-tested) trades this
-    // determinism for ~14 bits/shingle when the eval set outgrows
-    // broadcast. Eval docs self-hit (routed by stream, not tag).
+    // counts equal q57's broadcast-join scan by construction. Eval
+    // docs self-hit (routed by stream, not tag).
     "q166_ingest_guard_exact" -> { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)

@@ -18,25 +18,6 @@ import graft.operators.{Dedup, Similarity, TextAnalysis}
   */
 object PipelineOps {
 
-  /** Deterministic per-dataset index root, recreated per invocation —
-    * Files.createTempDirectory leaked a full index copy (for IVF, the
-    * whole corpus) into /tmp on every run; one stable path per
-    * (dataset, kind) is rewritten in place instead (StreamOps' journal
-    * root pattern).
-    */
-  private def indexDir(sfDir: String, kind: String): String = {
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft-$kind-${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally s.close()
-    }
-    p.toString
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- q18: token counting.
     "q18_token_stats" -> { (s, d) =>
@@ -219,7 +200,7 @@ object PipelineOps {
     "q85_ann_ivf_at_rest" -> { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d)
-      val idx = indexDir(d, "ivf")
+      val idx = StreamOps.privateRoot("ivf")
       Similarity.ivfBuildIndex(emb, idx, nlist = 16)
       Similarity.ivfProbeIndex(s, idx, emb.filter($"vec_id" < 10),
           k = 5, nprobe = 4)
@@ -243,7 +224,7 @@ object PipelineOps {
     "q86_pq_at_rest" -> { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d)
-      val idx = indexDir(d, "pq")
+      val idx = StreamOps.privateRoot("pq")
       Similarity.pqBuildIndex(emb, idx)
       Similarity.pqProbeIndex(s, idx, emb.filter($"vec_id" < 10), kTop = 5)
         .select($"probe_id", $"vec_id", $"adc", $"rank")
@@ -256,7 +237,7 @@ object PipelineOps {
     "q87_ivfpq_at_rest" -> { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d)
-      val idx = indexDir(d, "ivfpq")
+      val idx = StreamOps.privateRoot("ivfpq")
       Similarity.ivfPqBuildIndex(emb, idx)
       Similarity.ivfPqProbeIndex(s, idx, emb.filter($"vec_id" < 10),
           kTop = 5, nprobe = 4)
@@ -527,7 +508,7 @@ object PipelineOps {
 
   /** Shared CTE prefix for the IVF oracles: md5-sampled centroids,
     * per-vector cell ranking, and `corpus(vec_id, v, cell)` — the
-    * argmax-1 assignment [[Similarity.ivfCentroids]]/`nearestCellUdf`
+    * argmax-1 assignment [[Similarity.ivfCentroids]]/`cellOf`
     * replay in SQL.
     */
   private def ivfCtePrefix: String =

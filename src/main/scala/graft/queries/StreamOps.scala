@@ -80,9 +80,8 @@ object StreamOps {
 
     // ---- q167: the STREAMING ingest guard end-to-end (VERDICT r8 #3):
     // the corpus replayed as a file-stream source (one parquet file per
-    // micro-batch), tagged in-stream by the EXACT guard (deterministic
-    // — the Bloom form's one-sided error is spec-gated, not oracle-
-    // gateable), and ROUTED at write time: contaminated docs land in a
+    // micro-batch), tagged in-stream by the exact guard
+    // (deterministic), and ROUTED at write time: contaminated docs land in a
     // quarantine journal, clean docs in the train journal, through the
     // crash-atomic foreachBatch journal sink. The driver-checked result
     // reads BOTH journals back and reassembles the per-doc tags — so
@@ -200,9 +199,10 @@ object StreamOps {
       .select("r.*")
   }
 
-  /** A journal root of its own for one query invocation, so
-    * concurrent runs never share one. It is deleted when the JVM exits,
-    * not on return: the returned frame reads its journals lazily.
+  /** A root of its own (for journals or an index) for one query
+    * invocation, so concurrent or repeated runs never share one. It is
+    * deleted when the JVM exits, not on return: the returned frame
+    * reads the files under it lazily.
     */
   private[queries] def privateRoot(tag: String): String = {
     val p = Files.createTempDirectory(s"graft-journals-$tag-")

@@ -36,20 +36,40 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 1)
   }
 
+  /** Main-source files under `dir`, other than `except`, whose text
+    * contains any of `needles`, relative to src/main/scala. */
+  private def mentioning(dir: java.nio.file.Path, except: String,
+      needles: String*): Vector[String] = {
+    val main = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(dir), s"no $dir under ${sys.props("user.dir")}")
+    val stream = java.nio.file.Files.walk(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != except)
+        .filter { p =>
+          val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          needles.exists(text.contains)
+        }
+        .map(main.relativize(_).toString).toVector.sorted
+    } finally stream.close()
+  }
+
   test("engine code builds sessions only through Engine") {
     // One session recipe: a second SparkSession.builder() in main code
     // runs queries without the extension or the engine's conventions.
-    val main = java.nio.file.Paths.get("src", "main", "scala")
-    assert(java.nio.file.Files.isDirectory(main), s"no $main under ${sys.props("user.dir")}")
-    val stream = java.nio.file.Files.walk(main)
-    val offenders = try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Engine.scala")
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .contains("SparkSession.builder("))
-        .map(main.relativize(_).toString).toVector.sorted
-    } finally stream.close()
+    val offenders = mentioning(java.nio.file.Paths.get("src", "main", "scala"),
+      "Engine.scala", "SparkSession.builder(")
     assert(offenders.isEmpty, s"SparkSession.builder() outside Engine.scala: $offenders")
+  }
+
+  test("queries take scratch directories only from StreamOps.privateRoot") {
+    // A fixed temp path is shared by every run of a query, in this JVM
+    // and in any other: a second run deletes the files that the first
+    // run's lazily read frame still lists.
+    val offenders = mentioning(
+      java.nio.file.Paths.get("src", "main", "scala", "graft", "queries"),
+      "StreamOps.scala", "java.io.tmpdir", "\"/tmp", "createTempDirectory")
+    assert(offenders.isEmpty, s"temp paths outside StreamOps.privateRoot: $offenders")
   }
 }

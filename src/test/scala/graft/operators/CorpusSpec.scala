@@ -214,8 +214,8 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("shingleHashes returns DISTINCT hashes (the guard-hit-count contract)") {
-    // ingestGuard/ingestGuardExact document n_eval_hits as a DISTINCT
-    // count purely because this kernel dedups internally — pin it.
+    // ingestGuardExact documents n_eval_hits as a DISTINCT count
+    // purely because this kernel dedups internally — pin it.
     val rep = "a b c d e " * 4 + "tail"     // 5-gram "a b c d e" recurs 4×
     val hs = Dedup.shingleHashes(rep, 5)
     assert(hs.length == hs.distinct.length,

@@ -254,35 +254,6 @@ class OperatorsSpec extends SparkSpec {
     assert(selected <= 4, s"expected ≤4 probed cell partitions, read $selected")
   }
 
-  test("lshPlan: meets target recall at minimal background rate") {
-    // q37's production note: near-dup at tau~0.95 recalls >0.999.
-    val prod = Similarity.lshPlanCosine(0.95, 0.999)
-    assert(prod.recall >= 0.999)
-    assert(prod.bgCandidateRate < 0.05,
-      s"background rate ${prod.bgCandidateRate} too hot")
-
-    // The chosen plan is never beaten by another plan that both meets
-    // the target and has a lower background rate (spot grid check).
-    val pick = Similarity.lshPlanCosine(0.4, 0.74)
-    assert(pick.recall >= 0.74)
-    def hit(p: Double, b: Int, r: Int) =
-      1.0 - math.pow(1.0 - math.pow(p, r), b)
-    val p04 = 1.0 - math.acos(0.4) / math.Pi
-    for (b <- 1 to 64; r <- 1 to 16 if hit(p04, b, r) >= 0.74)
-      assert(hit(0.5, b, r) >= pick.bgCandidateRate - 1e-12)
-
-    // Tighter recall can't be cheaper.
-    val loose = Similarity.lshPlanJaccard(0.85, 0.9)
-    val tight = Similarity.lshPlanJaccard(0.85, 0.99)
-    assert(tight.recall >= 0.99 && loose.recall >= 0.9)
-    assert(tight.bgCandidateRate >= loose.bgCandidateRate - 1e-12)
-
-    // Unreachable targets fail loudly.
-    intercept[IllegalArgumentException] {
-      Similarity.lshPlan(0.2, 0.1, 0.999999, maxBands = 2, maxRows = 2)
-    }
-  }
-
   test("bigramLikelihood: add-one smoothed terms match hand computation") {
     import spark.implicits._
     // doc 1: a b a b -> bigrams (a,b) (b,a) (a,b); doc 2: c c -> (c,c)

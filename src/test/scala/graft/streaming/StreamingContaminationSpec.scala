@@ -9,19 +9,10 @@ import org.apache.spark.sql.functions._
 /** Ingest-time contamination guard (the per-message Validator analog,
   * reference message/interfaces.go:143-145): docs stream through a
   * guard and land in a journal ALREADY tagged, across a kill/restart.
-  * BOTH deployment forms ride the same harness:
-  *
-  *  - [[Contamination.ingestGuardExact]] (broadcast sorted eval-shingle
-  *    array): tags and hit counts equal the exact batch scan's
-  *    ([[Contamination.ngramOverlap]], q57's operator) BY CONSTRUCTION,
-  *    so parity is asserted exactly.
-  *  - [[Contamination.ingestGuard]] (broadcast Bloom): one-sided error
-  *    by contract — false positives at the sketch's fpp, never false
-  *    negatives — so it gets the one-sided assertions only (containment
-  *    + hits ≥ exact). Round 7 shipped an exact-parity assertion
-  *    against the Bloom and it failed deterministically on a
-  *    cross-boundary shingle collision (doc 13); never assert exactness
-  *    against a sketch.
+  * The guard, [[Contamination.ingestGuardExact]] (broadcast sorted
+  * eval-shingle array), tags and counts hits exactly as the batch scan
+  * ([[Contamination.ngramOverlap]], q57's operator) does BY
+  * CONSTRUCTION, so parity is asserted exactly.
   */
 class StreamingContaminationSpec extends SparkSpec {
 
@@ -141,31 +132,6 @@ class StreamingContaminationSpec extends SparkSpec {
     trainTags.filter(_._3).foreach { case (id, hits, _) =>
       assert(hits.toLong == batchByDoc(id),
         s"doc $id: ingest hits $hits != batch shared ${batchByDoc(id)}")
-    }
-  }
-
-  test("Bloom guard: same stream/restart path honors its one-sided contract") {
-    import spark.implicits._
-    val batchByDoc = batchAuthority()
-    val bloom = Contamination.evalShingleBloom(
-      Dedup.docShingles(all.toDF("doc_id", "text").filter(isEval($"doc_id")),
-        $"doc_id", $"text", 5))
-    // The Bloom broadcast must survive query restart re-serialization —
-    // that's what running it through the SAME journal+restart harness
-    // (not just a batch frame) protects.
-    val landed = streamThroughJournal(
-      Contamination.ingestGuard(_, bloom, n = 5))
-
-    val byId = landed.filter { case (id, _, _) => id % 17 != 0 }
-      .map(t => t._1 -> t).toMap
-    // One-sided error: every batch-reported doc is tagged, with a hit
-    // count at least the true shared count — never less (no false
-    // negatives); false positives over-tag and settle in batch.
-    batchByDoc.foreach { case (id, shared) =>
-      val (_, hits, c) = byId(id)
-      assert(c, s"batch-reported doc $id untagged (false negative)")
-      assert(hits.toLong >= shared,
-        s"doc $id: Bloom hits $hits < true shared $shared")
     }
   }
 }
