@@ -16,8 +16,10 @@ import scala.util.matching.Regex
   *    (`label_extensions.go:420-501`)
   *
   * In the Spark engine, label selectors resolve journals/tables at plan
-  * time (partition pruning over catalog metadata) and compile to Column
-  * predicates over label-bearing DataFrames via [[LabelSelector.toSqlPredicate]].
+  * time (partition pruning over catalog metadata) and filter
+  * label-bearing DataFrames through `matches_selector`
+  * ([[graft.plans.SelectorExtension]]), which Catalyst unfolds into
+  * native map predicates.
   */
 final case class Label(name: String, value: String, prefix: Boolean = false)
 
@@ -74,46 +76,6 @@ final case class LabelSelector(include: LabelSet, exclude: LabelSet) {
     groups(s).exists(g => groupMatches(g, set))
   private def allGroupsMatch(s: LabelSet, set: LabelSet): Boolean =
     groups(s).forall(g => groupMatches(g, set))
-
-  /** Compile to an ANSI-SQL predicate over a row whose columns carry the
-    * label values named by `colOf` (engine-side pushdown of selectors
-    * into Catalyst filters; columns are assumed non-null single-valued
-    * labels). Existence tests become IS NOT NULL.
-    */
-  def toSqlPredicate(colOf: String => String): String = {
-    def lit(v: String) = "'" + v.replace("'", "''") + "'"
-    // The selector value charset allows '%' and '_' (pathSymbols), and
-    // both are LIKE metacharacters: unescaped, "name:prefix=a_b" would
-    // compile to LIKE 'a_b%' where '_' matches ANY character —
-    // diverging from the matcher's literal startsWith ('aXb…' wrongly
-    // kept). '!' is outside the value charset, making it a collision-
-    // free ESCAPE character (still doubled defensively).
-    def likeEsc(v: String) =
-      v.replace("!", "!!").replace("%", "!%").replace("_", "!_")
-    def one(l: Label, negate: Boolean): String = {
-      val c = colOf(l.name)
-      if (l.value.isEmpty) s"$c IS ${if (negate) "" else "NOT "}NULL"
-      else if (l.prefix) {
-        val p = s"$c LIKE ${lit(likeEsc(l.value) + "%")} ESCAPE '!'"
-        // Negated terms must keep NULL rows: an absent label is
-        // not-excluded (matcher + RewriteMatchesSelector semantics),
-        // but bare NOT(...)/<> evaluates to NULL and drops the row.
-        if (negate) s"($c IS NULL OR NOT ($p))" else p
-      } else if (negate) s"($c IS NULL OR $c <> ${lit(l.value)})"
-      else s"$c = ${lit(l.value)}"
-    }
-    def group(g: Vector[Label], negate: Boolean): String =
-      g.map(one(_, negate)).mkString("(", if (negate) " AND " else " OR ", ")")
-    val inc = groups(include).map(group(_, negate = false))
-    // Exclusion: NOT (any value matches); absent name is not excluded.
-    val exc = groups(exclude).map { g =>
-      if (g.head.value.isEmpty && g.size == 1)
-        s"(${colOf(g.head.name)} IS NULL)"
-      else group(g, negate = true)
-    }
-    val all = inc ++ exc
-    if (all.isEmpty) "TRUE" else all.mkString(" AND ")
-  }
 }
 
 object LabelSelector {

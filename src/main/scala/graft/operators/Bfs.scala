@@ -20,8 +20,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Each round's count materializes the visited table, so no round
   * recomputes an earlier one, and stops the loop early when the
-  * frontier drains. The visited table is carried through [[IterLoop.rebase]],
-  * so the plan stays one leaf instead of doubling per hop.
+  * frontier drains. The hops run through [[IterLoop.rounds]], which
+  * rebases the visited table, so the plan stays one leaf instead of
+  * doubling per hop.
   */
 object Bfs {
 
@@ -46,28 +47,21 @@ object Bfs {
     // discoveries before the exchange, where distinct+anti-join shipped
     // them twice. The visited table is ONE cache replaced per hop
     // (same Σ bytes as the per-frontier caches it replaces).
-    var visited = IterLoop.rebase(seeds.selectExpr("cast(node as long) as node")
-      .distinct().withColumn("dist", lit(0)))
-    var frontier = visited
-    var hop = 0
-    var drained = false
-    while (hop < maxHops && !drained) {
-      hop += 1
-      val expanded = frontier.select(col("node").as("fnode"))
+    // The count of round `hop`'s frontier (dist = hop) materializes
+    // the visited table AND is the drain check: one action per hop.
+    val (visited, _) = try IterLoop.rounds("bfs",
+        seeds.selectExpr("cast(node as long) as node")
+          .distinct().withColumn("dist", lit(0)), maxHops) { (visited, hop) =>
+      val expanded = visited.filter(col("dist") === hop - 1)
+        .select(col("node").as("fnode"))
         .join(e.as("e"), col("fnode") === col("e.src"))
         .select(col("e.dst").as("node")).withColumn("dist", lit(hop))
-      val nextVisited = IterLoop.rebase(visited.select(col("node"), col("dist"))
+      visited.select(col("node"), col("dist"))
         .unionAll(expanded)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
-      val newFrontier = nextVisited.filter(col("dist") === hop)
-      // The count materializes nextVisited's cache (full scan) AND is
-      // the drain check — still exactly one action per hop.
-      drained = newFrontier.count() == 0
-      visited.unpersist()
-      visited = nextVisited
-      frontier = newFrontier
-    }
-    e.unpersist()
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    } { (visited, _, hop) =>
+      visited.filter(col("dist") === hop).count() == 0
+    } finally e.unpersist()
     visited
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * kernel ([[graft.functions.BpeMergeOne]]; the Catalyst HOF fold it
   * replaced allocated a sequence+filter+transform chain per document
   * per round and its compounded codegen paid tens of seconds of JIT on
-  * first execution). The corpus
-  * is carried through [[IterLoop.rebase]], so round r neither replays
+  * first execution). The rounds run through [[IterLoop.rounds]],
+  * which rebases the corpus each round, so round r neither replays
   * rounds 1..r-1 nor analyses a plan one Project deeper per round.
   *
   * Merged symbols are space-joined token runs; original tokens are
@@ -66,50 +66,34 @@ object Bpe {
     // ~10 M; a web-scale early-round vocabulary would want
     // ~vocab²·16B/64MiB partitions.
     IterLoop.tinyReduce(spark) {
-      trainMergesLoop(docs, id, text, rounds)
-    }
-  }
-
-  private def trainMergesLoop(docs: DataFrame, id: Column, text: Column,
-      rounds: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-
-    var corpus = IterLoop.rebase(docs
-      .select(id.cast("long").as("doc_id"),
-        TextAnalysis.wordTokens(text).as("syms"))
-      .filter(size(col("syms")) >= 2))
-    // The parent round's cache is dropped only AFTER the child's first
-    // action (the argmax below) has materialized the child — so each
-    // round costs exactly ONE corpus pass, with no extra count() pass.
-    var parent: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val best = corpus
-        .select(explode(pairsOf(col("syms"))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= 2) // a singleton pair is not a vocab merge
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc).limit(1)
-        .as[(String, String, Long)].collect()
-      if (parent != null) { parent.unpersist(); parent = null }
-      if (best.isEmpty) done = true
-      else {
-        val (l, rr, cnt) = best(0)
-        merges += ((r, l, rr, cnt))
-        parent = corpus
-        corpus = IterLoop.rebase(
-          corpus.withColumn("syms", applyMerge(col("syms"), l, rr)))
-        r += 1
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      // Round 1 tokenizes, round r > 1 applies merge r-1; each round's
+      // argmax, its one corpus pass, picks merge r from the rebased frame.
+      val (last, _) = IterLoop.rounds("bpe",
+          docs.select(id.cast("long").as("doc_id"), text.as("text")), rounds) { (cur, r) =>
+        if (r == 1)
+          cur.select(col("doc_id"), TextAnalysis.wordTokens(col("text")).as("syms"))
+            .filter(size(col("syms")) >= 2)
+        else {
+          val (_, l, rr, _) = merges.last
+          cur.withColumn("syms", applyMerge(col("syms"), l, rr))
+        }
+      } { (corpus, _, r) =>
+        val best = corpus
+          .select(explode(pairsOf(col("syms"))).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(count(lit(1)).as("cnt"))
+          .filter(col("cnt") >= 2) // a singleton pair is not a vocab merge
+          .orderBy(col("cnt").desc, col("l").asc, col("r").asc).limit(1)
+          .as[(String, String, Long)].collect()
+        best.foreach { case (l, rr, cnt) => merges += ((r, l, rr, cnt)) }
+        best.isEmpty
       }
+      last.unpersist()
+      spark.createDataFrame(merges.toSeq).toDF("r", "lhs", "rhs", "freq")
+        .select(col("r").cast("int").as("r"), col("lhs"), col("rhs"),
+          col("freq"))
     }
-    if (parent != null) parent.unpersist()
-    corpus.unpersist()
-    spark.createDataFrame(merges.toSeq).toDF("r", "lhs", "rhs", "freq")
-      .select(col("r").cast("int").as("r"), col("lhs"), col("rhs"),
-        col("freq"))
   }
 
   /** Apply an ordered merge list to the corpus (the serving pass:

@@ -178,9 +178,10 @@ object Clustering {
     * literal — codegen'd fused cosine, no UDF, no shuffle) and ONE
     * 1-row argmax pull to the driver (`orderBy.limit(1)` = per-partition
     * top-1 then a k-way merge — never a sort of the corpus). State on
-    * the driver is k rows total. The md column is carried through
-    * [[IterLoop.rebase]], so round r neither replays rounds 1..r-1 nor
-    * analyses a plan that grows by one Project per round.
+    * the driver is k rows total. The rounds run through
+    * [[IterLoop.rounds]], which rebases the md column each round, so
+    * round r neither replays rounds 1..r-1 nor analyses a plan that
+    * grows by one Project per round.
     *
     * Determinism: dist = round(1 − round(cos, 6), 6); argmax ties break
     * to the lowest vec_id; already-chosen ids are excluded by id (not
@@ -211,27 +212,20 @@ object Clustering {
     require(seed.nonEmpty, "kcenterGreedy: empty input")
     val chosen = scala.collection.mutable.ArrayBuffer(
       (1, seed(0)._1, 2.0))
-    var cur = IterLoop.rebase(base.withColumn("md", distTo(seed(0)._2)))
-    // Parent caches drop only after the child's argmax action has
-    // materialized the child — one corpus pass per round, no count().
-    var parent: DataFrame = null
-    var r = 2
-    while (r <= k) {
-      val next = cur.filter(!col("vec_id").isin(chosen.map(_._2).toSeq: _*))
+    var newest = seed(0)._2
+    // Round r folds center r into md (round 1's NULL md takes the seed's
+    // distance as is: least skips NULL) and its argmax picks center r+1.
+    val (last, _) = IterLoop.rounds("kcenter",
+        base.withColumn("md", lit(null).cast("double")), k - 1) { (cur, _) =>
+      cur.withColumn("md", least(col("md"), distTo(newest)))
+    } { (next, _, r) =>
+      val best = next.filter(!col("vec_id").isin(chosen.map(_._2).toSeq: _*))
         .orderBy(col("md").desc, col("vec_id").asc).limit(1)
         .as[(Long, Array[Float], Double)].collect()
-      if (parent != null) { parent.unpersist(); parent = null }
-      if (next.isEmpty) { r = k + 1 } // fewer than k points
-      else {
-        val (id, v, d) = next(0)
-        chosen += ((r, id, d))
-        parent = cur
-        cur = IterLoop.rebase(cur.withColumn("md", least(col("md"), distTo(v))))
-        r += 1
-      }
+      best.foreach { case (id, v, d) => chosen += ((r + 1, id, d)); newest = v }
+      best.isEmpty // fewer than k points
     }
-    if (parent != null) parent.unpersist()
-    cur.unpersist()
+    last.unpersist()
     base.unpersist()
     spark.createDataFrame(chosen.toSeq).toDF("r", "vec_id", "sel_dist")
       .select(col("r").cast("int").as("r"), col("vec_id"), col("sel_dist"))

@@ -69,9 +69,10 @@ object Curation {
     * collected. For HIGH-diameter graphs (chains, lattices) use
     * [[connectedComponentsStars]] — O(log n) rounds, same result.
     *
-    * The label table is carried through [[IterLoop.rebase]]. Carrying
-    * the previous label in the materialized row makes the convergence
-    * check a filter-count on the cache, not a self-join.
+    * The rounds run through [[IterLoop.rounds]], which rebases the
+    * label table each round. Carrying the previous label in the
+    * materialized row makes the convergence check a filter-count on
+    * the cache, not a self-join.
     *
     * Why not Spark 4's `WITH RECURSIVE` (the DuckDB oracle's form):
     * Spark supports only UNION ALL in the recursive member
@@ -88,37 +89,39 @@ object Curation {
     val sym = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .unionAll(edges.select(col("b").cast("long").as("a"), col("a").cast("long").as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var cached = IterLoop.rebase(sym.groupBy(col("a"))
-      .agg(least(min(col("b")), col("a")).as("comp")) // round 1 fused into init
-      .withColumnRenamed("a", "id"))
-    var labels = cached
-    var iter = 1
-    var converged = false
-    while (!converged && iter < maxIter) {
+    // Round 1 is fused into the initial labels; each later round
+    // carries the previous label as `prev`, so the changed-set count
+    // is a filter on the round's own cache.
+    val (last, converged) = try IterLoop.rounds("cc", sym.groupBy(col("a"))
+        .agg(least(min(col("b")), col("a")).as("comp"))
+        .withColumnRenamed("a", "id"), maxIter - 1) { (cur, _) =>
+      val labels = cur.select(col("id"), col("comp"))
       val nbrMin = sym.join(labels, sym("b") === labels("id"))
         .groupBy(sym("a").as("id")).agg(min(col("comp")).as("cand"))
-      val next = IterLoop.rebase(labels.as("l")
+      labels.as("l")
         .join(nbrMin.as("n"), col("l.id") === col("n.id"), "left")
         .select(col("l.id").as("id"),
           least(col("l.comp"), coalesce(col("n.cand"), col("l.comp"))).as("comp"),
-          col("l.comp").as("prev")))
-      val changed = next.filter(col("comp") < col("prev")).count()
-      cached.unpersist()
-      cached = next
-      labels = next.select(col("id"), col("comp"))
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist()
-    if (!converged) cached.unpersist() // don't leak the cache on the failure path
-    require(converged, s"connectedComponents did not converge in $maxIter rounds — " +
-      "component diameter exceeds the bound; raise maxIter")
+          col("l.comp").as("prev"))
+    } { (next, _, _) =>
+      next.filter(col("comp") < col("prev")).count() == 0
+    } finally sym.unpersist()
+    requireConverged(last, converged, s"connectedComponents did not converge in " +
+      s"$maxIter rounds — component diameter exceeds the bound; raise maxIter")
     // The returned frame reads the final round's MEMORY_AND_DISK cache
     // (dropping it would recompute the whole loop). Long-lived sessions
     // should consume the labels (write/aggregate) and then clearCache(),
     // as the bench harness does per rep; gate queries run once so the
     // cost is bounded.
-    labels
+    last.select(col("id"), col("comp"))
+  }
+
+  /** The connected-components loops' failure path: release the loop's
+    * last frame (the caller owns it) before failing. */
+  private def requireConverged(last: DataFrame, converged: Boolean,
+      msg: => String): Unit = {
+    if (!converged) last.unpersist()
+    require(converged, msg)
   }
 
   /** Connected components by alternating large-star/small-star
@@ -137,7 +140,8 @@ object Curation {
     * center's neighbor set is never materialized in one task);
     * small-star = the same over the to-larger-endpoint orientation;
     * then canonicalize + distinct. Fixed point is an exact anti-join
-    * emptiness test; the edge set is carried through [[IterLoop.rebase]].
+    * emptiness test; the rounds run through [[IterLoop.rounds]], which
+    * rebases the edge set each round.
     */
   def connectedComponentsStars(edges: DataFrame, maxIter: Int = 30): DataFrame = {
     def canon(df: DataFrame): DataFrame =
@@ -145,14 +149,16 @@ object Curation {
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
         .distinct()
-    var cur = IterLoop.rebase(canon(edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))))
-    // |cur| rides along from each round's materializing count, so the
-    // convergence test below can usually skip its join outright.
-    var curCount = cur.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    // |cur| of the round's input, carried from the previous round's
+    // count, so the convergence test below can usually skip its join
+    // outright.
+    var curCount = 0L
+    val (last, converged) = IterLoop.rounds("cc-stars", canon(edges.select(
+        col("a").cast("long").as("a"), col("b").cast("long").as("b"))),
+        maxIter) { (cur, round) =>
+      // Round 1 counts the canonical edge set first, which also
+      // materializes it before the round's plan reads it three times.
+      if (round == 1) curCount = cur.count()
       // Large-star: every node u links its LARGER neighbors to
       // m = min(Γ(u) ∪ {u}).
       val sym = cur.select(col("a").as("u"), col("b").as("v"))
@@ -178,9 +184,9 @@ object Curation {
       val e2 = large
         .select(col("a").as("u"), col("b").as("v")) // u > v by the above
       val minsS = e2.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = e2.join(minsS, "u").select(col("v").as("a"), col("m").as("b"))
-        .unionAll(minsS.select(col("u").as("a"), col("m").as("b")))
-      val next = IterLoop.rebase(canon(small))
+      canon(e2.join(minsS, "u").select(col("v").as("a"), col("m").as("b"))
+        .unionAll(minsS.select(col("u").as("a"), col("m").as("b"))))
+    } { (next, cur, _) =>
       // Convergence = set equality of two DISTINCT edge sets. One
       // count materializes `next`; when the cardinality moved, the sets
       // provably differ and both r11 anti-join jobs are skipped; when it
@@ -188,20 +194,17 @@ object Curation {
       // ⇒ cur∖next = ∅ too, since |cur∖next| = |cur| − |cur∩next| = 0).
       // Typical rounds pay 1 job here instead of 2-3.
       val nextCount = next.count()
-      converged = nextCount == curCount &&
+      val same = nextCount == curCount &&
         next.join(cur, Seq("a", "b"), "left_anti").isEmpty
-      cur.unpersist()
-      cur = next
       curCount = nextCount
-      iter += 1
+      same
     }
-    if (!converged) cur.unpersist() // don't leak the cache on the failure path
-    require(converged,
+    requireConverged(last, converged,
       s"connectedComponentsStars did not converge in $maxIter rounds")
     // Fixed point is a star per component; canon puts the center
     // (= component min) in `a`.
-    cur.select(col("b").as("id"), col("a").as("comp"))
-      .unionAll(cur.select(col("a").as("id"), col("a").as("comp")))
+    last.select(col("b").as("id"), col("a").as("comp"))
+      .unionAll(last.select(col("a").as("id"), col("a").as("comp")))
       .distinct()
   }
 

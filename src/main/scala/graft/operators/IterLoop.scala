@@ -1,14 +1,18 @@
 package graft.operators
 
+import graft.metrics.GraftMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The two disciplines of DRIVER-SYNCHRONIZED iterative loops.
   *
-  * [[rebase]] is how a loop carries a frame from one round to the
-  * next. Catalyst analyses a frame's whole logical plan on every
-  * action, and `persist` caches the data, not the plan: a round built
-  * from the previous round's frame, used m times, multiplies the plan
+  * [[rounds]] is the one loop driver: every loop that carries a frame
+  * from one round to the next (k-core peeling, BFS, both connected-
+  * components loops, k-center, the BPE trainer) runs its rounds
+  * through it, and it carries each round's frame through [[rebase]].
+  * Catalyst analyses a frame's whole logical plan on every action,
+  * and `persist` caches the data, not the plan: a round built from
+  * the previous round's frame, used m times, would multiply the plan
   * by m per round (k-core peeling ×3, BFS ×2; PERF.md "Flat plans for
   * the iterative loops"). A rebased frame is one plan node whatever
   * the round.
@@ -32,15 +36,69 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object IterLoop {
 
-  /** `df` as a single flat leaf over its rows, persisted
-    * MEMORY_AND_DISK. The round's next action materializes the cache
-    * (with AQE on, `df`'s shuffle stages run here already). The leaf
-    * keeps RDD lineage, so a cached block lost with an executor
-    * recomputes (`localCheckpoint` blocks do not). The caller
-    * unpersists the previous round's frame once this one is
-    * materialized.
+  /** The local property that names the loop a job belongs to. */
+  val OpProperty = "graft.op"
+
+  // `SparkContext.SPARK_JOB_DESCRIPTION`, which is private[spark].
+  private val JobDescription = "spark.job.description"
+
+  /** Run up to `maxRounds` rounds from `init`, rebased. Round r builds
+    * its frame with `step(cur, r)` and rebases it; `converged(next,
+    * cur, r)` runs the round's one action on the rebased `next`, which
+    * materializes it, and says whether the loop is done. Only then is
+    * `cur` released. Returns the last frame, still cached, and whether
+    * the loop converged; the caller owns that frame. If a round throws,
+    * every round frame the loop holds is released first.
+    *
+    * Every job of the loop carries the job description `<op> round
+    * <r>` (round 0 rebases `init`) and the local property
+    * [[OpProperty]] = `op`. Both are thread-local and [[DriverPar]]
+    * threads share the session, so the caller's values are restored on
+    * exit. Rounds count into `loop.<op>.rounds`
+    * ([[graft.metrics.GraftMetrics]]).
     */
-  def rebase(df: DataFrame): DataFrame =
+  def rounds(op: String, init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Int) => DataFrame)(
+      converged: (DataFrame, DataFrame, Int) => Boolean): (DataFrame, Boolean) = {
+    val sc = init.sparkSession.sparkContext
+    val savedDesc = sc.getLocalProperty(JobDescription)
+    val savedOp = sc.getLocalProperty(OpProperty)
+    val roundCount = GraftMetrics.counter(s"loop.$op.rounds")
+    var cur: DataFrame = null
+    var next: DataFrame = null
+    try {
+      sc.setLocalProperty(OpProperty, op)
+      sc.setJobDescription(s"$op round 0")
+      cur = rebase(init)
+      var r = 0
+      var done = false
+      while (!done && r < maxRounds) {
+        r += 1
+        sc.setJobDescription(s"$op round $r")
+        roundCount.inc()
+        next = rebase(step(cur, r))
+        done = converged(next, cur, r)
+        cur.unpersist()
+        cur = next
+        next = null
+      }
+      (cur, done)
+    } catch { case t: Throwable =>
+      Seq(next, cur).filter(_ != null).foreach(_.unpersist())
+      throw t
+    } finally {
+      sc.setLocalProperty(OpProperty, savedOp)
+      sc.setJobDescription(savedDesc)
+    }
+  }
+
+  /** `df` as a single flat leaf over its rows, persisted
+    * MEMORY_AND_DISK. The round's action materializes the cache (with
+    * AQE on, `df`'s shuffle stages run here already). The leaf keeps
+    * RDD lineage, so a cached block lost with an executor recomputes
+    * (`localCheckpoint` blocks do not).
+    */
+  private def rebase(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.ColumnBridge.rddLeaf(df)
       .persist(StorageLevel.MEMORY_AND_DISK)
 

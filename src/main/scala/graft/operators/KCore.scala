@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * count used for convergence. Rounds are bounded by `maxRounds`
   * (peeling converges in O(peel-depth) rounds, typically < 10 on
   * power-law graphs). Each round's count materializes the filtered
-  * edge list, so no round recomputes an earlier one; the edge list is
-  * carried through [[IterLoop.rebase]], so the plan stays one leaf
-  * instead of tripling per round.
+  * edge list, so no round recomputes an earlier one; the rounds run
+  * through [[IterLoop.rounds]], which rebases the edge list, so the
+  * plan stays one leaf instead of tripling per round.
   *
   * Determinism: degree thresholds are integer comparisons on exact
   * counts — the fixpoint is unique (the k-core is a well-defined
@@ -38,31 +38,30 @@ object KCore {
   def core(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var e = IterLoop.rebase(edges
+    // |e| of the round's input, carried from the previous round's count.
+    var n = 0L
+    val (e, _) = IterLoop.rounds("kcore", edges
       .selectExpr("cast(src as long) as src", "cast(dst as long) as dst")
       // Self-loops and duplicate edge rows inflate degrees (a vertex
       // could sit in the reported core on loop-degree alone) — drop
       // and dedupe up front, as Triangles does.
       .filter(col("src") =!= col("dst"))
-      .distinct())
-    var n = e.count()
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      round += 1
+      .distinct(), maxRounds) { (e, round) =>
+      // Round 1 counts the deduped edge list first, which also
+      // materializes it before the round's plan reads it three times.
+      if (round == 1) n = e.count()
       val keep = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("node"))
-      val pruned = IterLoop.rebase(e
-        .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+      e.join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
+        .select(col("src"), col("dst"))
+    } { (pruned, _, _) =>
       val m = pruned.count()
-      converged = m == n
-      e.unpersist()
-      e = pruned
+      val same = m == n
       n = m
+      same
     }
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k) // final-round degrees can dip below k

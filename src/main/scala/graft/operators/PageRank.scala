@@ -26,7 +26,8 @@ import org.apache.spark.storage.StorageLevel
   * ranks table carries deg, so the outflow r div deg is a projection,
   * not a join (r12; the old shape paid a deg⋈ranks join per
   * iteration). The plan grows linearly with iterations; a deep run
-  * that must bound it carries `ranks` through [[IterLoop.rebase]].
+  * that must bound it runs its iterations through [[IterLoop.rounds]],
+  * which rebases `ranks` each round.
   */
 object PageRank {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.F
-import graft.labels.LabelSelector
+import graft.plans.SelectorExtension
 
 /** Queries exercising the engine's Gazette-derived operator families:
   * the UUID v1 scalar family (SURVEY §2.4 E1), partition mappings
@@ -62,13 +62,13 @@ object GazetteOps {
     },
 
     // ---- q17: label-selector resolution (P1/P2): the documents table's
-    // (lang, source) columns act as the label set; a parsed selector
-    // compiles to a Catalyst predicate.
+    // (lang, source) columns act as the label set (a NULL column is an
+    // absent label); the selector compiles to a Catalyst predicate.
     "q17_selector_filter" -> { (s, d) =>
-      val selector = LabelSelector.mustParse(
-        "lang in (en, de), source:prefix=src1, source not in (src14, src16)")
       Tables.documents(s, d)
-        .filter(expr(selector.toSqlPredicate(identity)))
+        .filter(SelectorExtension.matches_selector(
+          map(lit("lang"), col("lang"), lit("source"), col("source")),
+          "lang in (en, de), source:prefix=src1, source not in (src14, src16)"))
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n"))
     }

@@ -169,14 +169,11 @@ object Journal {
 
   private val FragmentRe = """([0-9a-f]{16})-([0-9a-f]{16})-([0-9a-f]{40})\.(\w+)""".r
 
-  /** Fragment listing; `modifiedAfterMs` is the begin_mod_time read
-    * filter (P5, protocol.proto:438-442): skip fragments persisted
-    * before the bound. Fragment paths keep the caller's root form
+  /** Fragment listing. Fragment paths keep the caller's root form
     * (plain POSIX stays plain; URI roots stay URIs).
     */
-  def listFragments(root: String, journal: String,
-      modifiedAfterMs: Long = Long.MinValue): Vector[Fragment] =
-    listFragments(Seq(root), journal, modifiedAfterMs)
+  def listFragments(root: String, journal: String): Vector[Fragment] =
+    listFragments(Seq(root), journal)
 
   /** Multi-store listing (S4, the reference's WalkAllStores,
     * broker/fragment/index.go:224-257): one journal's fragments may
@@ -184,8 +181,7 @@ object Journal {
     * downstream — reads as one contiguous stream. Content addressing
     * dedupes a fragment present in two stores (same begin/end/sha).
     */
-  def listFragments(roots: Seq[String], journal: String,
-      modifiedAfterMs: Long): Vector[Fragment] = {
+  def listFragments(roots: Seq[String], journal: String): Vector[Fragment] = {
     val conf = hadoopConf
     roots.iterator.flatMap { root =>
       val dir = new HPath(root, journal)
@@ -202,8 +198,7 @@ object Journal {
         while (it.hasNext) {
           val st = it.next()
           st.getPath.getName match {
-            case FragmentRe(b, e, sha, codec)
-                if st.getModificationTime >= modifiedAfterMs =>
+            case FragmentRe(b, e, sha, codec) =>
               val rel = st.getPath.toUri.getPath
                 .stripPrefix(qdirPath).stripPrefix("/")
               // Only Hive-style `key=value` postfix directories may sit
@@ -502,7 +497,7 @@ object Journal {
       journal: String): Vector[ShadowedRange] = {
     // listFragments returns distinct (begin, end, sha, codec) already
     // sorted by (begin, -end) — coverSet's required order.
-    val frags = listFragments(roots, journal, Long.MinValue)
+    val frags = listFragments(roots, journal)
     val cover = coverSet(frags) // (fragment, readFrom): serves [readFrom, end)
     val out = Vector.newBuilder[ShadowedRange]
     // Merge sweep: served ranges are disjoint ascending and frags are
@@ -591,7 +586,7 @@ object Journal {
     * (readers, cover sets) are unaffected — they never call head().
     */
   def head(roots: Seq[String], journal: String): Long = {
-    val listed = listFragments(roots, journal, Long.MinValue)
+    val listed = listFragments(roots, journal)
       .map(_.end).foldLeft(0L)(math.max)
     val floor = roots.iterator
       .map(r => headFloors.getOrDefault(floorKey(r, journal), 0L): Long)
@@ -1389,7 +1384,7 @@ object Journal {
     */
   def read(spark: SparkSession, roots: Seq[String], journal: String): Dataset[Envelope] = {
     import spark.implicits._
-    val plan = coverSet(listFragments(roots, journal, Long.MinValue))
+    val plan = coverSet(listFragments(roots, journal))
     val hc = new HadoopConf(hadoopConf)
     spark.createDataset(plan).flatMap { case (frag, readFrom) =>
       readFragmentSlice(frag, readFrom, frag.end, hc.value)

@@ -38,12 +38,6 @@ import graft.sources.Journal.{Fragment, HadoopConf}
   *    regardless of executor count, so unlike the write-side rate
   *    limiter (which needs per-JVM shares, see AppendFlowControl) the
   *    read cap is globally exact on any cluster size by construction.
-  *  - `listRefresh` (streaming read): `full` (default — re-list every
-  *    trigger, zero staleness) or `incremental` — keep the fragment
-  *    index across triggers and list only fragments modified since the
-  *    last walk, with a periodic full walk to converge after
-  *    prune/compact; one bounded LIST per trigger instead of a full
-  *    O(fragments) walk on deep journals.
   *  - `postfix.<key>.min` / `.max` / `.eq` (read): prune Hive-style
   *    `key=value` postfix directories by LEXICOGRAPHIC compare before
   *    planning (the read-side half of path_postfix_template,
@@ -99,8 +93,7 @@ class JournalDataSource extends TableProvider with DataSourceRegister {
     }
     new JournalTable(roots.orNull, opt("journal").orNull,
       opt("maxBytesPerTrigger").map(_.toLong),
-      postfix, opt("codec").getOrElse("gz"),
-      opt("listRefresh").exists(_.equalsIgnoreCase("incremental")))
+      postfix, opt("codec").getOrElse("gz"))
   }
 }
 
@@ -131,7 +124,6 @@ class JournalTable(roots: Seq[String], journal: String,
     maxBytesPerTrigger: Option[Long] = None,
     postfix: Seq[PostfixPredicate] = Nil,
     codec: String = "gz",
-    incrementalListing: Boolean = false,
     writeDefaults: JournalWriteDefaults = JournalWriteDefaults())
   extends Table with SupportsRead with SupportsWrite {
   require(roots != null && roots.nonEmpty && journal != null,
@@ -154,8 +146,6 @@ class JournalTable(roots: Seq[String], journal: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val mbt = Option(options.get("maxBytesPerTrigger")).map(_.toLong)
       .orElse(maxBytesPerTrigger)
-    val inc = Option(options.get("listRefresh"))
-      .map(_.equalsIgnoreCase("incremental")).getOrElse(incrementalListing)
     val scanPostfix = {
       import scala.jdk.CollectionConverters._
       val re = """(?i)postfix\.(.+)\.(min|max|eq)""".r
@@ -167,7 +157,7 @@ class JournalTable(roots: Seq[String], journal: String,
     // table's predicates and the scan's — conjunction is idempotent,
     // but no point filtering each fragment twice per bound.
     () => new JournalScan(roots, journal, mbt,
-      (postfix ++ scanPostfix).distinct, inc)
+      (postfix ++ scanPostfix).distinct)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -178,8 +168,7 @@ class JournalTable(roots: Seq[String], journal: String,
 
 class JournalScan(roots: Seq[String], journal: String,
     maxBytesPerTrigger: Option[Long] = None,
-    postfix: Seq[PostfixPredicate] = Nil,
-    incrementalListing: Boolean = false) extends Scan {
+    postfix: Seq[PostfixPredicate] = Nil) extends Scan {
   override def readSchema(): StructType = JournalDataSource.schema
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
@@ -190,8 +179,7 @@ class JournalScan(roots: Seq[String], journal: String,
       new FragmentReaderFactory(new HadoopConf(Journal.hadoopConf))
   }
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new JournalMicroBatchStream(roots, journal, maxBytesPerTrigger, postfix,
-      incrementalListing)
+    new JournalMicroBatchStream(roots, journal, maxBytesPerTrigger, postfix)
 }
 
 object JournalScan {
@@ -201,7 +189,7 @@ object JournalScan {
     */
   def listPruned(roots: Seq[String], journal: String,
       postfix: Seq[PostfixPredicate]): Vector[Fragment] =
-    prune(Journal.listFragments(roots, journal, Long.MinValue), postfix)
+    prune(Journal.listFragments(roots, journal), postfix)
 
   /** The ONE postfix filter, shared by batch and streaming planning so
     * the two paths can never prune differently. */
@@ -259,68 +247,20 @@ case class ReadMaxJournalBytes(bytes: Long) extends ReadLimit {
 
 class JournalMicroBatchStream(roots: Seq[String], journal: String,
     maxBytesPerTrigger: Option[Long] = None,
-    postfix: Seq[PostfixPredicate] = Nil,
-    incrementalListing: Boolean = false)
+    postfix: Seq[PostfixPredicate] = Nil)
   extends MicroBatchStream with SupportsAdmissionControl
   with SupportsTriggerAvailableNow {
 
   // ---- fragment index cache -----------------------------------------
-  // With listRefresh=incremental, the driver keeps the fragment index
-  // across triggers and only lists fragments modified since the last
-  // walk (minus a 60 s mtime slack), doing a FULL walk every 8th
-  // refresh to converge after prune/compact. A deep journal on an
-  // object store then costs one bounded LIST per trigger instead of a
-  // full O(fragments) walk (the reference's live index maintained by
-  // WalkAllStores, broker/fragment/index.go:224-257). The default
-  // re-lists fully per trigger — zero staleness, right for journals
-  // compacted while streamed.
-  private val FullWalkEvery = 8
-  private val MtimeSlackMs = 60000L
+  // Every refresh (each trigger's latestOffset) re-lists the journal in
+  // full: zero staleness, right for journals compacted while streamed.
+  // Offset planning between refreshes reads the last listing.
   private var index: Vector[Fragment] = Vector.empty
   private var walked = false
-  private var refreshesSinceFullWalk = 0
-  private var lastWalkMs = Long.MinValue
 
   private def refreshIndex(): Unit = synchronized {
-    val nowMs = System.currentTimeMillis()
-    if (!incrementalListing || !walked ||
-        refreshesSinceFullWalk >= FullWalkEvery) {
-      index = Journal.listFragments(roots, journal, Long.MinValue)
-      walked = true
-      refreshesSinceFullWalk = 0
-    } else {
-      val fresh = Journal.listFragments(roots, journal,
-        lastWalkMs - MtimeSlackMs)
-      index = (index ++ fresh)
-        .distinctBy(f => (f.begin, f.end, f.sha1, f.codec))
-        .sortBy(f => (f.begin, -f.end))
-      refreshesSinceFullWalk += 1
-      // Skew guard: if the merged index has an offset HOLE (a fragment
-      // whose mtime lagged the walk window more than the slack — store
-      // clock behind the driver's, or a laggy rename — while a LATER
-      // fragment did list), advancing the head would permanently skip
-      // the missing span. A hole is exactly that signature, so fall
-      // back to a full walk before offsets move.
-      if (hasHole(index)) {
-        index = Journal.listFragments(roots, journal, Long.MinValue)
-        refreshesSinceFullWalk = 0
-      }
-    }
-    lastWalkMs = nowMs
-  }
-
-  /** True when sorted fragments leave an uncovered gap strictly inside
-    * [min begin, max end) — impossible for a healthy journal (prune
-    * truncates only the front; compaction replaces spans with covering
-    * ones), so a hole means the incremental listing missed something.
-    */
-  private def hasHole(sorted: Vector[Fragment]): Boolean = {
-    var maxEnd = Long.MinValue
-    sorted.foreach { f =>
-      if (maxEnd != Long.MinValue && f.begin > maxEnd) return true
-      maxEnd = math.max(maxEnd, f.end)
-    }
-    false
+    index = Journal.listFragments(roots, journal)
+    walked = true
   }
 
   private def cachedIndex(): Vector[Fragment] = synchronized {
@@ -406,7 +346,7 @@ class JournalMicroBatchStream(roots: Seq[String], journal: String,
     // a walk when the cached index doesn't cover the batch's range.
     var frags = cachedIndex()
     if (frags.map(_.end).foldLeft(0L)(math.max) < e) {
-      synchronized { walked = false }
+      refreshIndex()
       frags = cachedIndex()
     }
     val kept = JournalScan.prune(frags, postfix)

@@ -148,7 +148,7 @@ class ExecutorLossSpec extends SparkSpec {
     import spark.implicits._
 
     // 100 chains of 10 vertices: ten rounds of label propagation, each
-    // carried through IterLoop.rebase. Killing every executor loses
+    // rebased by IterLoop.rounds. Killing every executor loses
     // every cached block and shuffle file of every round, so the
     // re-read can only succeed by recomputing through RDD lineage,
     // which a localCheckpoint'd leaf does not keep.

@@ -78,40 +78,4 @@ class LabelsSpec extends AnyFunSuite {
     assert(!excludeOnly.matches(LabelSet("exc-2", "val-3", "foo", "bar")))
     assert(!excludeOnly.matches(LabelSet("exc-1", "any", "foo", "bar")))
   }
-
-  test("toSqlPredicate compiles selectors to SQL") {
-    val s = LabelSelector.mustParse("lang in (en,de), source:prefix=src1, !missing")
-    val p = s.toSqlPredicate(identity)
-    assert(p.contains("lang = 'en'") && p.contains("lang = 'de'"))
-    assert(p.contains("source LIKE 'src1%' ESCAPE '!'"))
-    assert(p.contains("missing IS NULL"))
-  }
-
-  test("toSqlPredicate exclusions keep NULL (absent-label) rows") {
-    // Matcher semantics: an absent label is not-excluded. The SQL
-    // compilation must not let `col <> 'v'` (NULL when col is NULL)
-    // silently drop those rows.
-    val ne = LabelSelector.mustParse("env != qa").toSqlPredicate(identity)
-    assert(ne.contains("env IS NULL OR env <> 'qa'"), ne)
-    val notin = LabelSelector.mustParse("env notin (qa, dev)").toSqlPredicate(identity)
-    assert(notin.contains("env IS NULL OR env <> 'qa'") &&
-      notin.contains("env IS NULL OR env <> 'dev'"), notin)
-    val pfx = LabelSelector(LabelSet.empty, LabelSet("src:prefix", "s3/"))
-      .toSqlPredicate(identity)
-    assert(pfx.contains("src IS NULL OR NOT (src LIKE 's3/%' ESCAPE '!')"), pfx)
-  }
-
-  test("toSqlPredicate escapes LIKE metacharacters in prefix values") {
-    // '%' and '_' are legal selector-value characters AND LIKE
-    // metacharacters: unescaped, prefix 'a_b' would match 'aXb...'
-    // in SQL while the matcher rejects it — two selector paths, two
-    // answers. The compiled pattern escapes them (ESCAPE '!').
-    val sel = LabelSelector(LabelSet("src:prefix", "a_b%c"), LabelSet.empty)
-    val sql = sel.toSqlPredicate(identity)
-    assert(sql.contains("src LIKE 'a!_b!%c%' ESCAPE '!'"), sql)
-    // And the two paths agree on the rows (the drift the escaping
-    // prevents), via the matcher:
-    assert(sel.matches(LabelSet("src", "a_b%cdef")))
-    assert(!sel.matches(LabelSet("src", "aXb%cdef")))
-  }
 }

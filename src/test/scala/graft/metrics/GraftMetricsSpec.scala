@@ -252,4 +252,51 @@ class GraftMetricsSpec extends SparkSpec {
       GraftMetrics.gaugeValue(s"query.$qn.active").contains(0L)
     }
   }
+
+  test("loop rounds: KCore's 14-round deep peel counts 15 rounds and tags every job") {
+    import spark.implicits._
+    import graft.operators.{IterLoop, KCore}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // KCoreSpec's deep peel: K5 on 1..5 with the tail 5-6-...-19 peels
+    // one tail vertex per round at k=2; round 15 confirms the fixpoint.
+    val clique = for { a <- 1L to 5L; b <- (a + 1) to 5L } yield (a, b)
+    val g = (clique ++ (5L to 19L).sliding(2).map(w => (w(0), w(1))))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    // Jobs of this call carry `call`. The listener bus delivers in
+    // order, so once the marker job after the call is seen, every job
+    // of the call has been seen too.
+    val call = s"kcore-${java.util.UUID.randomUUID}"
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.spec.call")).foreach {
+          case `call` => tags.add((e.properties.getProperty(IterLoop.OpProperty),
+            e.properties.getProperty("spark.job.description")))
+          case c if c == s"$call-end" => markerSeen = true
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val rounds0 = ctr("loop.kcore.rounds")
+      sc.setLocalProperty("graft.spec.call", call)
+      val core = KCore.core(g, 2, 20)
+      sc.setLocalProperty("graft.spec.call", s"$call-end")
+      sc.parallelize(Seq(1), 1).count()
+      eventually("listener saw the marker job")(markerSeen)
+      assert(ctr("loop.kcore.rounds") == rounds0 + 15)
+      assert(!tags.isEmpty)
+      tags.forEach { case (op, desc) =>
+        assert(op == "kcore", s"job without graft.op=kcore: $op / $desc")
+        assert(desc != null && desc.matches("kcore round \\d+"), desc)
+      }
+      assert(sc.getLocalProperty(IterLoop.OpProperty) == null)
+      assert(core.count() == 5)
+    } finally {
+      sc.setLocalProperty("graft.spec.call", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -98,9 +98,10 @@ class SelectorExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("map<string,string>"), e.getMessage)
   }
 
-  test("toSqlPredicate agrees with the matcher when label columns are NULL") {
+  test("matches_selector: NULL label columns are absent labels") {
     import spark.implicits._
-    // Column-per-label shape: NULL column = absent label.
+    // The column-per-label shape q17 filters: the columns become the
+    // label map, and a NULL-valued entry must match as an absent label.
     val rows = Seq(
       ("r1", "prod", "json"), ("r2", "qa", "json"),
       ("r3", "prod", null), ("r4", null, "json"), ("r5", null, null))
@@ -108,15 +109,16 @@ class SelectorExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val selectors = Seq("env != qa", "env notin (qa, dev)", "ct, env != qa",
       "env = prod", "!ct", "env")
     selectors.foreach { s =>
-      val sel = graft.labels.LabelSelector.mustParse(s)
-      val viaSql = df.filter(expr(sel.toSqlPredicate(identity)))
+      val viaRule = df.filter(SelectorExtension.matches_selector(
+          map(lit("env"), col("env"), lit("ct"), col("ct")), s))
         .collect().map(_.getString(0)).toSet
       val expected = rows.filter { case (_, env, ct) =>
         val labels = Seq("env" -> env, "ct" -> ct).collect {
           case (k, v) if v != null => graft.labels.Label(k, v) }
-        sel.matches(graft.labels.LabelSet(labels.toVector))
+        graft.labels.LabelSelector.mustParse(s)
+          .matches(graft.labels.LabelSet(labels.toVector))
       }.map(_._1).toSet
-      assert(viaSql == expected, s"selector '$s'")
+      assert(viaRule == expected, s"selector '$s'")
     }
   }
 

@@ -249,7 +249,7 @@ class JournalV2Spec extends SparkSpec {
     // Each root alone is incomplete; the union covers [0, head).
     assert(Journal.listFragments(rootA, "mj").size == 1)
     assert(Journal.listFragments(rootB, "mj").size == 1)
-    val union = Journal.listFragments(Seq(rootA, rootB), "mj", Long.MinValue)
+    val union = Journal.listFragments(Seq(rootA, rootB), "mj")
     assert(union.size == 2)
     assert(union.head.begin == 0L && union.last.end == Journal.head(Seq(rootA, rootB), "mj"))
 
@@ -454,29 +454,27 @@ class JournalV2Spec extends SparkSpec {
     assert(streamed == (0 to 2).flatMap(p => Seq(s"m-$p-1", s"m-$p-2")).toSet)
   }
 
-  test("incremental listing: cached index tracks appends, converges after prune") {
+  test("listing tracks appends and plans past a prune") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-inc").toString
     Journal.append(Seq("i1", "i2").toDF("payload"), root, "inc", "none")
-    val stream = new graft.sources.v2.JournalMicroBatchStream(
-      Seq(root), "inc", incrementalListing = true)
+    val stream = new graft.sources.v2.JournalMicroBatchStream(Seq(root), "inc")
 
     val h1 = stream.latestOffset().asInstanceOf[graft.sources.v2.JournalOffset].head
     assert(h1 == 6L) // "i1\n" + "i2\n"
 
-    // New fragments between triggers surface through the INCREMENTAL
-    // path (the full walk already happened at first poll).
+    // New fragments between triggers surface at the next poll.
     Journal.append(Seq("i3").toDF("payload"), root, "inc", "none")
     val h2 = stream.latestOffset().asInstanceOf[graft.sources.v2.JournalOffset].head
-    assert(h2 == 9L, s"incremental refresh missed the new fragment: head=$h2")
+    assert(h2 == 9L, s"refresh missed the new fragment: head=$h2")
     val parts = stream.planInputPartitions(
       graft.sources.v2.JournalOffset(0L), graft.sources.v2.JournalOffset(h2))
     assert(parts.length == Journal.listFragments(root, "inc").size)
 
-    // Prune below offset 6: the cache converges via the periodic full
-    // walk (every 8th refresh).
+    // Prune below offset 6: the next poll's listing drops the pruned
+    // fragment, and planning reads only what is left.
     Journal.prune(root, "inc", 6L)
-    (1 to 9).foreach(_ => stream.latestOffset())
+    stream.latestOffset()
     val tail = stream.planInputPartitions(
       graft.sources.v2.JournalOffset(6L), graft.sources.v2.JournalOffset(9L))
     assert(tail.length == 1)
