@@ -40,10 +40,16 @@ import graft.sources.v2.AppendFlowControl
   *
   * Scale note: listing is driver-side (as Spark's FileStreamSource);
   * reads parallelize per fragment. Fragment target length (spool roll
-  * policy) bounds fragment size so task granularity stays even. Listing
-  * captures HDFS block hosts so the DSv2 scan can expose
-  * `preferredLocations` (zone-aware read placement,
-  * docs/brokers-concepts.rst:155-160).
+  * policy) bounds fragment size so task granularity stays even. The
+  * listing is a `listStatus` walk that asks the store for each fragment
+  * file's block hosts, so the DSv2 scan can expose `preferredLocations`
+  * (zone-aware read placement, docs/brokers-concepts.rst:155-160). It
+  * never builds a located status: that copies each file's permission,
+  * and the local store without native IO reads a permission by forking
+  * `ls -ld`, about 3 ms per listed file. On HDFS the hosts cost one
+  * block-location lookup per fragment file instead of one per directory
+  * listing; no test or workload runs HDFS, so there is no traffic to
+  * tune that for.
   */
 object Journal {
 
@@ -100,13 +106,12 @@ object Journal {
 
   /** Validate a Hive-style path postfix ("key=value", or nested
     * "k1=v1/k2=v2") before any spool is created under it. The listing
-    * attributes a file to a journal only when every interior directory
-    * segment carries '=' (see listFragments), so a malformed postfix
-    * would land fragments NO read ever returns AND no head derivation
-    * ever sees — invisible dead bytes whose offsets the next append
-    * reuses. An absolute or dot-leading segment would escape or hide
-    * under the store root. [[SpoolSet]] calls this on each distinct
-    * postfix value.
+    * enters only directories whose name carries '=' (see
+    * listFragments), so a malformed postfix would land fragments NO
+    * read ever returns AND no head derivation ever sees — invisible
+    * dead bytes whose offsets the next append reuses. An absolute or
+    * dot-leading segment would escape or hide under the store root.
+    * [[SpoolSet]] calls this on each distinct postfix value.
     */
   private[graft] def validatePostfix(p: String): Unit = {
     if (p.isEmpty) return
@@ -188,40 +193,40 @@ object Journal {
       val fs = dir.getFileSystem(conf)
       if (!fs.exists(dir)) Iterator.empty
       else {
-        val qdirPath = fs.makeQualified(dir).toUri.getPath
-        // Recursive walk: fragments may live under Hive-style
-        // path-postfix subdirectories (date=…/hour=…,
-        // protocol.proto:248-262). listFiles also surfaces block
-        // locations in the same RPC — free locality hints.
-        val it = fs.listFiles(dir, true)
         val buf = Vector.newBuilder[Fragment]
-        while (it.hasNext) {
-          val st = it.next()
-          st.getPath.getName match {
-            case FragmentRe(b, e, sha, codec) =>
-              val rel = st.getPath.toUri.getPath
-                .stripPrefix(qdirPath).stripPrefix("/")
-              // Only Hive-style `key=value` postfix directories may sit
-              // between the journal dir and its fragments: a NESTED
-              // journal ("a/b/c" under "a/b") also lives inside this
-              // subtree, and attributing its files to the parent would
-              // interleave two journals' offset spaces in one index
-              // (coverSet would then silently drop or mix bytes).
-              val interior = rel.split('/').dropRight(1)
-              if (interior.forall(_.contains('='))) {
-                // Hosts as the FS reports them (HDFS: datanodes; local:
-                // "localhost"; object stores: none or a placeholder) —
-                // the same contract Spark's FilePartition surfaces.
-                val hosts = st.getBlockLocations.toSeq
+        // Depth-first walk with `listStatus(Path)`, the array form: a
+        // store wrapper that overrides one listing method overrides this
+        // one, and FilterFileSystem routes `listStatusIterator` around
+        // it. The walk enters only Hive-style `key=value` postfix
+        // directories (date=…/hour=…, protocol.proto:248-262): a NESTED
+        // journal ("a/b/c" under "a/b") also lives inside this subtree,
+        // and attributing its files to the parent would interleave two
+        // journals' offset spaces in one index (coverSet would then
+        // silently drop or mix bytes), so its subtree is never walked.
+        // `rel` is the path below `dir`, so fragment paths keep the
+        // caller's root form.
+        def walk(d: HPath, rel: String): Unit =
+          fs.listStatus(d).foreach { st =>
+            val name = st.getPath.getName
+            if (st.isDirectory) {
+              if (name.contains('=')) walk(st.getPath, s"$rel$name/")
+            } else name match {
+              case FragmentRe(b, e, sha, codec) =>
+                // Name, length and mod-time only: no permission read
+                // (see the header). Hosts as the FS reports them (HDFS:
+                // datanodes; local: "localhost"; object stores: none or
+                // a placeholder), the same contract Spark's
+                // FilePartition surfaces.
+                val hosts = fs.getFileBlockLocations(st, 0, st.getLen).toSeq
                   .flatMap(_.getHosts).distinct
                 buf += Fragment(journal, java.lang.Long.parseUnsignedLong(b, 16),
                   java.lang.Long.parseUnsignedLong(e, 16), sha, codec,
-                  new HPath(dir, rel).toString, hosts,
+                  new HPath(dir, rel + name).toString, hosts,
                   st.getModificationTime)
-              }
-            case _ =>
+              case _ =>
+            }
           }
-        }
+        walk(dir, "")
         buf.result()
       }
     }.toVector

@@ -39,7 +39,12 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Main-source files under `dir`, other than `except`, whose text
     * contains any of `needles`, relative to src/main/scala. */
   private def mentioning(dir: java.nio.file.Path, except: String,
-      needles: String*): Vector[String] = {
+      needles: String*): Vector[String] =
+    matching(dir, except, needles.map(n => java.util.regex.Pattern.quote(n).r): _*)
+
+  /** [[mentioning]] with regular expressions for needles. */
+  private def matching(dir: java.nio.file.Path, except: String,
+      needles: scala.util.matching.Regex*): Vector[String] = {
     val main = java.nio.file.Paths.get("src", "main", "scala")
     assert(java.nio.file.Files.isDirectory(dir), s"no $dir under ${sys.props("user.dir")}")
     val stream = java.nio.file.Files.walk(dir)
@@ -49,7 +54,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != except)
         .filter { p =>
           val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          needles.exists(text.contains)
+          needles.exists(_.findFirstIn(text).isDefined)
         }
         .map(main.relativize(_).toString).toVector.sorted
     } finally stream.close()
@@ -71,5 +76,16 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Paths.get("src", "main", "scala", "graft", "queries"),
       "StreamOps.scala", "java.io.tmpdir", "\"/tmp", "createTempDirectory")
     assert(offenders.isEmpty, s"temp paths outside StreamOps.privateRoot: $offenders")
+  }
+
+  test("engine code lists files without located statuses") {
+    // A located status copies each file's permission, and Hadoop's
+    // local store without native IO reads a permission by forking
+    // `ls -ld`: one process per listed file. Walk with listStatus.
+    // Hadoop's listFiles takes (path, recursive); java.io.File's
+    // listFiles takes at most one argument and does not match.
+    val offenders = matching(java.nio.file.Paths.get("src", "main", "scala"), "",
+      "listLocatedStatus".r, """\blistFiles\((?:[^()]|\([^()]*\))*,""".r)
+    assert(offenders.isEmpty, s"located-status listings in main code: $offenders")
   }
 }

@@ -209,6 +209,110 @@ class JournalSpec extends SparkSpec {
       parent.map(_.getBytes("UTF-8").length + 1).sum)
   }
 
+  test("journal listings read no file permission and skip a nested journal's subtree") {
+    // On the local store without native IO every permission read of a
+    // listed status forks `ls -ld`: one process per listed file, on
+    // every commit, read and trigger.
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.perm.impl", classOf[PermCountFileSystem].getName)
+    val local = tmpRoot()
+    val root = "perm://" + local
+    Journal.append((1 to 40).map(i => s"p-$i").toDF("payload").repartition(4),
+      root, "pc/a")
+    Journal.append((1 to 10).map(i => s"n-$i").toDF("payload"), root, "pc/a/n")
+    val batch = (1 to 30).map(i => (s"r-$i", i % 3)).toDF("payload", "k")
+      .repartition(2)
+    val routes = (0 to 2).map(r => s"pc/r$r" -> (col("k") === r))
+    Journal.batchSinkRouted(root, routes, batch, 0L)
+
+    PermCountFileSystem.reset()
+    val listed = Journal.listFragments(root, "pc/a")
+    assert(listed.size == 4)
+    val nestedDir = new java.io.File(local, "pc/a/n").getPath
+    val walked = PermCountFileSystem.listed.toArray(Array.empty[String]).toSeq
+    assert(!walked.exists(_.startsWith(nestedDir)),
+      s"listing the parent walked the nested journal: $walked")
+    assert(Journal.head(root, "pc/a") == listed.map(_.end).max)
+    assert(Journal.read(spark, root, "pc/a").count() == 40)
+    Journal.batchSinkRouted(root, routes, batch, 1L)
+    assert(Journal.read(spark, root, "pc/r1").count() == 20)
+    val stream = new graft.sources.v2.JournalMicroBatchStream(Seq(root), "pc/a")
+    assert(stream.latestOffset() == graft.sources.v2.JournalOffset(listed.map(_.end).max))
+    assert(PermCountFileSystem.reads.get == 0L,
+      s"${PermCountFileSystem.reads.get} permission/owner/group reads of listed statuses")
+  }
+
+  test("the listStatus walk lists exactly what Hadoop's recursive listFiles did") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lag.impl", classOf[LagFileSystem].getName)
+    val conf = Journal.hadoopConf
+    val (a, b) = (tmpRoot(), tmpRoot())
+    val j = "id/j"
+    // Postfix directories one and two levels deep, and top-level
+    // fragments, through the checksummed local store (.crc sidecars).
+    Journal.append(Seq(("t", ""), ("d", "date=1"), ("h", "date=2/hour=3"))
+      .toDF("payload", "pf").coalesce(1), a, j, postfixCol = Some("pf"))
+    Journal.batchSink(a, j)(Seq("m0").toDF("payload"), 0L)
+    Journal.batchSink(a, j)(Seq("m1").toDF("payload"), 1L)
+    Journal.append(Seq("nested").toDF("payload"), a, s"$j/nested")
+    val aDir = new java.io.File(a, j)
+    Files.write(new java.io.File(aDir, ".batch-9.pending").toPath,
+      "x\ty".getBytes("UTF-8"))
+    Files.write(new java.io.File(a, s".spool-id_j-0-${java.util.UUID.randomUUID}.tmp")
+      .toPath, "s\n".getBytes("UTF-8"))
+    Files.write(new java.io.File(aDir, s"date=1/.spool-id_j-1-${java.util.UUID.randomUUID}.tmp")
+      .toPath, "s\n".getBytes("UTF-8"))
+    // A fragment-named file under a non-postfix directory.
+    val top = aDir.listFiles().filter(_.getName.endsWith(".gz")).head
+    Files.createDirectories(new java.io.File(aDir, "junk").toPath)
+    Files.copy(top.toPath, new java.io.File(aDir, s"junk/${top.getName}").toPath)
+    // The second store continues the offsets and holds one copy of a
+    // first-store fragment (mid-migration).
+    Journal.append(Seq("b1", "b2").toDF("payload"), b, j, offsetRoots = Seq(b, a))
+    Files.createDirectories(new java.io.File(b, j).toPath)
+    Files.copy(top.toPath, new java.io.File(b, s"$j/${top.getName}").toPath)
+
+    val FragmentRe = """([0-9a-f]{16})-([0-9a-f]{16})-([0-9a-f]{40})\.(\w+)""".r
+    // The listing as it was before the listStatus walk: a recursive
+    // listFiles whose interior directories are filtered after the fact.
+    def byListFiles(roots: Seq[String]): Vector[Journal.Fragment] =
+      roots.iterator.flatMap { root =>
+        val dir = new org.apache.hadoop.fs.Path(root, j)
+        val fs = dir.getFileSystem(conf)
+        val qdir = fs.makeQualified(dir).toUri.getPath
+        val it = fs.listFiles(dir, true)
+        val buf = Vector.newBuilder[Journal.Fragment]
+        while (it.hasNext) {
+          val st = it.next()
+          st.getPath.getName match {
+            case FragmentRe(bg, e, sha, codec) =>
+              val rel = st.getPath.toUri.getPath.stripPrefix(qdir).stripPrefix("/")
+              if (rel.split('/').dropRight(1).forall(_.contains('=')))
+                buf += Journal.Fragment(j, java.lang.Long.parseUnsignedLong(bg, 16),
+                  java.lang.Long.parseUnsignedLong(e, 16), sha, codec,
+                  new org.apache.hadoop.fs.Path(dir, rel).toString,
+                  st.getBlockLocations.toSeq.flatMap(_.getHosts).distinct,
+                  st.getModificationTime)
+            case _ =>
+          }
+        }
+        buf.result()
+      }.toVector
+        .distinctBy(f => (f.begin, f.end, f.sha1, f.codec))
+        .sortBy(f => (f.begin, -f.end))
+
+    for (roots <- Seq(Seq(a), Seq(a, b), Seq("lag://" + a),
+        Seq("lag://" + a, "lag://" + b))) {
+      val want = byListFiles(roots)
+      assert(want.exists(_.path.contains("date=2/hour=3")) &&
+        want.forall(f => !f.path.contains("nested") && !f.path.contains("junk")) &&
+        want.forall(_.hosts.nonEmpty), s"reference listing: $want")
+      assert(Journal.listFragments(roots, j) == want, s"roots $roots")
+    }
+  }
+
   test("every codec round-trips: none, gz, zst, sz") {
     import spark.implicits._
     Seq("none", "gz", "zst", "sz").foreach { codec =>
